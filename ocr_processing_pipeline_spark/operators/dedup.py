@@ -665,6 +665,12 @@ def simhash_candidates(sig: DataFrame, n_bands: int = 4,
     equality checked). The hot-bucket cap is unchanged semantically:
     bucket size = Σ group sizes = the doc-row count the per-doc
     formulation counted.
+
+    Precondition: ``sig`` holds one row per ``key``. The pair dedup runs
+    on signature pairs, not on the expanded doc pairs, so a repeated key
+    comes back as repeated ``(key_a, key_b)`` rows. Every caller in this
+    package passes unique keys; deduplicate ``sig`` on ``key`` first
+    when the input may repeat them.
     """
     if checkpoint:
         sig = sig.localCheckpoint(eager=False)

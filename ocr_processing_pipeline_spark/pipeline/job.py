@@ -41,15 +41,8 @@ from . import ner as ner_mod
 
 DEFAULT_N_BUCKETS = 64
 
-
-def _ensure_meta(out_dir: str, meta_path: str, n_buckets: int) -> None:
-    """Record the n_buckets contract once, BEFORE any checkpoint state
-    or data write lands under out_dir (both write sites share this so
-    the ordering invariant can't drift between them)."""
-    if not os.path.exists(meta_path):
-        os.makedirs(out_dir, exist_ok=True)
-        with open(meta_path, "w") as fh:
-            json.dump({"n_buckets": n_buckets}, fh)
+_NOTHING_TO_DO = {"docs": 0, "chunks": 0, "edges": 0, "checkpoint": 0,
+                  "skipped": "nothing to do (all buckets committed)"}
 
 
 def run_pipeline(spark: SparkSession, pages_path: str, gazetteers_dir: str,
@@ -60,19 +53,24 @@ def run_pipeline(spark: SparkSession, pages_path: str, gazetteers_dir: str,
                  max_page_bytes: int | None = None) -> dict:
     """Run (or resume) the full pipeline; returns per-table row counts.
 
-    ``fail_after_buckets`` processes only that many remaining buckets — the
-    hook the resume test uses to simulate a mid-run crash.
+    The counts are cumulative: the rows each output table holds after this
+    run, summed from parquet footers. A run that processes no pages
+    returns the skip marker with zero counts instead.
+
+    ``fail_after_buckets`` processes only the first k uncommitted bucket
+    ids — chosen on the driver, with no scan, so they may hold no pages
+    at all — the hook the resume test uses to simulate a mid-run crash.
     """
     checkpoint_path = os.path.join(out_dir, "checkpoint")
     meta_path = os.path.join(out_dir, "checkpoint_meta.json")
 
-    # n_buckets contract: every committed bucket id and the all-committed
-    # check below are defined RELATIVE to the n_buckets the checkpoint
-    # was written with. Resuming with a different value silently
-    # re-buckets the url space — committed ids no longer mean what the
-    # anti-join assumes (e.g. old 32 → new 128 would reprocess already-
-    # committed pages into different bucket partitions: duplicates). A
-    # mismatch must fail loudly, never mis-decide.
+    # n_buckets contract: every committed bucket id and the remaining set
+    # below are defined RELATIVE to the n_buckets the checkpoint was
+    # written with. Resuming with a different value silently re-buckets
+    # the url space — committed ids no longer mean what the filter below
+    # assumes (e.g. old 32 → new 128 would reprocess already-committed
+    # pages into different bucket partitions: duplicates). A mismatch
+    # must fail loudly, never mis-decide.
     if os.path.exists(meta_path):
         with open(meta_path) as fh:
             meta = json.load(fh)
@@ -84,79 +82,38 @@ def run_pipeline(spark: SparkSession, pages_path: str, gazetteers_dir: str,
                 "across bucket counts — rerun with the original value "
                 "(or start a fresh out dir).")
 
-    # all-committed fast path: commits are BUCKET-level, so when every
-    # bucket id is already in the checkpoint the anti-join below is empty
-    # by construction — detect that from the tiny checkpoint table alone
-    # (O(n_buckets) rows) BEFORE even opening the input (reading the
-    # pages path would list and footer-read every shard). A 100 TB no-op
-    # resume must not touch the 100 TB. (Empty buckets carry sentinel
-    # rows — see empty_bucket_sentinels — so the check also closes for
-    # corpora that leave buckets empty.)
-    prior_done: set[int] = set()
-    if resume and lineage._exists(checkpoint_path):
-        prior_done = {r.bucket for r in lineage.committed_buckets(
-            spark, checkpoint_path, "docs").collect()}
-        if prior_done >= set(range(n_buckets)):
-            return {"docs": 0, "chunks": 0, "edges": 0, "checkpoint": 0,
-                    "skipped": "nothing to do (all buckets committed)"}
-
-    pages = spark.read.parquet(pages_path)
-    todo = (lineage.remaining_pages(spark, pages, checkpoint_path, "docs",
-                                    n_buckets)
-            if resume else lineage.with_bucket(pages, n_buckets))
-    if fail_after_buckets is not None:
-        some = [r.bucket for r in
-                todo.select("bucket").distinct()
-                    .orderBy("bucket").limit(fail_after_buckets).collect()]
-        todo = todo.filter(F.col("bucket").isin(some))
-
-    # buckets touched by THIS run. Fresh run (no checkpoint): all buckets
-    # by construction — skip the discovery scan entirely.
-    checkpoint_exists = lineage._exists(checkpoint_path)
-    if resume and not checkpoint_exists and fail_after_buckets is None:
-        run_buckets = list(range(n_buckets))
-    else:
-        run_buckets = [r.bucket for r in
-                       todo.select("bucket").distinct().collect()]
+    # commits are BUCKET-level, so this run's buckets are every id the
+    # checkpoint does not hold yet. The checkpoint is O(n_buckets) rows:
+    # the driver reads it with pyarrow, no Spark job. When every bucket
+    # is committed the no-op returns BEFORE even opening the input
+    # (reading the pages path would list and footer-read every shard) —
+    # a 100 TB no-op resume must not touch the 100 TB. (Empty buckets
+    # carry sentinel rows — see empty_bucket_sentinels — so this also
+    # closes for corpora that leave buckets empty.)
+    committed = (lineage.committed_bucket_ids(checkpoint_path, "docs")
+                 if resume else set())
+    run_buckets = sorted(set(range(n_buckets)) - committed)[
+        :fail_after_buckets]
     if not run_buckets:
-        # todo is EMPTY, so every bucket not yet committed has zero
-        # remaining pages — commit its sentinel now, or the no-op fast
-        # path above can never close (e.g. resuming over a checkpoint
-        # whose non-empty buckets are all committed but whose empty
-        # buckets predate sentinel rows). Guard: a fail_after_buckets
-        # run empties todo ARTIFICIALLY (its filter can select zero
-        # buckets), so only a full run may conclude emptiness. With
-        # resume=True, prior_done already IS the committed set (read
-        # moments ago, nothing written since); only a resume=False run
-        # (which skipped that read) must fetch it here — range - {}
-        # would otherwise stack full-range 'empty' sentinels onto
-        # buckets that hold real committed rows.
-        if fail_after_buckets is None:
-            committed = prior_done
-            if not resume and lineage._exists(checkpoint_path):
-                committed = {r.bucket for r in lineage.committed_buckets(
-                    spark, checkpoint_path, "docs").collect()}
-            missing = sorted(set(range(n_buckets)) - committed)
-            if missing:
-                # sentinels are checkpoint state too — the n_buckets
-                # contract must land first (same invariant as below)
-                _ensure_meta(out_dir, meta_path, n_buckets)
-                lineage.append_checkpoint(
-                    lineage.empty_bucket_sentinels(spark, missing,
-                                                   "docs"),
-                    checkpoint_path)
-        return {"docs": 0, "chunks": 0, "edges": 0, "checkpoint": 0,
-                "skipped": "nothing to do (all buckets committed)"}
+        return dict(_NOTHING_TO_DO)
+
+    # schema inferred on purpose: a malformed pages input fails loudly
+    pages = spark.read.parquet(pages_path)
 
     # record the n_buckets contract BEFORE the first data write: docs
     # parquet lands before the checkpoint rows, so a crash mid-run must
     # already leave the meta guard in place — otherwise a later resume
     # with a different n_buckets would pass the check above and
     # re-bucket a half-written output.
-    _ensure_meta(out_dir, meta_path, n_buckets)
+    if not os.path.exists(meta_path):
+        os.makedirs(out_dir, exist_ok=True)
+        with open(meta_path, "w") as fh:
+            json.dump({"n_buckets": n_buckets}, fh)
 
     # ONE shuffle: uniform url-hash bucket repartition (skew-proof).
-    todo = todo.repartition(min(n_buckets, len(run_buckets)), "bucket")
+    todo = (lineage.with_bucket(pages, n_buckets)
+            .filter(F.col("bucket").isin(run_buckets))
+            .repartition(min(n_buckets, len(run_buckets)), "bucket"))
 
     gaz_bc = ner_mod.load_gazetteers(
         spark,
@@ -174,64 +131,60 @@ def run_pipeline(spark: SparkSession, pages_path: str, gazetteers_dir: str,
         extract_kw = {"max_page_bytes": None}
     else:
         extract_kw = {"max_page_bytes": max_page_bytes}
-    docs = extract_mod.extract_docs(todo, **extract_kw).withColumn(
-        "bucket", F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int"))
+    docs = lineage.with_bucket(extract_mod.extract_docs(todo, **extract_kw),
+                               n_buckets)
     docs_path = os.path.join(out_dir, "docs")
     lineage.write_partitioned(docs, docs_path)
 
     # chunk + ner read back the just-written docs for THIS run's buckets:
     # narrow scans (partition-pruned on bucket) — extraction runs exactly
-    # once, never recomputed for downstream stages.
-    docs_this_run = spark.read.parquet(docs_path).filter(
+    # once, never recomputed for downstream stages. The declared schema
+    # skips the inference job (and reads an empty table without failing).
+    docs_this_run = spark.read.schema(docs.schema).parquet(docs_path).filter(
         F.col("bucket").isin(run_buckets))
 
-    chunks = chunk_mod.chunk_docs(docs_this_run).withColumn(
-        "bucket", F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int"))
+    chunks = lineage.with_bucket(chunk_mod.chunk_docs(docs_this_run),
+                                 n_buckets)
     chunks_path = os.path.join(out_dir, "chunks")
     lineage.write_partitioned(chunks, chunks_path)
 
-    chunks_this_run = spark.read.parquet(chunks_path).filter(
-        F.col("bucket").isin(run_buckets))
-    edges = ner_mod.link_entities(chunks_this_run, gaz_bc).withColumn(
-        "bucket", F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int"))
+    chunks_this_run = spark.read.schema(chunks.schema).parquet(
+        chunks_path).filter(F.col("bucket").isin(run_buckets))
+    edges = lineage.with_bucket(
+        ner_mod.link_entities(chunks_this_run, gaz_bc), n_buckets)
     edges_path = os.path.join(out_dir, "edges")
     lineage.write_partitioned(edges, edges_path)
 
     if with_mentions:
         # raw mention spans (FIXTURES.md §3 'entities' table) — optional:
         # an extra scan pass over chunks, off by default
-        mentions = (ner_mod.extract_mentions(chunks_this_run, gaz_bc)
-                    .join(chunks_this_run.select("chunk_id", "url"),
-                          "chunk_id")
-                    .withColumn("bucket", F.pmod(F.xxhash64("url"),
-                                                 F.lit(n_buckets))
-                                .cast("int")))
+        mentions = lineage.with_bucket(
+            ner_mod.extract_mentions(chunks_this_run, gaz_bc)
+            .join(chunks_this_run.select("chunk_id", "url"), "chunk_id"),
+            n_buckets)
         lineage.write_partitioned(
             mentions, os.path.join(out_dir, "mentions"))
 
     # lineage/metrics rows LAST (commit point) — crash before this line ⇒
     # buckets get reprocessed and dynamically overwritten next run.
-    ckpt = lineage.checkpoint_rows_with_failures(docs_this_run, "docs")
+    ckpt = lineage.checkpoint_rows_with_failures(
+        docs_this_run, "docs").localCheckpoint()   # probe + append: one pass
+    have = {r.bucket for r in ckpt.select("bucket").collect()}
     if fail_after_buckets is None:
-        # this run exhausted the todo set, so any bucket neither
-        # previously committed nor producing rows now has ZERO pages —
-        # commit sentinels so the no-op fast path closes over them.
-        # (A partial run — fail_after_buckets — must NOT: its untouched
-        # buckets may still hold pages.)
-        ckpt = ckpt.localCheckpoint()   # one evaluation: probe + append
-        have = {r.bucket for r in ckpt.select("bucket").collect()}
-        empty = sorted(set(range(n_buckets)) - prior_done - have)
+        # a run bucket that produced no rows has ZERO pages — commit its
+        # sentinel so the no-op path above closes over it. A simulated
+        # crash (fail_after_buckets) leaves them uncommitted, as a real
+        # one would; the next full run commits them.
+        empty = sorted(set(run_buckets) - have)
         if empty:
             ckpt = ckpt.unionByName(
                 lineage.empty_bucket_sentinels(spark, empty, "docs"))
     lineage.append_checkpoint(ckpt, checkpoint_path)
 
-    return {
-        "docs": spark.read.parquet(docs_path).count(),
-        "chunks": spark.read.parquet(chunks_path).count(),
-        "edges": spark.read.parquet(edges_path).count(),
-        "checkpoint": spark.read.parquet(checkpoint_path).count(),
-    }
+    if not have:
+        return dict(_NOTHING_TO_DO)
+    return {t: lineage.count_rows(os.path.join(out_dir, t))
+            for t in ("docs", "chunks", "edges", "checkpoint")}
 
 
 def main(argv=None):

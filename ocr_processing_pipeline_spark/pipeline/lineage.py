@@ -1,15 +1,19 @@
-"""Per-partition lineage, checkpoint table, and anti-join resumability.
+"""Per-partition lineage, checkpoint table, and bucket-level resumability.
 
 Replaces the reference's text-file ledgers — processed_documents.txt
 membership skip (entity_extractor/apertus_ner/orchestrator.py:38-43),
-missing_files.txt / error_log.txt — with a checkpoint table and a left-anti
-join (F9, the resumability core).
+missing_files.txt / error_log.txt — with a checkpoint table (F9, the
+resumability core).
 
 Unit of commit: a **bucket** = ``pmod(xxhash64(url), n_buckets)`` — a
 deterministic, data-independent range partition of the url space (north
 rule: "range-partitioned shuffles on url-hash"). Each run:
 
-1. remaining = pages ⟕anti checkpoint.committed buckets
+1. remaining = the bucket ids the checkpoint does not hold yet. The
+   checkpoint has O(n_buckets) rows, so the driver reads its ``bucket``
+   column with pyarrow (``committed_bucket_ids``: no Spark job) and the
+   pages are filtered to the remaining ids. ``remaining_pages`` makes the
+   same decision as a broadcast left-anti join for Spark-side callers.
 2. write docs/chunks/edges parquet partitioned by bucket
    (dynamic partition overwrite → a re-run of an uncommitted bucket
    replaces its files: idempotent)
@@ -30,6 +34,8 @@ from __future__ import annotations
 
 import os
 
+import pyarrow.dataset as ds
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -56,6 +62,22 @@ def committed_buckets(spark: SparkSession, checkpoint_path: str,
     return (spark.read.parquet(checkpoint_path)
             .filter(F.col("table_name") == table_name)
             .select("bucket").distinct())
+
+
+def committed_bucket_ids(checkpoint_path: str, table_name: str) -> set[int]:
+    """Committed bucket ids for a table, read on the driver with pyarrow
+    (the checkpoint is O(n_buckets) rows: no Spark job)."""
+    if not _exists(checkpoint_path):
+        return set()
+    rows = pq.read_table(checkpoint_path, columns=["bucket"],
+                         filters=[("table_name", "=", table_name)])
+    return set(rows.column("bucket").to_pylist())
+
+
+def count_rows(path: str) -> int:
+    """Rows in a (bucket-partitioned) parquet table, summed from the file
+    footers: no Spark job and no data pages read."""
+    return ds.dataset(path, format="parquet", partitioning="hive").count_rows()
 
 
 def remaining_pages(spark: SparkSession, pages: DataFrame,
@@ -131,9 +153,9 @@ def empty_bucket_sentinels(spark: SparkSession, buckets: list[int],
     committed no-op fast path (job.run_pipeline), which requires every
     bucket id in the checkpoint, would silently never trigger for such
     corpora, falling back to listing + footer-reading the full input on
-    every no-op resume (ADVICE r4). A run that exhausted its todo set
-    commits these sentinels for the untouched empty buckets; row_count 0
-    distinguishes them in every metrics query."""
+    every no-op resume (ADVICE r4). A full run commits these sentinels for
+    the buckets it ran that produced no rows; row_count 0 distinguishes
+    them in every metrics query."""
     rows = [(int(b), table_name, 0, 0, None, None, {}, None, None)
             for b in buckets]
     schema = (
@@ -156,7 +178,8 @@ def _exists(path: str) -> bool:
     )
 
 
-__all__ = ["with_bucket", "committed_buckets", "remaining_pages",
+__all__ = ["with_bucket", "committed_buckets", "committed_bucket_ids",
+           "count_rows", "remaining_pages",
            "write_partitioned", "checkpoint_rows_with_failures",
            "empty_bucket_sentinels", "append_checkpoint",
            "CHECKPOINT_SCHEMA"]

@@ -1,11 +1,12 @@
 """NER + entity-linking stage: chunks → mentions + edges.
 
-The gazetteers are small dimension tables (≪ corpus): they are collected
-once on the driver and shipped to executors as a **broadcast variable** —
-the Spark analogue of the reference's per-entity-name network round-trip to
-Weaviate (apertus_ner_chunk.py:134-232, J1). The trie index is built lazily
-once per executor (module-level cache keyed by broadcast id — the
-"model singleton per process" pattern of lora_chunking_api.py:71-76, without
+The gazetteers are small dimension tables (≪ corpus): they are read once
+on the driver (pyarrow, no Spark job) and shipped to executors as a
+**broadcast variable** — the Spark analogue of the reference's
+per-entity-name network round-trip to Weaviate
+(apertus_ner_chunk.py:134-232, J1). The trie index is built lazily once
+per executor (module-level cache keyed by broadcast id — the "model
+singleton per process" pattern of lora_chunking_api.py:71-76, without
 models).
 
 Two outputs:
@@ -75,14 +76,16 @@ def _get_index_and_memo(bc):
 
 def load_gazetteers(spark: SparkSession, persons_path: str,
                     places_path: str, orgs_path: str):
-    """Read gazetteer parquet, collect (small), broadcast.
+    """Read the gazetteer parquet on the driver with pyarrow (small: no
+    Spark job), broadcast.
 
-    The broadcast tuple carries a uuid token as a stable cache identity
-    for the per-worker trie singleton (see _get_index)."""
+    The broadcast tuple carries a fresh uuid token as a stable cache
+    identity for the per-worker trie singleton (see _get_index)."""
     import uuid
-    persons = [r.asDict() for r in spark.read.parquet(persons_path).collect()]
-    places = [r.asDict() for r in spark.read.parquet(places_path).collect()]
-    orgs = [r.asDict() for r in spark.read.parquet(orgs_path).collect()]
+
+    import pyarrow.parquet as pq
+    persons, places, orgs = (pq.read_table(p).to_pylist()
+                             for p in (persons_path, places_path, orgs_path))
     return spark.sparkContext.broadcast(
         (uuid.uuid4().hex, persons, places, orgs))
 

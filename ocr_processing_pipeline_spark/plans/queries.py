@@ -48,7 +48,12 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # (sf_dir, name, parallelism) -> scan partition count. Pure file-layout
 # metadata (how many splits the scan yields), NOT query results — safe to
 # memo for the process lifetime; probing costs a plan->RDD conversion we
-# don't want to re-pay 85 times per bench sweep.
+# don't want to re-pay 85 times per bench sweep. Assumes the layout is
+# static while the process lives: the memo is never invalidated, so
+# regenerating a table's files under a running session keeps the stale
+# spread decision (values stay correct — repartition is value-neutral —
+# but the exchange may be added or skipped wrongly). Restart the session
+# after rewriting test data.
 _SCAN_PARTS_MEMO: dict = {}
 
 
