@@ -17,40 +17,38 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from ..extractor.chunking import chunk_document
+
 CHUNKS_SCHEMA = (
     "doc_id long, url string, warc_ts timestamp, chunk_id string, "
     "chunk_order int, content string, lang string, span_start long, "
     "span_end long, n_tokens int, n_sentences int"
 )
+CHUNKS_COLUMNS = [f.split()[0] for f in CHUNKS_SCHEMA.split(", ")]
+
+
+def chunk_rows(doc_id: int, text: str | None) -> list[dict]:
+    """One document's chunks, with the chunk-level CHUNKS_SCHEMA columns
+    (chunk_id … n_sentences); the doc-level ones come from the doc row.
+    Empty-text docs produce no chunks (F12 guard)."""
+    if not text:
+        return []
+    rows = chunk_document(str(doc_id), text)
+    for c in rows:
+        del c["doc_id"]     # the chunker's str id; the doc row's is a long
+    return rows
 
 
 def _chunk_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from ..extractor.chunking import chunk_document
     for pdf in batches:
         rows = []
         for doc_id, url, warc_ts, text, lang in zip(
                 pdf["doc_id"], pdf["url"], pdf["warc_ts"], pdf["text"],
                 pdf["lang"]):
-            if not text:
-                continue
-            for c in chunk_document(str(doc_id), text):
-                rows.append({
-                    "doc_id": doc_id,
-                    "url": url,
-                    "warc_ts": warc_ts,
-                    "chunk_id": c["chunk_id"],
-                    "chunk_order": c["chunk_order"],
-                    "content": c["content"],
-                    "lang": lang,
-                    "span_start": c["span_start"],
-                    "span_end": c["span_end"],
-                    "n_tokens": c["n_tokens"],
-                    "n_sentences": c["n_sentences"],
-                })
-        yield pd.DataFrame(rows, columns=[
-            "doc_id", "url", "warc_ts", "chunk_id", "chunk_order",
-            "content", "lang", "span_start", "span_end", "n_tokens",
-            "n_sentences"])
+            for c in chunk_rows(doc_id, text):
+                rows.append({"doc_id": doc_id, "url": url,
+                             "warc_ts": warc_ts, "lang": lang, **c})
+        yield pd.DataFrame(rows, columns=CHUNKS_COLUMNS)
 
 
 def chunk_docs(docs: DataFrame) -> DataFrame:
@@ -62,4 +60,4 @@ def chunk_docs(docs: DataFrame) -> DataFrame:
     )
 
 
-__all__ = ["chunk_docs", "CHUNKS_SCHEMA"]
+__all__ = ["chunk_docs", "chunk_rows", "CHUNKS_SCHEMA", "CHUNKS_COLUMNS"]

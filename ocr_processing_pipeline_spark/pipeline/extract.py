@@ -16,6 +16,7 @@ lora_chunking_container/app/lora_chunking_api.py:243-269).
 
 from __future__ import annotations
 
+from time import perf_counter_ns
 from typing import Iterator
 
 import pandas as pd
@@ -43,97 +44,106 @@ DOCS_UDF_SCHEMA = (
 )
 
 
+# the docs table's columns, in order (extract_docs and the fused pass in
+# job.run_pipeline both project to this)
+DOC_COLUMNS = (
+    "doc_id", "url", "warc_ts", "lang", "detected_lang", "text",
+    "token_length", "failure_code", "content_kind",
+    "n_blocks_total", "n_blocks_kept", "extract_us", "spans",
+)
+# the ones extract_row computes (the first four pass through)
+ROW_COLUMNS = DOC_COLUMNS[4:]
+
+
+def extract_row(html, pre_text, oversized: bool) -> dict:
+    """One page → its extracted docs columns (the UDF-computed ones).
+
+    ``extract_us`` is the per-doc wall time (µs) — the instrumentation the
+    reference got from codecarbon's per-doc tracker
+    (lora_chunking_api.py:250, A7); aggregated into the checkpoint/lineage
+    rows per bucket."""
+    t0 = perf_counter_ns()
+    if oversized:
+        # bytes were nulled JVM-side; emit the quarantine row
+        res = extract_page(None, None)
+        res.failure_code = FailureCode.OVERSIZED
+        res.content_kind = "quarantined"
+    else:
+        res = extract_page(
+            bytes(html) if html is not None else None, pre_text)
+    toks = tokenize(res.text)      # one pass shared by count+langid
+    return {
+        "detected_lang": detect_lang_tokens(toks),
+        "text": res.text,
+        "token_length": len(toks),
+        "failure_code": res.failure_code,
+        "content_kind": res.content_kind,
+        "n_blocks_total": res.n_blocks_total,
+        "n_blocks_kept": res.n_blocks_kept,
+        "spans": [{"start": s, "end": e} for s, e in res.spans],
+        "extract_us": (perf_counter_ns() - t0) // 1000,
+    }
+
+
 def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    # per-doc wall time (µs) — the instrumentation the reference got from
-    # codecarbon's per-doc tracker (lora_chunking_api.py:250, A7);
-    # aggregated into the checkpoint/lineage rows per bucket
-    from time import perf_counter_ns
     for pdf in batches:
-        out = {
-            "url": pdf["url"],
-            "warc_ts": pdf["warc_ts"],
-            "lang": pdf["lang"],
-            "detected_lang": [],
-            "text": [],
-            "token_length": [],
-            "failure_code": [],
-            "content_kind": [],
-            "n_blocks_total": [],
-            "n_blocks_kept": [],
-            "extract_us": [],
-            "spans": [],
-        }
-        oversized = (pdf["_oversized"] if "_oversized" in pdf.columns
-                     else [False] * len(pdf))
-        for html, pre_text, too_big in zip(pdf["html"], pdf["text"],
-                                           oversized):
-            t0 = perf_counter_ns()
-            if too_big:
-                # bytes were nulled JVM-side; emit the quarantine row
-                res = extract_page(None, None)
-                res.failure_code = FailureCode.OVERSIZED
-                res.content_kind = "quarantined"
-            else:
-                res = extract_page(
-                    bytes(html) if html is not None else None, pre_text)
-            toks = tokenize(res.text)      # one pass shared by count+langid
-            out["text"].append(res.text)
-            out["token_length"].append(len(toks))
-            out["failure_code"].append(res.failure_code)
-            out["content_kind"].append(res.content_kind)
-            out["n_blocks_total"].append(res.n_blocks_total)
-            out["n_blocks_kept"].append(res.n_blocks_kept)
-            out["spans"].append(
-                [{"start": s, "end": e} for s, e in res.spans])
-            out["detected_lang"].append(detect_lang_tokens(toks))
-            out["extract_us"].append((perf_counter_ns() - t0) // 1000)
-        yield pd.DataFrame(out)
+        rows = [extract_row(html, pre_text, too_big)
+                for html, pre_text, too_big in zip(
+                    pdf["html"], pdf["text"], pdf["_oversized"])]
+        out = pd.DataFrame(rows, columns=list(ROW_COLUMNS))
+        for c in ("url", "warc_ts", "lang"):
+            out[c] = pdf[c]
+        yield out
 
 
-def extract_docs(pages: DataFrame,
-                 max_page_bytes: int = DEFAULT_MAX_PAGE_BYTES) -> DataFrame:
-    """pages(url, warc_ts, html, text, lang) → docs table.
-
-    Column pruning: only the five input columns are read; Catalyst pushes
-    the projection into the parquet scan.
+def gate_pages(pages: DataFrame,
+               max_page_bytes: int | None = DEFAULT_MAX_PAGE_BYTES
+               ) -> DataFrame:
+    """pages → (url, warc_ts, html, text, lang, _oversized): the five
+    input columns extraction reads, with the giant-page gate applied.
 
     Pages whose html OR pre-text payload exceeds ``max_page_bytes`` are
     quarantined JVM-side (octet_length test in the same projection —
     still one shuffle-free stage): the payloads are replaced by NULL
-    before the Arrow transfer and the row comes back with
-    failure_code=OVERSIZED_INPUT, empty text. The text column is gated
-    too because extract_page's pre_text fallback is a real input path —
-    an html-only gate would leave a giant text string a way into the
-    Arrow batch. ``max_page_bytes=None`` disables the gate.
+    before the Arrow transfer and ``_oversized`` is set, so extract_row
+    emits failure_code=OVERSIZED_INPUT, empty text. The text column is
+    gated too because extract_page's pre_text fallback is a real input
+    path — an html-only gate would leave a giant text string a way into
+    the Arrow batch. ``max_page_bytes=None`` disables the gate.
     """
     if max_page_bytes is None:
-        pruned = (pages
-                  .select("url", "warc_ts", "html", "text", "lang")
-                  .withColumn("_oversized", F.lit(False)))
-    else:
-        limit = F.lit(int(max_page_bytes))
-        too_big = ((F.coalesce(F.octet_length("html"), F.lit(0)) > limit)
-                   | (F.coalesce(F.octet_length("text"), F.lit(0)) > limit))
-        pruned = pages.select(
-            "url", "warc_ts",
-            F.when(F.coalesce(too_big, F.lit(False)),
-                   F.lit(None).cast("binary"))
-            .otherwise(F.col("html")).alias("html"),
-            F.when(F.coalesce(too_big, F.lit(False)),
-                   F.lit(None).cast("string"))
-            .otherwise(F.col("text")).alias("text"),
-            "lang",
-            F.coalesce(too_big, F.lit(False)).alias("_oversized"))
-    docs = (
-        pruned
-        .mapInPandas(_extract_batches, schema=DOCS_UDF_SCHEMA)
-        .withColumn("doc_id", F.xxhash64("url"))
-    )
-    return docs.select(
-        "doc_id", "url", "warc_ts", "lang", "detected_lang", "text",
-        "token_length", "failure_code", "content_kind",
-        "n_blocks_total", "n_blocks_kept", "extract_us", "spans",
-    )
+        return (pages
+                .select("url", "warc_ts", "html", "text", "lang")
+                .withColumn("_oversized", F.lit(False)))
+    limit = F.lit(int(max_page_bytes))
+    too_big = F.coalesce(
+        (F.coalesce(F.octet_length("html"), F.lit(0)) > limit)
+        | (F.coalesce(F.octet_length("text"), F.lit(0)) > limit),
+        F.lit(False))
+    return pages.select(
+        "url", "warc_ts",
+        F.when(too_big, F.lit(None).cast("binary"))
+        .otherwise(F.col("html")).alias("html"),
+        F.when(too_big, F.lit(None).cast("string"))
+        .otherwise(F.col("text")).alias("text"),
+        "lang",
+        too_big.alias("_oversized"))
 
 
-__all__ = ["extract_docs", "DOCS_UDF_SCHEMA"]
+def extract_docs(pages: DataFrame,
+                 max_page_bytes: int | None = DEFAULT_MAX_PAGE_BYTES
+                 ) -> DataFrame:
+    """pages(url, warc_ts, html, text, lang) → docs table.
+
+    Column pruning: only the five input columns are read; Catalyst pushes
+    the projection into the parquet scan. ``max_page_bytes`` is the
+    giant-page gate (see gate_pages; None disables it).
+    """
+    return (gate_pages(pages, max_page_bytes)
+            .mapInPandas(_extract_batches, schema=DOCS_UDF_SCHEMA)
+            .withColumn("doc_id", F.xxhash64("url"))
+            .select(*DOC_COLUMNS))
+
+
+__all__ = ["extract_docs", "extract_row", "gate_pages", "DOC_COLUMNS",
+           "ROW_COLUMNS", "DOCS_UDF_SCHEMA"]

@@ -10,10 +10,20 @@ partitioning + AQE):
   skew (xxhash64 of distinct urls ≈ uniform), and is simultaneously the
   resumability commit unit (lineage.py). Per-doc cost skew (a giant page)
   is bounded by the Arrow batch cap (session.py) + AQE.
-- All three derived tables are computed from ONE pass over pages: extract →
-  chunk → ner are narrow (mapInPandas) transforms, so the only shuffle in
-  the whole job is the single repartition to n_buckets, reused by every
-  write (docs/chunks/edges inherit the bucket partitioning).
+- All Python work runs in ONE Arrow-batched pass (``_process``): for each
+  page it extracts the doc, chunks it, and scans + links each chunk, and
+  returns one row per doc with its chunks, edges (and optionally
+  mentions) nested. The UDF boundary — the per-job fixed cost at small
+  sizes — is crossed once per run, not once per stage. ``doc_id =
+  xxhash64(url)`` is computed JVM-side before the UDF. The only shuffle
+  is the single repartition to n_buckets.
+- That pass is persisted (Spark's default memory-and-disk level; blocks
+  that do not fit in memory spill to local disk) and every table is a
+  projection of it: docs a select, chunks/edges/mentions an explode. The
+  checkpoint rows aggregate the same cache, so nothing just written is
+  read back. The cache holds this run's output only and is released when
+  the run ends. A lost cache block is recomputed from the pages, which is
+  deterministic except for the ``extract_us`` timing.
 - Gazetteers are broadcast (J1) — no shuffle for the linking "join".
 
 This file is also the ``spark-submit --py-files`` entry point:
@@ -31,7 +41,8 @@ import json
 import os
 import time
 
-from pyspark.sql import SparkSession
+import pandas as pd
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import chunk as chunk_mod
@@ -121,70 +132,124 @@ def run_pipeline(spark: SparkSession, pages_path: str, gazetteers_dir: str,
         os.path.join(gazetteers_dir, "places.parquet"),
         os.path.join(gazetteers_dir, "orgs.parquet"))
 
-    # max_page_bytes: None (default) -> extract_docs' own 100 MiB
+    # max_page_bytes: None (default) -> gate_pages' own 100 MiB
     # default; 0 -> gate disabled; > 0 -> that threshold. (A plain
     # pass-through of None would silently re-enable the default against
-    # extract_docs' documented "None disables".)
+    # gate_pages' documented "None disables".)
     if max_page_bytes is None:
-        extract_kw = {}
+        gate_kw = {}
     elif max_page_bytes <= 0:
-        extract_kw = {"max_page_bytes": None}
+        gate_kw = {"max_page_bytes": None}
     else:
-        extract_kw = {"max_page_bytes": max_page_bytes}
-    docs = lineage.with_bucket(extract_mod.extract_docs(todo, **extract_kw),
-                               n_buckets)
-    docs_path = os.path.join(out_dir, "docs")
-    lineage.write_partitioned(docs, docs_path)
+        gate_kw = {"max_page_bytes": max_page_bytes}
+    pruned = extract_mod.gate_pages(todo, **gate_kw).withColumn(
+        "doc_id", F.xxhash64("url"))
 
-    # chunk + ner read back the just-written docs for THIS run's buckets:
-    # narrow scans (partition-pruned on bucket) — extraction runs exactly
-    # once, never recomputed for downstream stages. The declared schema
-    # skips the inference job (and reads an empty table without failing).
-    docs_this_run = spark.read.schema(docs.schema).parquet(docs_path).filter(
-        F.col("bucket").isin(run_buckets))
-
-    chunks = lineage.with_bucket(chunk_mod.chunk_docs(docs_this_run),
-                                 n_buckets)
-    chunks_path = os.path.join(out_dir, "chunks")
-    lineage.write_partitioned(chunks, chunks_path)
-
-    chunks_this_run = spark.read.schema(chunks.schema).parquet(
-        chunks_path).filter(F.col("bucket").isin(run_buckets))
-    edges = lineage.with_bucket(
-        ner_mod.link_entities(chunks_this_run, gaz_bc), n_buckets)
-    edges_path = os.path.join(out_dir, "edges")
-    lineage.write_partitioned(edges, edges_path)
-
-    if with_mentions:
-        # raw mention spans (FIXTURES.md §3 'entities' table) — optional:
-        # an extra scan pass over chunks, off by default
-        mentions = lineage.with_bucket(
-            ner_mod.extract_mentions(chunks_this_run, gaz_bc)
-            .join(chunks_this_run.select("chunk_id", "url"), "chunk_id"),
-            n_buckets)
+    # ONE Python pass, persisted; every write below and the checkpoint
+    # rows read this cache, never the tables just written (see the module
+    # docstring)
+    staged = lineage.with_bucket(
+        _process(pruned, gaz_bc, with_mentions), n_buckets).persist()
+    try:
+        docs = staged.select(*extract_mod.DOC_COLUMNS, "bucket")
+        lineage.write_partitioned(docs, os.path.join(out_dir, "docs"))
         lineage.write_partitioned(
-            mentions, os.path.join(out_dir, "mentions"))
+            _exploded(staged, "chunks", chunk_mod.CHUNKS_COLUMNS),
+            os.path.join(out_dir, "chunks"))
+        lineage.write_partitioned(
+            _exploded(staged, "edges", ner_mod.EDGES_COLUMNS),
+            os.path.join(out_dir, "edges"))
+        if with_mentions:
+            # raw mention spans (FIXTURES.md §3 'entities' table), from
+            # the same scan the linker used; optional, off by default.
+            # Columns as extract_mentions joined with url on chunk_id.
+            m_cols = [c for c in ner_mod.MENTIONS_COLUMNS
+                      if c != "chunk_id"]
+            lineage.write_partitioned(
+                _exploded(staged, "mentions", ["chunk_id", *m_cols, "url"]),
+                os.path.join(out_dir, "mentions"))
 
-    # lineage/metrics rows LAST (commit point) — crash before this line ⇒
-    # buckets get reprocessed and dynamically overwritten next run.
-    ckpt = lineage.checkpoint_rows_with_failures(
-        docs_this_run, "docs").localCheckpoint()   # probe + append: one pass
-    have = {r.bucket for r in ckpt.select("bucket").collect()}
-    if fail_after_buckets is None:
-        # a run bucket that produced no rows has ZERO pages — commit its
-        # sentinel so the no-op path above closes over it. A simulated
-        # crash (fail_after_buckets) leaves them uncommitted, as a real
-        # one would; the next full run commits them.
-        empty = sorted(set(run_buckets) - have)
-        if empty:
-            ckpt = ckpt.unionByName(
-                lineage.empty_bucket_sentinels(spark, empty, "docs"))
-    lineage.append_checkpoint(ckpt, checkpoint_path)
+        # lineage/metrics rows LAST (commit point) — crash before this
+        # line ⇒ buckets get reprocessed and dynamically overwritten next
+        # run.
+        ckpt = lineage.checkpoint_rows_with_failures(
+            docs, "docs").localCheckpoint()   # probe + append: one pass
+        have = {r.bucket for r in ckpt.select("bucket").collect()}
+        if fail_after_buckets is None:
+            # a run bucket that produced no rows has ZERO pages — commit
+            # its sentinel so the no-op path above closes over it. A
+            # simulated crash (fail_after_buckets) leaves them
+            # uncommitted, as a real one would; the next full run commits
+            # them.
+            empty = sorted(set(run_buckets) - have)
+            if empty:
+                ckpt = ckpt.unionByName(
+                    lineage.empty_bucket_sentinels(spark, empty, "docs"))
+        lineage.append_checkpoint(ckpt, checkpoint_path)
+    finally:
+        staged.unpersist()
 
     if not have:
         return dict(_NOTHING_TO_DO)
     return {t: lineage.count_rows(os.path.join(out_dir, t))
             for t in ("docs", "chunks", "edges", "checkpoint")}
+
+
+def _nested(schema: str) -> str:
+    """array<struct> of the table's columns a doc row does not carry."""
+    fields = [f for f in schema.split(", ")
+              if f.split()[0] not in extract_mod.DOC_COLUMNS]
+    return f"array<struct<{', '.join(fields)}>>"
+
+
+def _exploded(staged: DataFrame, nested: str, columns: list[str]
+              ) -> DataFrame:
+    """One row per element of a nested column, projected to ``columns``
+    (doc-level ones from the doc row) plus the bucket."""
+    rows = staged.select(*extract_mod.DOC_COLUMNS, "bucket",
+                         F.explode(nested).alias("x"))
+    return rows.select(*[c if c in extract_mod.DOC_COLUMNS else f"x.{c}"
+                         for c in columns], "bucket")
+
+
+def _process(pruned: DataFrame, gaz_bc, with_mentions: bool) -> DataFrame:
+    """Gated pages (+ doc_id) → one row per doc: the docs columns plus its
+    nested chunks, edges and (with mentions) mentions — extract → chunk →
+    scan + link for each page in one Arrow-batched pass."""
+    tables = {"chunks": chunk_mod.CHUNKS_SCHEMA,
+              "edges": ner_mod.EDGES_SCHEMA}
+    if with_mentions:
+        tables["mentions"] = ner_mod.MENTIONS_SCHEMA
+    schema = (extract_mod.DOCS_UDF_SCHEMA + ", doc_id long, "
+              + ", ".join(f"{t} {_nested(s)}" for t, s in tables.items()))
+
+    def process_batches(batches):
+        idx, memo = ner_mod._get_index_and_memo(gaz_bc)
+        for pdf in batches:
+            rows = []
+            for doc_id, html, text, too_big, warc_ts in zip(
+                    pdf["doc_id"], pdf["html"], pdf["text"],
+                    pdf["_oversized"], pdf["warc_ts"]):
+                row = extract_mod.extract_row(html, text, too_big)
+                row["chunks"] = chunk_mod.chunk_rows(doc_id, row["text"])
+                row["edges"], row["mentions"] = [], []
+                date = ner_mod.doc_date(warc_ts)
+                for c in row["chunks"]:
+                    # one scan feeds both the linker and the mentions
+                    found = idx.scan(c["content"])
+                    row["edges"] += ner_mod.edge_rows(
+                        found, idx, memo, c["chunk_id"], c["content"], date)
+                    row["mentions"] += ner_mod.mention_rows(
+                        found, c["chunk_id"])
+                rows.append(row)
+            # (mentions are dropped here unless with_mentions)
+            out = pd.DataFrame(
+                rows, columns=[*extract_mod.ROW_COLUMNS, *tables])
+            for c in ("url", "warc_ts", "lang", "doc_id"):
+                out[c] = pdf[c]
+            yield out
+
+    return pruned.mapInPandas(process_batches, schema=schema)
 
 
 def main(argv=None):

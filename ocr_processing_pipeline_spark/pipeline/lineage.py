@@ -14,18 +14,22 @@ rule: "range-partitioned shuffles on url-hash"). Each run:
    column with pyarrow (``committed_bucket_ids``: no Spark job) and the
    pages are filtered to the remaining ids. ``remaining_pages`` makes the
    same decision as a broadcast left-anti join for Spark-side callers.
-2. write docs/chunks/edges parquet partitioned by bucket
-   (dynamic partition overwrite → a re-run of an uncommitted bucket
-   replaces its files: idempotent)
-3. append one checkpoint row per bucket: row counts, warc_ts min/max,
-   failure-code histogram, committed_at — the lineage + metrics record
-   (replaces the codecarbon CSV join of Monitoring/aggregator.py:5-88)
+2. run the Python work (extract → chunk → scan + link) in ONE pass over
+   the bucket-repartitioned pages and persist its output
+3. write docs/chunks/edges (and optionally mentions) parquet partitioned
+   by bucket, each a projection of that persisted stage (dynamic
+   partition overwrite → a re-run of an uncommitted bucket replaces its
+   files: idempotent)
+4. append one checkpoint row per bucket, aggregated from the same stage:
+   row counts, warc_ts min/max, failure-code histogram, committed_at —
+   the lineage + metrics record (replaces the codecarbon CSV join of
+   Monitoring/aggregator.py:5-88), then release the persisted stage
 
-Crash between (2) and (3) leaves data files without a checkpoint row; the
+Crash between (3) and (4) leaves data files without a checkpoint row; the
 next run reprocesses those buckets and the overwrite removes any partial
 output — no duplicates (verified by tests/test_resume.py).
 
-On a cluster this maps 1:1 onto Iceberg: step 2+3 become a single Iceberg
+On a cluster this maps 1:1 onto Iceberg: steps 3+4 become a single Iceberg
 transaction (append + checkpoint rows in one commit). The Iceberg writer is
 gated behind an import-try because the sandbox image has no Iceberg jars.
 """
@@ -156,14 +160,9 @@ def empty_bucket_sentinels(spark: SparkSession, buckets: list[int],
     every no-op resume (ADVICE r4). A full run commits these sentinels for
     the buckets it ran that produced no rows; row_count 0 distinguishes
     them in every metrics query."""
-    rows = [(int(b), table_name, 0, 0, None, None, {}, None, None)
+    rows = [(int(b), table_name, 0, 0, None, None, {}, None, None, None)
             for b in buckets]
-    schema = (
-        "bucket int, table_name string, row_count long, n_urls long, "
-        "warc_ts_min timestamp, warc_ts_max timestamp, "
-        "failure_counts map<string,long>, mean_extract_us double, "
-        "max_extract_us long")
-    return (spark.createDataFrame(rows, schema)
+    return (spark.createDataFrame(rows, CHECKPOINT_SCHEMA)
             .withColumn("committed_at", F.current_timestamp()))
 
 

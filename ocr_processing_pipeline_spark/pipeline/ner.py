@@ -26,6 +26,8 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from ..extractor.ner import link_mentions
+
 MENTIONS_SCHEMA = (
     "doc_id long, chunk_id string, mention string, entity_type string, "
     "span_start long, span_end long, lang string"
@@ -36,6 +38,8 @@ EDGES_SCHEMA = (
     "predicate string, object string, mention string, entity_type string, "
     "fuzzy_score int, span_start long, span_end long"
 )
+MENTIONS_COLUMNS = [f.split()[0] for f in MENTIONS_SCHEMA.split(", ")]
+EDGES_COLUMNS = [f.split()[0] for f in EDGES_SCHEMA.split(", ")]
 
 _INDEX_CACHE: dict = {}
 
@@ -49,19 +53,11 @@ _INDEX_CACHE: dict = {}
 _MEMO_MAX_ENTRIES = 1_000_000
 
 
-def _get_index(bc):
-    return _get_index_and_memo(bc)[0]
-
-
 def _get_index_and_memo(bc):
     # key on the uuid token shipped INSIDE the broadcast value: id(bc) can
     # be reused by a different broadcast after GC in a long-lived python
     # worker, which would serve a stale trie built from other gazetteers
-    value = bc.value
-    if isinstance(value, tuple) and len(value) == 4:
-        key, persons, places, orgs = value
-    else:  # legacy 3-tuple broadcasts (no token): fall back to identity
-        key, (persons, places, orgs) = id(bc), value
+    key, persons, places, orgs = bc.value
     entry = _INDEX_CACHE.get(key)
     if entry is None:
         from ..extractor.ner import GazetteerIndex
@@ -80,7 +76,8 @@ def load_gazetteers(spark: SparkSession, persons_path: str,
     Spark job), broadcast.
 
     The broadcast tuple carries a fresh uuid token as a stable cache
-    identity for the per-worker trie singleton (see _get_index)."""
+    identity for the per-worker trie singleton (see
+    _get_index_and_memo)."""
     import uuid
 
     import pyarrow.parquet as pq
@@ -90,25 +87,49 @@ def load_gazetteers(spark: SparkSession, persons_path: str,
         (uuid.uuid4().hex, persons, places, orgs))
 
 
+def doc_date(warc_ts):
+    """The crawl date the person-date filter checks (None if unknown)."""
+    if warc_ts is None or pd.isna(warc_ts):
+        return None
+    return warc_ts.date()
+
+
+def mention_rows(found: list[dict], chunk_id: str) -> list[dict]:
+    """One chunk's scanned mentions as chunk-level MENTIONS_SCHEMA rows
+    (the doc-level doc_id and lang come from the doc row)."""
+    return [{"chunk_id": chunk_id, "mention": m["mention"],
+             "entity_type": m["entity_type"],
+             "span_start": m["span_start"], "span_end": m["span_end"]}
+            for m in found]
+
+
+def edge_rows(found: list[dict], idx, memo: dict, chunk_id: str,
+              content: str, date) -> list[dict]:
+    """One chunk's linked mentions as chunk-level EDGES_SCHEMA rows (the
+    doc-level doc_id and url come from the doc row). ``found`` is
+    ``idx.scan(content)``; ``memo`` is the worker-lifetime candidate memo
+    (see _get_index_and_memo): mention frequency is Zipfian, so most link
+    decisions repeat, and the memo turns O(chunks × fuzz) into
+    O(distinct mentions × fuzz) — per WORKER, not per task."""
+    return [{"chunk_id": chunk_id, "subject": chunk_id,
+             "predicate": e["predicate"], "object": e["matched_url"],
+             "mention": e["mention"], "entity_type": e["entity_type"],
+             "fuzzy_score": e["fuzzy_score"],
+             "span_start": e["span_start"], "span_end": e["span_end"]}
+            for e in link_mentions(found, idx, date, content, memo=memo)]
+
+
 def extract_mentions(chunks: DataFrame, gaz_bc) -> DataFrame:
     def scan_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        idx = _get_index(gaz_bc)
+        idx, _ = _get_index_and_memo(gaz_bc)
         for pdf in batches:
             rows = []
             for doc_id, chunk_id, content, lang in zip(
                     pdf["doc_id"], pdf["chunk_id"], pdf["content"],
                     pdf["lang"]):
-                for m in idx.scan(content):
-                    rows.append({
-                        "doc_id": doc_id, "chunk_id": chunk_id,
-                        "mention": m["mention"],
-                        "entity_type": m["entity_type"],
-                        "span_start": m["span_start"],
-                        "span_end": m["span_end"], "lang": lang,
-                    })
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "chunk_id", "mention", "entity_type",
-                "span_start", "span_end", "lang"])
+                for m in mention_rows(idx.scan(content), chunk_id):
+                    rows.append({"doc_id": doc_id, "lang": lang, **m})
+            yield pd.DataFrame(rows, columns=MENTIONS_COLUMNS)
 
     return (chunks.select("doc_id", "chunk_id", "content", "lang")
             .mapInPandas(scan_batches, schema=MENTIONS_SCHEMA))
@@ -117,42 +138,22 @@ def extract_mentions(chunks: DataFrame, gaz_bc) -> DataFrame:
 def link_entities(chunks: DataFrame, gaz_bc) -> DataFrame:
     """chunks → edges, one Arrow pass (scan + link fused, no shuffle)."""
     def link_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..extractor.ner import link_mentions
-        # worker-lifetime memo (see _get_index_and_memo): mention
-        # frequency is Zipfian, so most link decisions repeat; the cache
-        # turns O(chunks × fuzz) into O(distinct mentions × fuzz) — per
-        # WORKER, not per task
         idx, memo = _get_index_and_memo(gaz_bc)
         for pdf in batches:
             rows = []
             for doc_id, url, chunk_id, content, warc_ts in zip(
                     pdf["doc_id"], pdf["url"], pdf["chunk_id"],
                     pdf["content"], pdf["warc_ts"]):
-                doc_date = (warc_ts.date()
-                            if warc_ts is not None and not pd.isna(warc_ts)
-                            else None)
-                mentions = idx.scan(content)
-                for e in link_mentions(mentions, idx, doc_date, content,
-                                       memo=memo):
-                    rows.append({
-                        "doc_id": doc_id, "url": url, "chunk_id": chunk_id,
-                        "subject": chunk_id,
-                        "predicate": e["predicate"],
-                        "object": e["matched_url"],
-                        "mention": e["mention"],
-                        "entity_type": e["entity_type"],
-                        "fuzzy_score": e["fuzzy_score"],
-                        "span_start": e["span_start"],
-                        "span_end": e["span_end"],
-                    })
-            yield pd.DataFrame(rows, columns=[
-                "doc_id", "url", "chunk_id", "subject", "predicate",
-                "object", "mention", "entity_type", "fuzzy_score",
-                "span_start", "span_end"])
+                for e in edge_rows(idx.scan(content), idx, memo, chunk_id,
+                                   content, doc_date(warc_ts)):
+                    rows.append({"doc_id": doc_id, "url": url, **e})
+            yield pd.DataFrame(rows, columns=EDGES_COLUMNS)
 
     return (chunks.select("doc_id", "url", "chunk_id", "content", "warc_ts")
             .mapInPandas(link_batches, schema=EDGES_SCHEMA))
 
 
 __all__ = ["load_gazetteers", "extract_mentions", "link_entities",
-           "MENTIONS_SCHEMA", "EDGES_SCHEMA"]
+           "doc_date", "mention_rows", "edge_rows",
+           "MENTIONS_SCHEMA", "EDGES_SCHEMA", "MENTIONS_COLUMNS",
+           "EDGES_COLUMNS"]

@@ -11,6 +11,7 @@ import contextlib
 import io
 import os
 import sys
+import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -23,11 +24,14 @@ SF_DIR = "/root/testdata/sf0.001"
 
 COMMENT = {
     "flagship_pipeline": (
-        "The entire extract→chunk→NER chain is ONE narrow stage: scan → "
-        "MapInPandas ×3 with codegen'd projections between. No Exchange "
-        "anywhere — at 10^12 rows this is embarrassingly parallel over "
-        "scan splits; the gazetteer 'join' is a broadcast variable inside "
-        "the UDF."),
+        "The plan run_pipeline hands to its edges write. All Python work "
+        "is ONE MapInPandas (extract → chunk → scan + link per page, "
+        "chunks/edges nested per doc) after the one Exchange, the bucket "
+        "repartition. That stage is persisted (InMemoryRelation): the "
+        "docs write materializes it, and chunks/edges are an explode "
+        "over the InMemoryTableScan, so no table is read back and the "
+        "UDF runs once per run. The gazetteer 'join' is a broadcast "
+        "variable inside the UDF."),
     "filtered_scan": (
         "Both predicates reach the parquet reader (PushedFilters) and the "
         "scan reads only the 4 referenced columns (ReadSchema) — at "
@@ -112,27 +116,41 @@ def plan_str(df, mode="formatted") -> str:
     return buf.getvalue()
 
 
+def pipeline_plan(spark, corpus: str) -> str:
+    """The plan run_pipeline hands to its edges write, captured during one
+    run over ``corpus`` into a throwaway output directory."""
+    from ocr_processing_pipeline_spark.pipeline import job, lineage
+    plans = {}
+    write = lineage.write_partitioned
+
+    def capture(df, path):
+        # after adaptive execution ran the cached stage, keep its final
+        # plan only
+        plans[os.path.basename(path)] = plan_str(df, "simple").split(
+            "+- == Initial Plan ==")[0].rstrip() + "\n"
+        write(df, path)
+
+    lineage.write_partitioned = capture
+    try:
+        with tempfile.TemporaryDirectory() as out:
+            job.run_pipeline(spark, os.path.join(corpus, "pages.parquet"),
+                             corpus, out, n_buckets=8)
+    finally:
+        lineage.write_partitioned = write
+    return plans["edges"]
+
+
 def main() -> None:
     spark = get_spark("dump_plans", cpus=4)
     out = ["# PLANS — captured physical plans (regenerated per round)\n",
            "`python tools/dump_plans.py` — plans below are from THIS "
            "commit's code at sf0.001.\n"]
 
-    # flagship pipeline chain
-    from ocr_processing_pipeline_spark.pipeline.chunk import chunk_docs
-    from ocr_processing_pipeline_spark.pipeline.extract import extract_docs
-    from ocr_processing_pipeline_spark.pipeline.ner import (
-        link_entities, load_gazetteers)
     corpus = pages_corpus_dir(SF_DIR)
-    pages = spark.read.parquet(os.path.join(corpus, "pages.parquet"))
-    gaz = load_gazetteers(spark,
-                          os.path.join(corpus, "persons.parquet"),
-                          os.path.join(corpus, "places.parquet"),
-                          os.path.join(corpus, "orgs.parquet"))
-    edges = link_entities(chunk_docs(extract_docs(pages)), gaz)
-    out.append("## flagship_pipeline (pages → docs → chunks → edges)\n")
+    out.append("## flagship_pipeline (run_pipeline: pages → docs, chunks, "
+               "edges)\n")
     out.append(COMMENT["flagship_pipeline"] + "\n")
-    out.append("```\n" + plan_str(edges, "simple") + "```\n")
+    out.append("```\n" + pipeline_plan(spark, corpus) + "```\n")
 
     for name in ("filtered_scan", "agg_pricing_summary",
                  "broadcast_join_parts", "semi_join_layered",
