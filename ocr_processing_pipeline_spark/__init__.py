@@ -12,7 +12,7 @@ Layout:
     extractor/   pure-Python deterministic semantics (the oracle) — no Spark
     pipeline/    Spark stages wiring the oracle into mapInPandas/applyInPandas
     operators/   generic large-scale operators (dedup, ANN, as-of, top-k, ...)
-    sources/     corpus synthesizer + table catalog (parquet; Iceberg if jars)
+    sources/     synthetic corpus generator
     functions/   scalar helpers (fuzzy ratios, text functions)
     streaming/   Trigger.AvailableNow incremental variant
 """

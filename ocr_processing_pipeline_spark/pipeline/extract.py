@@ -109,12 +109,16 @@ def gate_pages(pages: DataFrame,
     emits failure_code=OVERSIZED_INPUT, empty text. The text column is
     gated too because extract_page's pre_text fallback is a real input
     path — an html-only gate would leave a giant text string a way into
-    the Arrow batch. ``max_page_bytes=None`` disables the gate.
+    the Arrow batch. ``max_page_bytes=None`` disables the gate; a value
+    <= 0 is rejected (it would quarantine every page).
     """
     if max_page_bytes is None:
         return (pages
                 .select("url", "warc_ts", "html", "text", "lang")
                 .withColumn("_oversized", F.lit(False)))
+    if max_page_bytes <= 0:
+        raise ValueError(f"max_page_bytes must be > 0, got {max_page_bytes}"
+                         " (pass None to disable the gate)")
     limit = F.lit(int(max_page_bytes))
     too_big = F.coalesce(
         (F.coalesce(F.octet_length("html"), F.lit(0)) > limit)

@@ -61,7 +61,8 @@ def run_pipeline(spark: SparkSession, pages_path: str, gazetteers_dir: str,
                  resume: bool = True,
                  with_mentions: bool = False,
                  fail_after_buckets: int | None = None,
-                 max_page_bytes: int | None = None) -> dict:
+                 max_page_bytes: int | None = (
+                     extract_mod.DEFAULT_MAX_PAGE_BYTES)) -> dict:
     """Run (or resume) the full pipeline; returns per-table row counts.
 
     The counts are cumulative: the rows each output table holds after this
@@ -71,6 +72,8 @@ def run_pipeline(spark: SparkSession, pages_path: str, gazetteers_dir: str,
     ``fail_after_buckets`` processes only the first k uncommitted bucket
     ids — chosen on the driver, with no scan, so they may hold no pages
     at all — the hook the resume test uses to simulate a mid-run crash.
+    ``max_page_bytes`` is the giant-page gate (extract.gate_pages; None
+    disables it).
     """
     checkpoint_path = os.path.join(out_dir, "checkpoint")
     meta_path = os.path.join(out_dir, "checkpoint_meta.json")
@@ -99,8 +102,8 @@ def run_pipeline(spark: SparkSession, pages_path: str, gazetteers_dir: str,
     # is committed the no-op returns BEFORE even opening the input
     # (reading the pages path would list and footer-read every shard) —
     # a 100 TB no-op resume must not touch the 100 TB. (Empty buckets
-    # carry sentinel rows — see empty_bucket_sentinels — so this also
-    # closes for corpora that leave buckets empty.)
+    # carry sentinel rows — see lineage.checkpoint_rows_with_failures —
+    # so this also closes for corpora that leave buckets empty.)
     committed = (lineage.committed_bucket_ids(checkpoint_path, "docs")
                  if resume else set())
     run_buckets = sorted(set(range(n_buckets)) - committed)[
@@ -132,17 +135,7 @@ def run_pipeline(spark: SparkSession, pages_path: str, gazetteers_dir: str,
         os.path.join(gazetteers_dir, "places.parquet"),
         os.path.join(gazetteers_dir, "orgs.parquet"))
 
-    # max_page_bytes: None (default) -> gate_pages' own 100 MiB
-    # default; 0 -> gate disabled; > 0 -> that threshold. (A plain
-    # pass-through of None would silently re-enable the default against
-    # gate_pages' documented "None disables".)
-    if max_page_bytes is None:
-        gate_kw = {}
-    elif max_page_bytes <= 0:
-        gate_kw = {"max_page_bytes": None}
-    else:
-        gate_kw = {"max_page_bytes": max_page_bytes}
-    pruned = extract_mod.gate_pages(todo, **gate_kw).withColumn(
+    pruned = extract_mod.gate_pages(todo, max_page_bytes).withColumn(
         "doc_id", F.xxhash64("url"))
 
     # ONE Python pass, persisted; every write below and the checkpoint
@@ -171,25 +164,18 @@ def run_pipeline(spark: SparkSession, pages_path: str, gazetteers_dir: str,
 
         # lineage/metrics rows LAST (commit point) — crash before this
         # line ⇒ buckets get reprocessed and dynamically overwritten next
-        # run.
+        # run. A run bucket that produced no rows has ZERO pages and gets
+        # a sentinel, so the no-op path above closes over it; a simulated
+        # crash (fail_after_buckets) leaves them uncommitted, as a real
+        # one would, and the next full run commits them.
         ckpt = lineage.checkpoint_rows_with_failures(
-            docs, "docs").localCheckpoint()   # probe + append: one pass
-        have = {r.bucket for r in ckpt.select("bucket").collect()}
-        if fail_after_buckets is None:
-            # a run bucket that produced no rows has ZERO pages — commit
-            # its sentinel so the no-op path above closes over it. A
-            # simulated crash (fail_after_buckets) leaves them
-            # uncommitted, as a real one would; the next full run commits
-            # them.
-            empty = sorted(set(run_buckets) - have)
-            if empty:
-                ckpt = ckpt.unionByName(
-                    lineage.empty_bucket_sentinels(spark, empty, "docs"))
-        lineage.append_checkpoint(ckpt, checkpoint_path)
+            docs, "docs",
+            run_buckets if fail_after_buckets is None else ())
+        lineage.append_checkpoint(spark, ckpt, checkpoint_path)
     finally:
         staged.unpersist()
 
-    if not have:
+    if not any(r.row_count for r in ckpt):
         return dict(_NOTHING_TO_DO)
     return {t: lineage.count_rows(os.path.join(out_dir, t))
             for t in ("docs", "chunks", "edges", "checkpoint")}
@@ -262,20 +248,20 @@ def main(argv=None):
     ap.add_argument("--n-buckets", type=int, default=DEFAULT_N_BUCKETS)
     ap.add_argument("--cpus", type=int, default=None)
     ap.add_argument("--no-resume", action="store_true")
-    def _non_negative_bytes(s: str) -> int:
+    def _page_bytes(s: str) -> int | None:
         v = int(s)
         if v < 0:
             # a typo'd negative must error, not silently disable the gate
             raise argparse.ArgumentTypeError(
                 "--max-page-bytes must be >= 0 (0 disables the gate)")
-        return v
+        return v or None
 
-    ap.add_argument("--max-page-bytes", type=_non_negative_bytes,
-                    default=None,
+    ap.add_argument("--max-page-bytes", type=_page_bytes,
+                    default=extract_mod.DEFAULT_MAX_PAGE_BYTES,
                     help="quarantine pages whose html or text exceeds "
                          "this many bytes (failure_code=OVERSIZED_INPUT). "
-                         "Omit for the 100 MiB default; pass 0 to disable "
-                         "the gate entirely (negative values are rejected)")
+                         "Default 100 MiB; pass 0 to disable the gate "
+                         "entirely (negative values are rejected)")
     args = ap.parse_args(argv)
 
     spark = get_spark("extraction_job", cpus=args.cpus)

@@ -23,32 +23,41 @@ rule: "range-partitioned shuffles on url-hash"). Each run:
 4. append one checkpoint row per bucket, aggregated from the same stage:
    row counts, warc_ts min/max, failure-code histogram, committed_at —
    the lineage + metrics record (replaces the codecarbon CSV join of
-   Monitoring/aggregator.py:5-88), then release the persisted stage
+   Monitoring/aggregator.py:5-88). The per-(bucket, failure code)
+   aggregate is collected once, folded into one row per bucket on the
+   driver (plus zero-row sentinels for empty buckets) and appended as
+   one file; then the persisted stage is released
 
 Crash between (3) and (4) leaves data files without a checkpoint row; the
 next run reprocesses those buckets and the overwrite removes any partial
 output — no duplicates (verified by tests/test_resume.py).
 
-On a cluster this maps 1:1 onto Iceberg: steps 3+4 become a single Iceberg
-transaction (append + checkpoint rows in one commit). The Iceberg writer is
-gated behind an import-try because the sandbox image has no Iceberg jars.
+On a cluster with Iceberg, steps 3+4 would become a single transaction
+(append + checkpoint rows in one commit). Here every table is plain
+parquet, written directly: the image has no Iceberg jars.
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable
 
+import pandas as pd
 import pyarrow.dataset as ds
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
-CHECKPOINT_SCHEMA = (
+# a checkpoint row as checkpoint_rows_with_failures returns it: the
+# table's columns less committed_at, warc_ts_min/max as epoch micros (the
+# table stores them as timestamps)
+CHECKPOINT_ROW_SCHEMA = (
     "bucket int, table_name string, row_count long, n_urls long, "
-    "warc_ts_min timestamp, warc_ts_max timestamp, "
+    "warc_ts_min long, warc_ts_max long, "
     "failure_counts map<string,long>, mean_extract_us double, "
-    "max_extract_us long, committed_at timestamp"
+    "max_extract_us long"
 )
+_ROW_COLUMNS = [f.split()[0] for f in CHECKPOINT_ROW_SCHEMA.split(", ")]
 
 
 def with_bucket(df: DataFrame, n_buckets: int,
@@ -107,67 +116,60 @@ def write_partitioned(df: DataFrame, path: str) -> None:
 
 
 def checkpoint_rows_with_failures(docs_with_bucket: DataFrame,
-                                  table_name: str) -> DataFrame:
-    """Lineage rows incl. failure-code histogram as map<string,long>."""
-    has_timing = "extract_us" in docs_with_bucket.columns
-    timing_aggs = (
-        [F.avg("extract_us").alias("t_mean"),
-         F.max("extract_us").alias("t_max")]
-        if has_timing else
-        [F.lit(None).cast("double").alias("t_mean"),
-         F.lit(None).cast("long").alias("t_max")])
-    per_code = (
-        docs_with_bucket
-        .withColumn("code", F.when(F.col("failure_code") == "", "OK")
-                    .otherwise(F.coalesce(F.col("failure_code"),
-                                          F.lit("OK"))))
-        .groupBy("bucket", "code")
-        .agg(F.count(F.lit(1)).alias("n"),
-             F.countDistinct("url").alias("n_urls_c"),
-             F.min("warc_ts").alias("ts_min"),
-             F.max("warc_ts").alias("ts_max"),
-             *timing_aggs)
-    )
-    return (
-        per_code.groupBy("bucket")
-        .agg(F.sum("n").alias("row_count"),
-             F.sum("n_urls_c").alias("n_urls"),
-             F.min("ts_min").alias("warc_ts_min"),
-             F.max("ts_max").alias("warc_ts_max"),
-             F.map_from_entries(
-                 F.collect_list(F.struct("code", "n"))
-             ).alias("failure_counts"),
-             (F.sum(F.col("t_mean") * F.col("n")) / F.sum("n"))
-             .alias("mean_extract_us"),
-             F.max("t_max").alias("max_extract_us"))
-        .withColumn("table_name", F.lit(table_name))
-        .withColumn("committed_at", F.current_timestamp())
-        .select("bucket", "table_name", "row_count", "n_urls",
-                "warc_ts_min", "warc_ts_max", "failure_counts",
-                "mean_extract_us", "max_extract_us", "committed_at")
-    )
+                                  table_name: str,
+                                  sentinel_buckets: Iterable[int] = ()
+                                  ) -> list[Row]:
+    """One checkpoint row per bucket, on the driver: row count, url count,
+    warc_ts range, failure-code histogram and extract timing.
+
+    One ``groupBy(bucket, code)`` is collected — O(n_buckets × failure
+    codes) rows — and folded here into a row per bucket. Each id in
+    ``sentinel_buckets`` that holds no rows gets a zero-row sentinel, so
+    buckets the corpus leaves EMPTY are committed too and the
+    all-committed no-op (job.run_pipeline) closes over them; row_count 0
+    tells them apart in every metrics query. warc_ts_min/max travel as
+    epoch micros: a collected timestamp would come back as a naive
+    local-time datetime, ambiguous in a DST fall-back hour."""
+    code = F.coalesce(F.nullif("failure_code", F.lit("")), F.lit("OK"))
+    per_code: dict[int, list[Row]] = {b: [] for b in sentinel_buckets}
+    for r in (docs_with_bucket.groupBy("bucket", code.alias("code"))
+              .agg(F.count(F.lit(1)).alias("n"),
+                   F.countDistinct("url").alias("n_urls"),
+                   F.unix_micros(F.min("warc_ts")).alias("ts_min"),
+                   F.unix_micros(F.max("warc_ts")).alias("ts_max"),
+                   F.sum("extract_us").alias("t_sum"),
+                   F.max("extract_us").alias("t_max"))
+              .collect()):
+        per_code.setdefault(r.bucket, []).append(r)
+
+    def fold(f, values):
+        return f((v for v in values if v is not None), default=None)
+
+    rows = []
+    for b, rs in sorted(per_code.items()):
+        n = sum(r.n for r in rs)
+        rows.append(Row(
+            bucket=b, table_name=table_name, row_count=n,
+            n_urls=sum(r.n_urls for r in rs),
+            warc_ts_min=fold(min, (r.ts_min for r in rs)),
+            warc_ts_max=fold(max, (r.ts_max for r in rs)),
+            failure_counts={r.code: r.n for r in rs},
+            mean_extract_us=sum(r.t_sum for r in rs) / n if n else None,
+            max_extract_us=fold(max, (r.t_max for r in rs))))
+    return rows
 
 
-def empty_bucket_sentinels(spark: SparkSession, buckets: list[int],
-                           table_name: str) -> DataFrame:
-    """Zero-row checkpoint rows for buckets the corpus left EMPTY.
-
-    checkpoint_rows_with_failures derives rows from the docs groupBy, so
-    a bucket no url hashes into never commits a row — and the all-
-    committed no-op fast path (job.run_pipeline), which requires every
-    bucket id in the checkpoint, would silently never trigger for such
-    corpora, falling back to listing + footer-reading the full input on
-    every no-op resume (ADVICE r4). A full run commits these sentinels for
-    the buckets it ran that produced no rows; row_count 0 distinguishes
-    them in every metrics query."""
-    rows = [(int(b), table_name, 0, 0, None, None, {}, None, None, None)
-            for b in buckets]
-    return (spark.createDataFrame(rows, CHECKPOINT_SCHEMA)
-            .withColumn("committed_at", F.current_timestamp()))
-
-
-def append_checkpoint(rows: DataFrame, checkpoint_path: str) -> None:
-    rows.write.mode("append").parquet(checkpoint_path)
+def append_checkpoint(spark: SparkSession, rows: list[Row],
+                      checkpoint_path: str) -> None:
+    """Append checkpoint_rows_with_failures' rows as one parquet file,
+    stamped with committed_at. The frame goes through pandas, so Spark
+    builds it on the Arrow path: one job, no Python worker."""
+    pdf = pd.DataFrame(rows, columns=_ROW_COLUMNS, dtype=object)
+    (spark.createDataFrame(pdf, CHECKPOINT_ROW_SCHEMA)
+     .withColumns({c: F.timestamp_micros(c)
+                   for c in ("warc_ts_min", "warc_ts_max")})
+     .withColumn("committed_at", F.current_timestamp())
+     .coalesce(1).write.mode("append").parquet(checkpoint_path))
 
 
 def _exists(path: str) -> bool:
@@ -180,5 +182,4 @@ def _exists(path: str) -> bool:
 __all__ = ["with_bucket", "committed_buckets", "committed_bucket_ids",
            "count_rows", "remaining_pages",
            "write_partitioned", "checkpoint_rows_with_failures",
-           "empty_bucket_sentinels", "append_checkpoint",
-           "CHECKPOINT_SCHEMA"]
+           "append_checkpoint", "CHECKPOINT_ROW_SCHEMA"]

@@ -1,1 +1,1 @@
-"""Data sources: synthetic corpus generator and the table catalog."""
+"""Data sources: the synthetic corpus generator."""

@@ -1,36 +1,7 @@
-"""Catalog facade + MERGE emulation tests."""
-
-from pyspark.sql import functions as F
+"""MERGE emulation tests."""
 
 from ocr_processing_pipeline_spark.operators.merge import (
     merge_delete, merge_upsert)
-from ocr_processing_pipeline_spark.sources.catalog import (
-    ParquetCatalog, get_catalog, iceberg_available)
-
-
-def test_iceberg_probe_is_false_here(spark):
-    # the sandbox image ships no Iceberg jars; the probe must say so
-    # (on a real cluster with jars this flips to True and get_catalog
-    # returns IcebergCatalog)
-    assert iceberg_available(spark) is False
-    cat = get_catalog(spark, "/tmp/x", iceberg_catalog="lake")
-    assert isinstance(cat, ParquetCatalog)
-
-
-def test_parquet_catalog_roundtrip(spark, tmp_path):
-    cat = ParquetCatalog(spark, str(tmp_path))
-    df = spark.createDataFrame(
-        [(1, 0, "a"), (2, 1, "b")], "id long, bucket int, v string")
-    assert not cat.exists("t")
-    cat.overwrite_partitions(df, "t")
-    assert cat.exists("t")
-    assert cat.read("t").count() == 2
-    # overwrite same partitions is idempotent
-    cat.overwrite_partitions(df, "t")
-    assert cat.read("t").count() == 2
-    cat.append(spark.createDataFrame([(3, 2, "c")], df.schema), "t",
-               partition_col="bucket")
-    assert cat.read("t").count() == 3
 
 
 def test_merge_upsert_and_delete(spark):

@@ -1,0 +1,131 @@
+"""What a checkpoint row holds: per bucket, the same counts, url count,
+warc_ts range and failure histogram an independent aggregate over the
+docs table gives — across a crash run and its resume, with the Python
+process in a time zone whose DST fall-back hour one page is stamped in.
+"""
+
+import datetime
+import os
+import time
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+from pyspark.sql import functions as F
+
+from ocr_processing_pipeline_spark.pipeline.job import run_pipeline
+from ocr_processing_pipeline_spark.sources.corpus import make_pages
+
+N_BUCKETS = 32
+UTC = datetime.timezone.utc
+# 02:30 local in Europe/Zurich, inside the hour 2024-10-27 repeats
+FALL_BACK = datetime.datetime(2024, 10, 27, 0, 30, tzinfo=UTC)
+PAGES_SCHEMA = pa.schema([("url", pa.string()),
+                          ("warc_ts", pa.timestamp("us", tz="UTC")),
+                          ("html", pa.binary()), ("text", pa.string()),
+                          ("lang", pa.string())])
+
+
+def _micros(ts: datetime.datetime) -> int:
+    return (ts - datetime.datetime(1970, 1, 1, tzinfo=UTC)
+            ) // datetime.timedelta(microseconds=1)
+
+
+@pytest.fixture
+def zurich_tz(monkeypatch):
+    """Run the test's Python process at TZ=Europe/Zurich."""
+    monkeypatch.setenv("TZ", "Europe/Zurich")
+    time.tzset()
+    yield
+    monkeypatch.undo()
+    time.tzset()
+
+
+def _write_pages(path):
+    """Ten pages: one url crawled twice at two times, one page stamped in
+    the fall-back hour, one with no payload (EMPTY_INPUT)."""
+    rows = [{k: r[k] for k in PAGES_SCHEMA.names}
+            for r in make_pages(8)[0]]
+    rows[1]["warc_ts"] = FALL_BACK
+    recrawl = dict(rows[0])
+    recrawl["warc_ts"] = rows[0]["warc_ts"] + datetime.timedelta(days=3)
+    empty = dict(rows[2], url="https://empty.example/none", html=None,
+                 text=None)
+    rows += [recrawl, empty]
+    pq.write_table(pa.Table.from_pylist(rows, schema=PAGES_SCHEMA), path)
+    return rows
+
+
+def _checkpoint(spark, out):
+    """bucket → checkpoint row as a dict, timestamps as epoch micros (no
+    Python datetime conversion)."""
+    ck = spark.read.parquet(os.path.join(out, "checkpoint")).select(
+        "bucket", "row_count", "n_urls",
+        F.unix_micros("warc_ts_min").alias("ts_min"),
+        F.unix_micros("warc_ts_max").alias("ts_max"),
+        "failure_counts", "mean_extract_us", "max_extract_us")
+    rows = [r.asDict() for r in ck.collect()]
+    by_bucket = {r["bucket"]: r for r in rows}
+    assert len(by_bucket) == len(rows), "one row per bucket"
+    return by_bucket
+
+
+def _from_docs(spark, out):
+    """bucket → the checkpoint columns, aggregated independently from
+    the docs table."""
+    docs = spark.read.parquet(os.path.join(out, "docs"))
+    want = {r.bucket: {"row_count": r.n, "n_urls": r.u, "ts_min": r.lo,
+                       "ts_max": r.hi, "failure_counts": {}}
+            for r in docs.groupBy("bucket").agg(
+                F.count(F.lit(1)).alias("n"),
+                F.countDistinct("url").alias("u"),
+                F.unix_micros(F.min("warc_ts")).alias("lo"),
+                F.unix_micros(F.max("warc_ts")).alias("hi")).collect()}
+    code = (F.when(F.col("failure_code") == "", "OK")
+            .otherwise(F.col("failure_code")))
+    for r in docs.groupBy("bucket", code.alias("code")).count().collect():
+        want[r.bucket]["failure_counts"][r.code] = r["count"]
+    return want
+
+
+def test_checkpoint_rows_match_docs(spark, corpus_dir, tmp_path, zurich_tz):
+    pages = str(tmp_path / "pages.parquet")
+    rows = _write_pages(pages)
+    out = str(tmp_path / "out")
+
+    run_pipeline(spark, pages, corpus_dir, out, n_buckets=N_BUCKETS,
+                 fail_after_buckets=N_BUCKETS // 2)
+    crashed = _checkpoint(spark, out)
+    docs_buckets = set(_from_docs(spark, out))
+    # the crash run committed exactly its non-empty buckets: no sentinels
+    assert len(docs_buckets) < N_BUCKETS // 2
+    assert set(crashed) == docs_buckets
+    assert all(r["row_count"] > 0 for r in crashed.values())
+
+    run_pipeline(spark, pages, corpus_dir, out, n_buckets=N_BUCKETS)
+    got = _checkpoint(spark, out)
+    want = _from_docs(spark, out)
+    assert set(got) == set(range(N_BUCKETS))
+    assert sum(w["row_count"] for w in want.values()) == len(rows)
+    for b, row in got.items():
+        if b in want:
+            assert {k: row[k] for k in want[b]} == want[b], b
+            assert row["mean_extract_us"] is not None, b
+            assert row["max_extract_us"] is not None, b
+        else:
+            assert row == {"bucket": b, "row_count": 0, "n_urls": 0,
+                           "ts_min": None, "ts_max": None,
+                           "failure_counts": {}, "mean_extract_us": None,
+                           "max_extract_us": None}, b
+
+    # the pinned cases, against the input itself
+    docs = spark.read.parquet(os.path.join(out, "docs"))
+    bucket = dict(docs.select("url", "bucket").collect())
+    recrawled = got[bucket[rows[0]["url"]]]
+    assert recrawled["row_count"] >= 2 and recrawled["n_urls"] == (
+        recrawled["row_count"] - 1)
+    assert recrawled["ts_max"] == _micros(rows[-2]["warc_ts"])
+    stamped = got[bucket[rows[1]["url"]]]
+    assert _micros(FALL_BACK) in (stamped["ts_min"], stamped["ts_max"])
+    assert got[bucket["https://empty.example/none"]]["failure_counts"][
+        "EMPTY_INPUT"] == 1

@@ -3,11 +3,14 @@ Arrow batch (SCALE.md item 2) — the byte gate nulls the payload JVM-side,
 the row comes back failure-coded, the checkpoint histogram counts it, and
 every other page stays byte-identical."""
 
-from pyspark.sql import functions as F
+import os
+
+import pytest
 
 from ocr_processing_pipeline_spark.extractor.core import (
     FailureCode, extract_page)
 from ocr_processing_pipeline_spark.pipeline.extract import extract_docs
+from ocr_processing_pipeline_spark.pipeline.job import run_pipeline
 from ocr_processing_pipeline_spark.pipeline.lineage import (
     checkpoint_rows_with_failures, with_bucket)
 from ocr_processing_pipeline_spark.sources.corpus import make_pages
@@ -51,13 +54,41 @@ def test_oversized_page_quarantined(spark):
 def test_quarantine_counted_in_checkpoint(spark):
     pages, _ = _pages_with_giant(spark)
     docs = with_bucket(extract_docs(pages, max_page_bytes=THRESHOLD), 4)
-    rows = checkpoint_rows_with_failures(docs, "docs").collect()
+    rows = checkpoint_rows_with_failures(docs, "docs")
     counts = {}
     for r in rows:
         for code, n in r.failure_counts.items():
             counts[code] = counts.get(code, 0) + n
     assert counts.get(FailureCode.OVERSIZED) == 1
     assert sum(r.row_count for r in rows) == 21
+
+
+def test_run_pipeline_quarantines_oversized(spark, corpus_dir, tmp_path):
+    """The gate through run_pipeline: the giant page lands in docs as one
+    OVERSIZED_INPUT row, and the checkpoint histogram counts it."""
+    pages, _ = _pages_with_giant(spark)
+    pages_path = str(tmp_path / "pages.parquet")
+    pages.write.parquet(pages_path)
+    out = str(tmp_path / "out")
+    run_pipeline(spark, pages_path, corpus_dir, out, n_buckets=4,
+                 max_page_bytes=THRESHOLD)
+    docs = spark.read.parquet(os.path.join(out, "docs")).collect()
+    oversized = [r.url for r in docs
+                 if r.failure_code == FailureCode.OVERSIZED]
+    assert oversized == ["https://giant.example/oversized"]
+    ckpt = spark.read.parquet(os.path.join(out, "checkpoint")).collect()
+    assert sum(r.failure_counts.get(FailureCode.OVERSIZED, 0)
+               for r in ckpt) == 1
+    assert sum(r.row_count for r in ckpt) == 21
+
+
+@pytest.mark.parametrize("limit", [0, -1])
+def test_gate_rejects_non_positive_threshold(spark, limit):
+    """Only None disables the gate: 0 or a negative threshold raises
+    instead of quarantining every page."""
+    pages, _ = _pages_with_giant(spark)
+    with pytest.raises(ValueError, match="pass None to disable"):
+        extract_docs(pages, max_page_bytes=limit)
 
 
 def test_gate_disabled_extracts_everything(spark):
