@@ -14,9 +14,8 @@ Four families, all shuffle-conscious and expressed with built-in functions
                 join — the verification stage LSH feeds into
 
 Portability note: minhash/fingerprint use md5 (present in both Spark and
-DuckDB) so the driver's DuckDB oracle can replicate them exactly;
-xxhash64 would be faster but is Spark-only. At 100 TB the md5 cost is
-still tiny next to the shuffle it avoids.
+DuckDB) so the DuckDB oracle can replicate them exactly. At
+100 TB the md5 cost is still tiny next to the shuffle it avoids.
 
 Reference analogue: first-seen-wins dedup over a full collection scan
 (Data/Weaviate/deduplicate.py:16-26, F10/A6 in SURVEY §2).
@@ -44,23 +43,9 @@ def normalize_text(col):
     return F.regexp_replace(F.lower(F.trim(col)), r"\s+", " ")
 
 
-def fingerprint(col, hash_impl: str = "md5"):
-    """Content fingerprint of normalized text.
-
-    ``md5`` (default) is the oracle-portable form (DuckDB has md5);
-    ``xxhash64`` is the production form — one 64-bit JVM hash instead of
-    a 128-bit cryptographic digest, Spark-only. Downstream only ever
-    groups/joins on the value, so the two are interchangeable semantically
-    (tests assert identical dedup decisions on planted duplicates).
-
-    Collision bound: 64 bits give ~n²/2^65 expected birthday collisions —
-    negligible below ~10^8 docs but ~10^4 silently-merged pairs at 10^12
-    docs. For exact dedup at that scale keep md5 (128-bit), or pair the
-    xxhash64 value with length(text) as a composite key; use xxhash64
-    alone only for grouping where a rare false merge is tolerable
-    (e.g. MinHash lanes, salting)."""
-    if hash_impl == "xxhash64":
-        return F.xxhash64(normalize_text(col))
+def fingerprint(col):
+    """Content fingerprint of normalized text: md5, the oracle-portable
+    form (DuckDB has md5)."""
     return F.md5(normalize_text(col))
 
 
@@ -120,26 +105,13 @@ def gram_array(toks, n: int):
 
 
 def minhash_signatures(sh: DataFrame,
-                       num_hashes: int = DEFAULT_NUM_HASHES,
-                       hash_impl: str = "md5") -> DataFrame:
-    """(key, h0..h{k-1}): minhash over a seeded hash family.
-
-    ``md5`` (default, oracle-portable): each digest is split into four
-    independent 32-bit (8-hex) lanes, so k hashes cost ceil(k/4) md5
-    evaluations per shingle instead of k — the digests are materialized
-    in an explicit projection so they are computed exactly once.
-    Fixed-width lowercase hex makes string min == numeric min.
-
-    ``xxhash64`` (production, Spark-only): one seeded 64-bit JVM hash per
-    lane — ``xxhash64(seed_i, shingle)`` — no hex round-trip, numeric
-    min. Signatures are longs instead of hex strings; banding concats
-    them identically, so LSH collision behavior is the same family-of-
-    independent-hashes construction either way (tests assert planted
-    duplicates band-collide identically under both)."""
-    if hash_impl == "xxhash64":
-        aggs = [F.min(F.xxhash64(F.lit(i), "shingle")).alias(f"h{i}")
-                for i in range(num_hashes)]
-        return sh.groupBy("key").agg(*aggs)
+                       num_hashes: int = DEFAULT_NUM_HASHES) -> DataFrame:
+    """(key, h0..h{k-1}): minhash over a seeded md5 family (oracle-
+    portable). Each digest is split into four independent 32-bit (8-hex)
+    lanes, so k hashes cost ceil(k/4) md5 evaluations per shingle instead
+    of k — the digests are materialized in an explicit projection so they
+    are computed exactly once. Fixed-width lowercase hex makes string
+    min == numeric min."""
     n_md5 = (num_hashes + 3) // 4
     proj = sh.select(
         "key",
@@ -176,8 +148,7 @@ def band_keys(sig: DataFrame,
 def lsh_candidate_pairs(sig: DataFrame,
                         num_hashes: int = DEFAULT_NUM_HASHES,
                         band_size: int = DEFAULT_BAND_SIZE,
-                        max_bucket_size: int | None = 10000,
-                        checkpoint: bool = True) -> DataFrame:
+                        max_bucket_size: int | None = 10000) -> DataFrame:
     """Banding: keys sharing any band collide; returns (key_a < key_b).
 
     ``max_bucket_size`` drops pathologically hot band buckets before the
@@ -188,16 +159,14 @@ def lsh_candidate_pairs(sig: DataFrame,
     the safety net, and dropped buckets are still co-grouped by any other
     non-hot band they share.
 
-    ``checkpoint`` materializes the capped band table once before the
+    The capped band table is localCheckpointed once before the
     self-join: BOTH join legs otherwise re-derive the whole signature
     aggregation + hot-bucket window from the shingle table (the r7 plan
     audit showed the duplicated Exchange+Window chain; within-JVM A/B
-    at sf0.1: full LSH chain 2.2-2.6 s → 1.6-1.8 s). ``False`` opts out
-    for serving tiers (docs/serving.md lineage-truncation trade).
+    at sf0.1: full LSH chain 2.2-2.6 s → 1.6-1.8 s).
     """
-    banded = band_keys(sig, num_hashes, band_size, max_bucket_size)
-    if checkpoint:
-        banded = banded.localCheckpoint(eager=False)
+    banded = (band_keys(sig, num_hashes, band_size, max_bucket_size)
+              .localCheckpoint(eager=False))
     a = banded.alias("a")
     b = banded.alias("b")
     return (a.join(b, "band")
@@ -209,8 +178,7 @@ def lsh_candidate_pairs(sig: DataFrame,
 
 def jaccard_pairs(sh: DataFrame, min_jaccard: float,
                   candidates: DataFrame | None = None,
-                  max_doc_freq: int | None = None,
-                  checkpoint: bool = True) -> DataFrame:
+                  max_doc_freq: int | None = None) -> DataFrame:
     """Verified n-gram Jaccard over an inverted-index join.
 
     With ``candidates`` (from LSH) the join is restricted to candidate
@@ -236,11 +204,6 @@ def jaccard_pairs(sh: DataFrame, min_jaccard: float,
     shingles ≈ 3e-2 per corpus... per PAIR it is 2^-64; the expected
     effect on any count is negligible and the DuckDB oracle run stays
     green on the test corpora).
-
-    ``checkpoint=False`` opts out of the shared-index localCheckpoints
-    for serving / long-lived drivers (docs/serving.md has the
-    lineage-truncation / GC-lifetime trade); the one-shot batch default
-    keeps the single-derivation plan.
     """
     # materialize the hashed inverted index ONCE, BEFORE any consumer:
     # it feeds the df-prune aggregation, the sizes leg, and BOTH sides
@@ -256,8 +219,7 @@ def jaccard_pairs(sh: DataFrame, min_jaccard: float,
     # (32.9 s vs 54.9 s for the full chain) — at size, the semi-join's
     # sort/shuffle over a materialized compact table beats re-deriving
     # the hashed projection inside the join stage. Scale wins.
-    if checkpoint:
-        sh = sh.localCheckpoint(eager=False)
+    sh = sh.localCheckpoint(eager=False)
     restricted = False
     if max_doc_freq is not None:
         hot = (sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
@@ -273,7 +235,7 @@ def jaccard_pairs(sh: DataFrame, min_jaccard: float,
                      .distinct())
         sh = sh.join(cand_keys, "key", "left_semi")
         restricted = True
-    if restricted and checkpoint:
+    if restricted:
         # cut the restriction joins too, or each of the three downstream
         # legs replays them against the first checkpoint
         sh = sh.localCheckpoint(eager=False)
@@ -303,9 +265,7 @@ def minhash_lsh_dedup(df: DataFrame, text_col: str, key_col: str,
                       n: int = 3, min_jaccard: float = 0.8,
                       num_hashes: int = DEFAULT_NUM_HASHES,
                       band_size: int = DEFAULT_BAND_SIZE,
-                      enforce_unique_keys: bool = True,
-                      hash_impl: str = "md5",
-                      checkpoint: bool = True) -> DataFrame:
+                      enforce_unique_keys: bool = True) -> DataFrame:
     """Full near-dup pipeline: shingle → minhash → LSH → verify.
 
     ``enforce_unique_keys`` drops duplicate-key rows up front (shingles/
@@ -315,8 +275,7 @@ def minhash_lsh_dedup(df: DataFrame, text_col: str, key_col: str,
     same corpus always dedup identically. One shuffle of the input; a
     pipeline that already ran ``exact_dedup`` (the recommended 100 TB
     order — collapse exact dups BEFORE the shingle explode) can pass
-    False to skip it. ``checkpoint=False`` opts out of the shared-leg
-    localCheckpoints for serving tiers (docs/serving.md).
+    False to skip it.
     """
     if enforce_unique_keys:
         w = Window.partitionBy(key_col).orderBy(fingerprint(F.col(text_col)))
@@ -324,21 +283,16 @@ def minhash_lsh_dedup(df: DataFrame, text_col: str, key_col: str,
               .filter(F.col("_rn") == 1).drop("_rn"))
     # one shingle explode for the whole chain: the signature leg and the
     # verify leg otherwise each re-run it from the corpus scan
-    sh = shingles(df, text_col, key_col, n=n)
-    if checkpoint:
-        sh = sh.localCheckpoint(eager=False)
-    cands = lsh_candidate_pairs(
-        minhash_signatures(sh, num_hashes, hash_impl=hash_impl),
-        num_hashes, band_size, checkpoint=checkpoint)
+    sh = shingles(df, text_col, key_col, n=n).localCheckpoint(eager=False)
+    cands = lsh_candidate_pairs(minhash_signatures(sh, num_hashes),
+                                num_hashes, band_size)
     # the candidate pair set feeds TWO legs inside jaccard_pairs (the
     # key restriction and the pair semi-join); without a checkpoint each
     # re-runs the band self-join + pair distinct — invisible at sf0.1
     # (256 pairs) but a 125 s vs 72 s difference at a 50k-doc dense-
     # cluster stress tier where the candidate set is millions of rows
-    if checkpoint:
-        cands = cands.localCheckpoint(eager=False)
-    return jaccard_pairs(sh, min_jaccard, candidates=cands,
-                         checkpoint=checkpoint)
+    cands = cands.localCheckpoint(eager=False)
+    return jaccard_pairs(sh, min_jaccard, candidates=cands)
 
 
 def incremental_dedup(new_df: DataFrame, existing_df: DataFrame,
@@ -348,8 +302,8 @@ def incremental_dedup(new_df: DataFrame, existing_df: DataFrame,
                       band_size: int = DEFAULT_BAND_SIZE,
                       max_bucket_size: int | None = 10000,
                       existing_fingerprints: DataFrame | None = None,
-                      existing_band_index: DataFrame | None = None,
-                      checkpoint: bool = True) -> DataFrame:
+                      existing_band_index: DataFrame | None = None
+                      ) -> DataFrame:
     """Cross-snapshot dedup: decide every NEW doc against an EXISTING
     corpus — the production shape for a training-data pipeline ingesting
     crawl snapshot N+1 against the corpus it already holds (reference
@@ -382,11 +336,9 @@ def incremental_dedup(new_df: DataFrame, existing_df: DataFrame,
     the corpus". ``existing_fingerprints`` (key, fp) and
     ``existing_band_index`` (key, band) default to being derived from
     ``existing_df`` when not supplied (small-data / oracle path)."""
-    def _ckpt(df):
-        return df.localCheckpoint(eager=False) if checkpoint else df
-
-    fp_new = _ckpt(new_df.select(F.col(key_col).alias("key"),
-                                 fingerprint(F.col(text_col)).alias("fp")))
+    fp_new = (new_df.select(F.col(key_col).alias("key"),
+                            fingerprint(F.col(text_col)).alias("fp"))
+              .localCheckpoint(eager=False))
     if existing_fingerprints is None:
         existing_fingerprints = existing_df.select(
             F.col(key_col).alias("key"),
@@ -401,7 +353,8 @@ def incremental_dedup(new_df: DataFrame, existing_df: DataFrame,
                        "left_semi")
 
     # probe: bands of the non-exact new docs vs the existing band index
-    sh_new = _ckpt(shingles(rest, text_col, key_col, n=n))
+    sh_new = shingles(rest, text_col, key_col, n=n).localCheckpoint(
+        eager=False)
     probe = band_keys(minhash_signatures(sh_new, num_hashes),
                       num_hashes, band_size)
     if existing_band_index is None:
@@ -409,24 +362,25 @@ def incremental_dedup(new_df: DataFrame, existing_df: DataFrame,
             minhash_signatures(shingles(existing_df, text_col, key_col,
                                         n=n), num_hashes),
             num_hashes, band_size, max_bucket_size)
-    cands = _ckpt(
-        probe.join(existing_band_index.withColumnRenamed("key", "old_key"),
+    cands = (probe
+             .join(existing_band_index.withColumnRenamed("key", "old_key"),
                    "band")
-        .select(F.col("key").alias("new_key"), "old_key")
-        .distinct())
+             .select(F.col("key").alias("new_key"), "old_key")
+             .distinct()
+             .localCheckpoint(eager=False))
 
     # verify: exact Jaccard over the candidate keys only (8-byte hashed
     # shingle join keys, same trade as jaccard_pairs)
-    sh_new_c = _ckpt(
-        sh_new.join(cands.select(F.col("new_key").alias("key")).distinct(),
-                    "key", "left_semi")
-        .select("key", F.xxhash64("shingle").alias("shingle")))
+    sh_new_c = (sh_new.join(cands.select(F.col("new_key").alias("key"))
+                            .distinct(), "key", "left_semi")
+                .select("key", F.xxhash64("shingle").alias("shingle"))
+                .localCheckpoint(eager=False))
     old_keys = cands.select("old_key").distinct()
     old_cand_docs = existing_df.join(
         old_keys, existing_df[key_col] == old_keys["old_key"], "left_semi")
-    sh_old_c = _ckpt(
-        shingles(old_cand_docs, text_col, key_col, n=n)
-        .select("key", F.xxhash64("shingle").alias("shingle")))
+    sh_old_c = (shingles(old_cand_docs, text_col, key_col, n=n)
+                .select("key", F.xxhash64("shingle").alias("shingle"))
+                .localCheckpoint(eager=False))
     sizes_n = sh_new_c.groupBy("key").agg(F.count(F.lit(1)).alias("n_a"))
     sizes_o = sh_old_c.groupBy("key").agg(F.count(F.lit(1)).alias("n_b"))
     shared = (sh_new_c.alias("a").join(sh_old_c.alias("b"), "shingle")
@@ -482,8 +436,7 @@ def snapshot_admission(new_df: DataFrame, verdicts: DataFrame,
                        decisions: DataFrame, text_col: str, key_col: str,
                        *, n: int = 3, min_jaccard: float = 0.5,
                        num_hashes: int = DEFAULT_NUM_HASHES,
-                       band_size: int = DEFAULT_BAND_SIZE,
-                       checkpoint: bool = True) -> DataFrame:
+                       band_size: int = DEFAULT_BAND_SIZE) -> DataFrame:
     """Full per-crawl-drop admission decision: ONE row per incoming doc.
 
     The production composition a training-data team runs when crawl
@@ -521,9 +474,7 @@ def snapshot_admission(new_df: DataFrame, verdicts: DataFrame,
     caller). At 10^12 docs every stage is bounded: the existing corpus
     is only ever PROBED through its materialized fingerprint/band
     artifacts (inside ``verdicts``), the decisions remap is a broadcast,
-    and the LSH self-join sees only the cross-unique remainder.
-    ``checkpoint=False`` opts out of every shared-leg localCheckpoint in
-    the composition for serving tiers (docs/serving.md)."""
+    and the LSH self-join sees only the cross-unique remainder."""
     resolved = resolve_canonicals(verdicts, decisions)
     cross = resolved.filter(F.col("match_kind") != "unique")
     uniq_keys = (resolved.filter(F.col("match_kind") == "unique")
@@ -533,9 +484,8 @@ def snapshot_admission(new_df: DataFrame, verdicts: DataFrame,
     # Catalyst re-derives the semi-join + verdict resolution per leg
     # (docs/serving.md — batch-side lineage-reuse rule)
     uniq_docs = (new_df.select(key_col, text_col)
-                 .join(uniq_keys, key_col, "left_semi"))
-    if checkpoint:
-        uniq_docs = uniq_docs.localCheckpoint(eager=False)
+                 .join(uniq_keys, key_col, "left_semi")
+                 .localCheckpoint(eager=False))
     fp = uniq_docs.select(F.col(key_col).alias("key"),
                           fingerprint(F.col(text_col)).alias("fp"))
     fp_canon = fp.groupBy("fp").agg(F.min("key").alias("canonical"))
@@ -544,9 +494,8 @@ def snapshot_admission(new_df: DataFrame, verdicts: DataFrame,
     exact_new = (fp.join(fp_canon, "fp")
                  .filter(F.col("key") != F.col("canonical"))
                  .select("key", "canonical",
-                         F.lit("exact_new").alias("match_kind")))
-    if checkpoint:
-        exact_new = exact_new.localCheckpoint(eager=False)
+                         F.lit("exact_new").alias("match_kind"))
+                 .localCheckpoint(eager=False))
     rest = uniq_docs.join(
         exact_new.select(F.col("key").alias(key_col)), key_col,
         "left_anti")
@@ -555,8 +504,7 @@ def snapshot_admission(new_df: DataFrame, verdicts: DataFrame,
     pairs = minhash_lsh_dedup(rest, text_col, key_col, n=n,
                               min_jaccard=min_jaccard,
                               num_hashes=num_hashes, band_size=band_size,
-                              enforce_unique_keys=False,
-                              checkpoint=checkpoint)
+                              enforce_unique_keys=False)
     near_new = (connected_components(pairs)
                 .filter(F.col("key") != F.col("component"))
                 .select("key", F.col("component").alias("canonical"),
@@ -622,8 +570,7 @@ def simhash(df: DataFrame, text_col: str, key_col: str) -> DataFrame:
 
 def simhash_candidates(sig: DataFrame, n_bands: int = 4,
                        max_bucket_size: int | None = 10000,
-                       max_hamming: int | None = None,
-                       checkpoint: bool = True) -> DataFrame:
+                       max_hamming: int | None = None) -> DataFrame:
     """Banded hamming candidates with a recall GUARANTEE.
 
     The signature is split into ``n_bands`` disjoint bit bands; keys
@@ -643,12 +590,11 @@ def simhash_candidates(sig: DataFrame, n_bands: int = 4,
     rows at sf0.1). Callers wanting the full candidate set with
     distances (recall studies) leave it None.
 
-    ``checkpoint`` materializes the (key, simhash) signature table once
-    (it feeds the group aggregate AND both expansion legs — the SimHash
-    fold is an INTERPRETED higher-order aggregate, the most expensive
-    kind of projection to compute three times). Same shared-leg
-    rationale as jaccard_pairs / bm25_scores; ``False`` opts out for
-    serving (docs/serving.md has the lineage-truncation trade).
+    The (key, simhash) signature table is localCheckpointed once (it
+    feeds the group aggregate AND both expansion legs — the SimHash fold
+    is an INTERPRETED higher-order aggregate, the most expensive kind of
+    projection to compute three times). Same shared-leg rationale as
+    jaccard_pairs / bm25_scores.
 
     The self-join and the pair dedup run in SIGNATURE space, not doc
     space (guide §2.3/§8: decide with small rows, expand once): docs
@@ -672,8 +618,7 @@ def simhash_candidates(sig: DataFrame, n_bands: int = 4,
     package passes unique keys; deduplicate ``sig`` on ``key`` first
     when the input may repeat them.
     """
-    if checkpoint:
-        sig = sig.localCheckpoint(eager=False)
+    sig = sig.localCheckpoint(eager=False)
     groups = sig.groupBy("simhash").agg(F.count(F.lit(1)).alias("_gn"))
     band_bits = SIMHASH_BITS // n_bands
     mask = (1 << band_bits) - 1
@@ -689,8 +634,7 @@ def simhash_candidates(sig: DataFrame, n_bands: int = 4,
                   .withColumn("_bn", F.sum("_gn").over(w))
                   .filter(F.col("_bn") <= max_bucket_size)
                   .drop("_bn"))
-    if checkpoint:
-        banded = banded.localCheckpoint(eager=False)
+    banded = banded.localCheckpoint(eager=False)
     a, b = banded.alias("a"), banded.alias("b")
     # signature pairs sharing any band; a signature pairs with ITSELF
     # only when its group holds ≥ 2 docs (the hamming-0 doc pairs).

@@ -17,13 +17,15 @@ Scale design (the 100 TB contract):
   `.first()`) in the plan;
 - term document-frequencies are a tiny (≤ |query|) broadcast.
 
-BM25 parameters k1=1.2, b=0.75 (Robertson et al., the standard defaults).
+BM25 parameters k1=1.2, b=0.75 (Robertson et al., the standard defaults);
+scores are rounded to ``SCORE_DECIMALS`` places so ties and top-k order
+are stable across runs and against the DuckDB oracle.
 
 Shared projections here are localCheckpointed per query — the right
 shape for one-shot batch jobs, with a GC-lifetime and lineage-truncation
 trade for long-lived/serving drivers: see docs/serving.md for the full
-rule (drop refs / gc.collect in a long JVM; materialize to a table and
-pass checkpoint=False in a serving tier).
+rule (drop refs / gc.collect in a long JVM; a serving tier materializes
+the shared projection to a table and queries read that).
 """
 
 from __future__ import annotations
@@ -33,6 +35,7 @@ from pyspark.sql import functions as F
 
 BM25_K1 = 1.2
 BM25_B = 0.75
+SCORE_DECIMALS = 4
 
 
 def _tok_array(text_col):
@@ -43,9 +46,19 @@ def _tok_array(text_col):
         lambda t: F.length(t) > 0)
 
 
+def _bm25_weight(n_col: str, len_col: str):
+    """Per-(doc, term) BM25 weight: idf × saturated tf. Reads ``df``,
+    ``tf`` and ``avg_len`` plus the given corpus-size and doc-length
+    columns; doc-level and chunk-level search differ only in those two."""
+    idf = F.log(
+        (F.col(n_col) - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0)
+    return (idf * (F.col("tf") * (BM25_K1 + 1))
+            / (F.col("tf") + BM25_K1
+               * (1 - BM25_B + BM25_B * F.col(len_col) / F.col("avg_len"))))
+
+
 def bm25_scores(df: DataFrame, text_col: str, key_col: str,
-                query_terms: list[str], round_to: int = 4,
-                checkpoint: bool = True) -> DataFrame:
+                query_terms: list[str]) -> DataFrame:
     """(key, bm25) for every doc containing ≥1 query term. Single corpus
     pass; see module docstring for the scale contract.
 
@@ -55,19 +68,13 @@ def bm25_scores(df: DataFrame, text_col: str, key_col: str,
     FileScan — 3 full corpus reads for one query. Materializing the
     projection (a few bytes per doc — no text) makes the physical plan
     scan the corpus exactly ONCE; tests/test_plans.py counts the scans.
-
-    ``checkpoint=False`` opts out for serving / long-lived drivers that
-    would rather re-scan than truncate lineage or pin executor blocks
-    until Python GC (module docstring); the one-shot batch default keeps
-    the single-scan plan.
     """
     terms = [t.lower() for t in query_terms]
     toks = _tok_array(text_col)
     base = df.select(F.col(key_col).alias("key"),
                      F.size(toks).alias("doc_len"),
                      F.filter(toks, lambda t: t.isin(terms)).alias("hits"))
-    if checkpoint:
-        base = base.localCheckpoint(eager=False)
+    base = base.localCheckpoint(eager=False)
     stats = base.agg(
         F.count(F.lit(1)).cast("double").alias("n_docs"),
         F.avg(F.when(F.col("doc_len") > 0, F.col("doc_len")))
@@ -78,23 +85,17 @@ def bm25_scores(df: DataFrame, text_col: str, key_col: str,
           .agg(F.count(F.lit(1)).alias("tf"),
                F.max("doc_len").alias("doc_len")))
     dfc = tf.groupBy("term").agg(F.countDistinct("key").alias("df"))
-    idf = F.log(
-        (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0)
-    w = (idf * (F.col("tf") * (BM25_K1 + 1))
-         / (F.col("tf") + BM25_K1
-            * (1 - BM25_B + BM25_B * F.col("doc_len") / F.col("avg_len"))))
     return (tf.join(F.broadcast(dfc), "term")
             .crossJoin(F.broadcast(stats))
-            .withColumn("w", w)
+            .withColumn("w", _bm25_weight("n_docs", "doc_len"))
             .groupBy("key")
-            .agg(F.round(F.sum("w"), round_to).alias("bm25")))
+            .agg(F.round(F.sum("w"), SCORE_DECIMALS).alias("bm25")))
 
 
 def bm25_topk(df: DataFrame, text_col: str, key_col: str,
-              query_terms: list[str], k: int = 10,
-              round_to: int = 4) -> DataFrame:
+              query_terms: list[str], k: int = 10) -> DataFrame:
     """Exact BM25 top-k for one query; deterministic tie-break on key."""
-    return (bm25_scores(df, text_col, key_col, query_terms, round_to)
+    return (bm25_scores(df, text_col, key_col, query_terms)
             .orderBy(F.desc("bm25"), F.asc("key"))
             .limit(k))
 
@@ -154,8 +155,7 @@ def hybrid_topk(df: DataFrame, text_col: str, key_col: str,
 
 def layered_topk(df: DataFrame, text_col: str, key_col: str,
                  query_terms: list[str], doc_k: int = 20, k: int = 10,
-                 chunk_tokens: int = 64, round_to: int = 4,
-                 checkpoint: bool = True) -> DataFrame:
+                 chunk_tokens: int = 64) -> DataFrame:
     """Coarse-to-fine layered search (Query/layered_search.py:74-104:
     doc-level top-k → Filter.by_property('doc_id').contains_any →
     chunk-level search within the survivors).
@@ -185,10 +185,7 @@ def layered_topk(df: DataFrame, text_col: str, key_col: str,
     # leg; without the checkpoint each re-runs the doc-level top-k +
     # semi-join + explode (r7 plan audit: documents scanned 4x in one
     # query; checkpointed: 1.4-1.6 s -> 1.0-1.2 s, output identical).
-    # ``checkpoint=False`` opts out for serving tiers (docs/serving.md)
-    # and lets the plan tests see the pre-checkpoint join shape.
-    if checkpoint:
-        tok = tok.localCheckpoint(eager=False)
+    tok = tok.localCheckpoint(eager=False)
     clen = (tok.groupBy("key", "chunk_no")
             .agg(F.count(F.lit(1)).alias("chunk_len")))
     ctf = (tok.filter(F.col("tok").isin(terms))
@@ -199,21 +196,15 @@ def layered_topk(df: DataFrame, text_col: str, key_col: str,
         F.avg("chunk_len").alias("avg_len"))
     cdf = ctf.groupBy("term").agg(
         F.countDistinct("key", "chunk_no").alias("df"))
-    idf = F.log(
-        (F.col("n_chunks") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0)
-    w = (idf * (F.col("tf") * (BM25_K1 + 1))
-         / (F.col("tf") + BM25_K1
-            * (1 - BM25_B
-               + BM25_B * F.col("chunk_len") / F.col("avg_len"))))
     return (ctf.join(clen, ["key", "chunk_no"])
             .join(F.broadcast(cdf), "term")
             .crossJoin(F.broadcast(stats))
-            .withColumn("w", w)
+            .withColumn("w", _bm25_weight("n_chunks", "chunk_len"))
             .groupBy("key", "chunk_no")
-            .agg(F.round(F.sum("w"), round_to).alias("score"))
+            .agg(F.round(F.sum("w"), SCORE_DECIMALS).alias("score"))
             .orderBy(F.desc("score"), F.asc("key"), F.asc("chunk_no"))
             .limit(k))
 
 
 __all__ = ["bm25_scores", "bm25_topk", "hybrid_topk", "layered_topk",
-           "BM25_K1", "BM25_B"]
+           "BM25_K1", "BM25_B", "SCORE_DECIMALS"]

@@ -211,8 +211,7 @@ def label_centroids(df: DataFrame, vec_col: str, label_col: str,
 
 def near_dup_pairs_by_label(df: DataFrame, vec_col: str, label_col: str,
                             key_col: str, min_cos: float = 0.3,
-                            max_label_size: int | None = 10000,
-                            checkpoint: bool = True) -> DataFrame:
+                            max_label_size: int | None = 10000) -> DataFrame:
     """Embedding-cosine near-dup pairs, blocked by label.
 
     Blocking avoids the n² cross join, but one skewed label would still go
@@ -241,9 +240,8 @@ def near_dup_pairs_by_label(df: DataFrame, vec_col: str, label_col: str,
     # ...and materialize that projection once: BOTH self-join legs
     # otherwise re-run the hot-label aggregate + the interpreted norm
     # fold (r7 plan audit: 4 scans of the embeddings table in one
-    # query). ``checkpoint=False`` opts out for serving tiers.
-    if checkpoint:
-        ed = ed.localCheckpoint(eager=False)
+    # query).
+    ed = ed.localCheckpoint(eager=False)
     a = ed.select("label", F.col("key").alias("key_a"),
                   F.col("vec").alias("va"), F.col("nrm").alias("na"))
     b = ed.select("label", F.col("key").alias("key_b"),

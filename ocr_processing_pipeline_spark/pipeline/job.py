@@ -39,6 +39,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import shutil
 import time
 
 import pandas as pd
@@ -68,6 +69,9 @@ def run_pipeline(spark: SparkSession, pages_path: str, gazetteers_dir: str,
     The counts are cumulative: the rows each output table holds after this
     run, summed from parquet footers. A run that processes no pages
     returns the skip marker with zero counts instead.
+
+    ``resume=False`` deletes the checkpoint and reprocesses every bucket;
+    the data tables are overwritten bucket by bucket, never duplicated.
 
     ``fail_after_buckets`` processes only the first k uncommitted bucket
     ids — chosen on the driver, with no scan, so they may hold no pages
@@ -104,8 +108,14 @@ def run_pipeline(spark: SparkSession, pages_path: str, gazetteers_dir: str,
     # a 100 TB no-op resume must not touch the 100 TB. (Empty buckets
     # carry sentinel rows — see lineage.checkpoint_rows_with_failures —
     # so this also closes for corpora that leave buckets empty.)
-    committed = (lineage.committed_bucket_ids(checkpoint_path, "docs")
-                 if resume else set())
+    if resume:
+        committed = lineage.committed_bucket_ids(checkpoint_path, "docs")
+    else:
+        # before any data write: a crash mid-run then resumes over
+        # every bucket, and this run's rows are the only ones
+        if os.path.exists(checkpoint_path):
+            shutil.rmtree(checkpoint_path)
+        committed = set()
     run_buckets = sorted(set(range(n_buckets)) - committed)[
         :fail_after_buckets]
     if not run_buckets:

@@ -78,8 +78,6 @@ def _ts(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     bit-identical either way.
     """
     df = _t(spark, sf_dir, name)
-    if os.environ.get("SPARK_GRAFT_SPREAD", "1") == "0":
-        return df
     target = spark.sparkContext.defaultParallelism
     key = (os.path.abspath(sf_dir), name, target)
     n = _SCAN_PARTS_MEMO.get(key)

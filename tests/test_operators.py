@@ -281,37 +281,6 @@ def test_minhash_lsh_dedup_enforces_unique_keys(spark):
     assert sorted(map(key, out)) == sorted(map(key, clean))
 
 
-def test_hash_impl_band_collision_equivalence(spark):
-    """Planted near-dups must band-collide identically under the md5
-    (oracle) and xxhash64 (production) hash families, and exact
-    duplicates must fingerprint identically under both."""
-    from ocr_processing_pipeline_spark.operators.dedup import (
-        fingerprint, lsh_candidate_pairs, minhash_signatures, shingles)
-    from pyspark.sql import functions as F
-    base = ("the quick brown fox jumps over the lazy dog and runs far "
-            "away into the deep green forest tonight")
-    rows = [(1, base), (2, base),                      # exact dup pair
-            (3, base.replace("tonight", "today")),     # near dup of 1/2
-            (4, "completely different text about spark shuffles and "
-                "partitions with nothing shared at all here")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    sh = shingles(df, "text", "doc_id", n=3)
-    pairs = {}
-    for impl in ("md5", "xxhash64"):
-        sig = minhash_signatures(sh, num_hashes=4, hash_impl=impl)
-        got = lsh_candidate_pairs(sig, 4, 2)
-        pairs[impl] = {(r.key_a, r.key_b) for r in got.collect()}
-        # exact dups always share every band
-        assert (1, 2) in pairs[impl]
-    assert pairs["md5"] == pairs["xxhash64"]
-    # fingerprints: same equality classes under both impls
-    for impl in ("md5", "xxhash64"):
-        fps = {r.doc_id: r.fp for r in df.select(
-            "doc_id", fingerprint(F.col("text"), hash_impl=impl)
-            .alias("fp")).collect()}
-        assert fps[1] == fps[2] and fps[1] != fps[3] and fps[1] != fps[4]
-
-
 def test_connected_components_converges_at_exact_cap(spark):
     """diameter == max_iter must converge (the loop runs one extra
     zero-change proof round), not be mistaken for a cap exit."""

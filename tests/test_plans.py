@@ -110,20 +110,33 @@ def test_exact_dedup_single_shuffle(spark):
 
 def test_layered_search_broadcast_semi_join(spark):
     """Coarse-to-fine: the doc top-k restricts the corpus via a broadcast
-    LEFT SEMI join BEFORE any chunk explode. The registered query
-    checkpoints the chunk-token projection (its two consumer legs would
-    otherwise re-run the top-k + semi-join + explode each — r7), which
-    hides the join inside the materialized prefix; assert the join shape
-    on the checkpoint-free operator and the shared-leg shape (zero
-    parquet scans, checkpoint reads) on the registered query."""
+    LEFT SEMI join BEFORE any chunk explode. The operator checkpoints
+    the chunk-token projection (its two consumer legs would otherwise
+    re-run the top-k + semi-join + explode each — r7), which hides the
+    join inside the materialized prefix; assert the join shape on the
+    frame handed to that last localCheckpoint, and the shared-leg shape
+    (zero parquet scans, checkpoint reads) on the registered query."""
     import os
 
     from ocr_processing_pipeline_spark.operators.search import layered_topk
     d = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
-    p = plan(layered_topk(d, "text", "doc_id",
-                          ["spark", "query", "window"],
-                          doc_k=20, k=10, chunk_tokens=64,
-                          checkpoint=False))
+    # type(d), not pyspark.sql.DataFrame: the concrete class differs
+    # between pyspark versions (classic vs connect)
+    cls = type(d)
+    checkpoint = cls.localCheckpoint
+    handed = []
+
+    def capture(self, *args, **kwargs):
+        handed.append(self)
+        return checkpoint(self, *args, **kwargs)
+
+    cls.localCheckpoint = capture
+    try:
+        layered_topk(d, "text", "doc_id", ["spark", "query", "window"],
+                     doc_k=20, k=10, chunk_tokens=64)
+    finally:
+        cls.localCheckpoint = checkpoint
+    p = plan(handed[-1])
     assert "LeftSemi" in p
     assert "BroadcastHashJoin" in p or "BroadcastNestedLoopJoin" in p
     preg = plan(QUERIES["layered_search"].fn(spark, SF_DIR))

@@ -56,7 +56,9 @@ def test_with_mentions_table(spark, corpus_dir, tmp_path):
 
 def test_idempotent_rerun_no_resume(spark, corpus_dir, tmp_path):
     """Force-reprocessing everything must not duplicate rows (dynamic
-    partition overwrite) — idempotent re-append guard, SURVEY §7.6."""
+    partition overwrite) — idempotent re-append guard, SURVEY §7.6 — and
+    must leave exactly one checkpoint row per bucket: resume=False
+    forgets the old checkpoint instead of appending to it."""
     out = str(tmp_path / "out2")
     pages_path = f"{corpus_dir}/pages.parquet"
     run_pipeline(spark, pages_path, corpus_dir, out, n_buckets=N_BUCKETS)
@@ -66,6 +68,9 @@ def test_idempotent_rerun_no_resume(spark, corpus_dir, tmp_path):
     n_pages = spark.read.parquet(pages_path).count()
     assert docs.count() == n_pages
     assert docs.groupBy("url").count().filter(F.col("count") > 1).count() == 0
+    ckpt = spark.read.parquet(os.path.join(out, "checkpoint")).collect()
+    assert sorted(r.bucket for r in ckpt) == list(range(N_BUCKETS))
+    assert sum(r.row_count for r in ckpt) == n_pages
 
 
 def test_resume_rejects_mismatched_n_buckets(spark, corpus_dir, tmp_path):

@@ -1,7 +1,7 @@
 """Shared pre-warm for the r7 measurement tools: materialize the same
 five artifact tables bench.py warms, so isolated timings match the
-in-bench timed region. One copy — bench_extra and ab_spread both import
-it (a sixth artifact added here warms both tools identically)."""
+in-bench timed region. Kept as its own module so tools/bench_extra.py
+warms exactly what bench.py does (a sixth artifact is added here)."""
 
 from __future__ import annotations
 
