@@ -72,6 +72,9 @@ def run_pipeline(spark: SparkSession, pages_path: str, gazetteers_dir: str,
 
     ``resume=False`` deletes the checkpoint and reprocesses every bucket;
     the data tables are overwritten bucket by bucket, never duplicated.
+    A resume whose pages or gazetteers changed since the output was
+    started raises ValueError (checkpoint_meta.json records both);
+    ``resume=False`` records the new ones.
 
     ``fail_after_buckets`` processes only the first k uncommitted bucket
     ids — chosen on the driver, with no scan, so they may hold no pages
@@ -89,6 +92,7 @@ def run_pipeline(spark: SparkSession, pages_path: str, gazetteers_dir: str,
     # assumes (e.g. old 32 → new 128 would reprocess already-committed
     # pages into different bucket partitions: duplicates). A mismatch
     # must fail loudly, never mis-decide.
+    meta = {}
     if os.path.exists(meta_path):
         with open(meta_path) as fh:
             meta = json.load(fh)
@@ -123,27 +127,44 @@ def run_pipeline(spark: SparkSession, pages_path: str, gazetteers_dir: str,
 
     # schema inferred on purpose: a malformed pages input fails loudly
     pages = spark.read.parquet(pages_path)
+    gaz_paths = [os.path.join(gazetteers_dir, f"{n}.parquet")
+                 for n in ("persons", "places", "orgs")]
 
-    # record the n_buckets contract BEFORE the first data write: docs
-    # parquet lands before the checkpoint rows, so a crash mid-run must
-    # already leave the meta guard in place — otherwise a later resume
-    # with a different n_buckets would pass the check above and
-    # re-bucket a half-written output.
-    if not os.path.exists(meta_path):
+    # input contract: the committed buckets were computed from the pages
+    # and gazetteers recorded in the meta file. A resume over changed
+    # input would mix two generations in one output, so it must fail
+    # loudly; resume=False starts over and records the new values. A meta
+    # file written before these keys existed adopts them. Checked only
+    # here, after the no-op return, which must never touch the input.
+    inputs = {"pages": lineage.pages_fingerprint(pages_path),
+              "gazetteers": ner_mod.gazetteer_digest(*gaz_paths)}
+    for name, value in inputs.items():
+        recorded = meta.get(f"{name}_fingerprint", value)
+        if resume and recorded != value:
+            raise ValueError(
+                f"the {name} input changed since the checkpoint at "
+                f"{out_dir} was written (fingerprint {recorded[:12]} → "
+                f"{value[:12]}); resuming would mix outputs of both. "
+                "Rerun with resume=False (or start a fresh out dir).")
+
+    # record the contract BEFORE the first data write: docs parquet
+    # lands before the checkpoint rows, so a crash mid-run must already
+    # leave the meta guard in place — otherwise a later resume with a
+    # different n_buckets or input would pass the checks above and mix
+    # it into a half-written output.
+    new_meta = {"n_buckets": n_buckets,
+                **{f"{k}_fingerprint": v for k, v in inputs.items()}}
+    if meta != new_meta:
         os.makedirs(out_dir, exist_ok=True)
         with open(meta_path, "w") as fh:
-            json.dump({"n_buckets": n_buckets}, fh)
+            json.dump(new_meta, fh)
 
     # ONE shuffle: uniform url-hash bucket repartition (skew-proof).
     todo = (lineage.with_bucket(pages, n_buckets)
             .filter(F.col("bucket").isin(run_buckets))
             .repartition(min(n_buckets, len(run_buckets)), "bucket"))
 
-    gaz_bc = ner_mod.load_gazetteers(
-        spark,
-        os.path.join(gazetteers_dir, "persons.parquet"),
-        os.path.join(gazetteers_dir, "places.parquet"),
-        os.path.join(gazetteers_dir, "orgs.parquet"))
+    gaz_bc = ner_mod.load_gazetteers(spark, *gaz_paths)
 
     pruned = extract_mod.gate_pages(todo, max_page_bytes).withColumn(
         "doc_id", F.xxhash64("url"))

@@ -39,6 +39,7 @@ parquet, written directly: the image has no Iceberg jars.
 
 from __future__ import annotations
 
+import hashlib
 import os
 from collections.abc import Iterable
 
@@ -65,6 +66,23 @@ def with_bucket(df: DataFrame, n_buckets: int,
     return df.withColumn(
         "bucket", F.pmod(F.xxhash64(F.col(url_col)), F.lit(n_buckets))
         .cast("int"))
+
+
+def pages_fingerprint(path: str) -> str:
+    """sha256 of the sorted (relative path, size) pairs of the data files
+    under ``path`` (a file is its own single entry). Names starting with
+    ``_`` or ``.`` (Spark's markers and checksums) are skipped, as Spark's
+    reader skips them. Lists files only: no data or footer is read."""
+    if os.path.isfile(path):
+        entries = [("", os.path.getsize(path))]
+    else:
+        entries = []
+        for d, dirs, names in os.walk(path):
+            dirs[:] = [n for n in dirs if n[0] not in "_."]
+            entries += [(os.path.relpath(os.path.join(d, n), path),
+                         os.path.getsize(os.path.join(d, n)))
+                        for n in names if n[0] not in "_."]
+    return hashlib.sha256(repr(sorted(entries)).encode()).hexdigest()
 
 
 def committed_buckets(spark: SparkSession, checkpoint_path: str,

@@ -2632,38 +2632,18 @@ def pipeline_chunks(spark, sf_dir):
     return chunk_docs(extract_docs(pages))
 
 
-_GAZ_BC_CACHE: dict = {}
-
-
-def _gazetteers_for(spark, corpus: str):
-    """One gazetteer broadcast per corpus dir per session (a dimension
-    table loads once; re-collecting + re-broadcasting per query run only
-    measures the loader). Keyed on applicationId, not id(sc): a stopped
-    context's id() can be reused by a new one at the same address and
-    would serve a dead broadcast."""
-    key = (spark.sparkContext.applicationId, corpus)
-    bc = _GAZ_BC_CACHE.get(key)
-    if bc is None:
-        from ..pipeline.ner import load_gazetteers
-        bc = load_gazetteers(spark,
-                             os.path.join(corpus, "persons.parquet"),
-                             os.path.join(corpus, "places.parquet"),
-                             os.path.join(corpus, "orgs.parquet"))
-        _GAZ_BC_CACHE.clear()
-        _GAZ_BC_CACHE[key] = bc
-    return bc
-
-
 @register("pipeline_edges", None,
           doc="J1/K3: gazetteer NER + fuzzy entity linking")
 def pipeline_edges(spark, sf_dir):
     from ..pipeline.chunk import chunk_docs
     from ..pipeline.extract import extract_docs
-    from ..pipeline.ner import link_entities
+    from ..pipeline.ner import link_entities, load_gazetteers
     ensure_workers_can_import(spark)
     corpus = pages_corpus_dir(sf_dir)
     pages = spark.read.parquet(os.path.join(corpus, "pages.parquet"))
-    gaz = _gazetteers_for(spark, corpus)
+    gaz = load_gazetteers(
+        spark, *[os.path.join(corpus, f"{n}.parquet")
+                 for n in ("persons", "places", "orgs")])
     return link_entities(chunk_docs(extract_docs(pages)), gaz)
 
 

@@ -219,8 +219,8 @@ def test_snapshot_ingest_reads_materialized_verdicts(spark):
 
 def test_worker_memo_identity_per_broadcast(spark):
     """The linking memo is a worker-lifetime singleton per gazetteer
-    broadcast: same broadcast -> same memo dict; new broadcast -> fresh
-    memo (a stale memo would serve decisions from other gazetteers)."""
+    content: same content -> same memo dict; new content -> fresh memo
+    (a stale memo would serve decisions from other gazetteers)."""
     from ocr_processing_pipeline_spark.pipeline.ner import (
         _get_index_and_memo)
     bc1 = spark.sparkContext.broadcast(("tok1", [], [], []))

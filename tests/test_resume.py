@@ -5,8 +5,12 @@ Replaces the reference's processed_documents.txt semantics
 anti-join — SURVEY §5.2 test 5.
 """
 
+import json
 import os
+import shutil
 
+import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
 from ocr_processing_pipeline_spark.pipeline.job import run_pipeline
@@ -90,6 +94,63 @@ def test_resume_rejects_mismatched_n_buckets(spark, corpus_dir, tmp_path):
     c = run_pipeline(spark, pages_path, corpus_dir, out,
                      n_buckets=N_BUCKETS)
     assert "skipped" in c
+
+
+def _inputs_copy(corpus_dir, dest):
+    """pages.parquet and the three gazetteers copied under ``dest`` (so a
+    test may rewrite them): (pages path, gazetteers dir)."""
+    os.makedirs(dest)
+    for n in ("pages", "persons", "places", "orgs"):
+        shutil.copy(f"{corpus_dir}/{n}.parquet", dest)
+    return os.path.join(dest, "pages.parquet"), dest
+
+
+def _drop_last_row(path):
+    table = pq.read_table(path)
+    pq.write_table(table.slice(0, table.num_rows - 1), path)
+
+
+@pytest.mark.parametrize("changed", ["pages", "persons"])
+def test_resume_rejects_changed_input(spark, corpus_dir, tmp_path, changed):
+    """The committed buckets were computed from the recorded pages and
+    gazetteers: after a crash, a resume over a changed pages file or a
+    changed gazetteer must fail loudly instead of mixing two generations
+    in one output. resume=False starts over on the new input and leaves
+    one checkpoint row per bucket."""
+    pages_path, gdir = _inputs_copy(corpus_dir, str(tmp_path / "in"))
+    out = str(tmp_path / "out")
+    run_pipeline(spark, pages_path, gdir, out, n_buckets=N_BUCKETS,
+                 fail_after_buckets=3)
+    _drop_last_row(os.path.join(gdir, f"{changed}.parquet"))
+    name = "pages" if changed == "pages" else "gazetteers"
+    with pytest.raises(ValueError, match=f"the {name} input changed"):
+        run_pipeline(spark, pages_path, gdir, out, n_buckets=N_BUCKETS)
+
+    c = run_pipeline(spark, pages_path, gdir, out, n_buckets=N_BUCKETS,
+                     resume=False)
+    n_pages = pq.read_metadata(pages_path).num_rows
+    assert c["docs"] == n_pages
+    ckpt = spark.read.parquet(os.path.join(out, "checkpoint")).collect()
+    assert sorted(r.bucket for r in ckpt) == list(range(N_BUCKETS))
+    assert sum(r.row_count for r in ckpt) == n_pages
+
+
+def test_resume_adopts_meta_without_fingerprints(spark, corpus_dir,
+                                                 tmp_path):
+    """A meta file that records only n_buckets (written before the input
+    fingerprints existed) is not a mismatch: the resume records them."""
+    pages_path = f"{corpus_dir}/pages.parquet"
+    out = str(tmp_path / "out")
+    run_pipeline(spark, pages_path, corpus_dir, out, n_buckets=N_BUCKETS,
+                 fail_after_buckets=3)
+    meta_path = os.path.join(out, "checkpoint_meta.json")
+    with open(meta_path, "w") as fh:
+        json.dump({"n_buckets": N_BUCKETS}, fh)
+    c = run_pipeline(spark, pages_path, corpus_dir, out, n_buckets=N_BUCKETS)
+    assert c["checkpoint"] == N_BUCKETS
+    with open(meta_path) as fh:
+        assert set(json.load(fh)) == {"n_buckets", "pages_fingerprint",
+                                      "gazetteers_fingerprint"}
 
 
 def test_noop_fast_path_with_empty_buckets(spark, corpus_dir, tmp_path):
