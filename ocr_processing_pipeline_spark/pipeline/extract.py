@@ -44,6 +44,9 @@ DOCS_UDF_SCHEMA = (
 )
 
 
+# the pages columns extraction reads
+PAGE_COLUMNS = ("url", "warc_ts", "html", "text", "lang")
+
 # the docs table's columns, in order (extract_docs and the fused pass in
 # job.run_pipeline both project to this)
 DOC_COLUMNS = (
@@ -114,7 +117,7 @@ def gate_pages(pages: DataFrame,
     """
     if max_page_bytes is None:
         return (pages
-                .select("url", "warc_ts", "html", "text", "lang")
+                .select(*PAGE_COLUMNS)
                 .withColumn("_oversized", F.lit(False)))
     if max_page_bytes <= 0:
         raise ValueError(f"max_page_bytes must be > 0, got {max_page_bytes}"
@@ -149,5 +152,6 @@ def extract_docs(pages: DataFrame,
             .select(*DOC_COLUMNS))
 
 
-__all__ = ["extract_docs", "extract_row", "gate_pages", "DOC_COLUMNS",
+__all__ = ["extract_docs", "extract_row", "gate_pages", "PAGE_COLUMNS",
+           "DOC_COLUMNS",
            "ROW_COLUMNS", "DOCS_UDF_SCHEMA"]

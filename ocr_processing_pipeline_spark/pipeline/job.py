@@ -11,19 +11,18 @@ partitioning + AQE):
   resumability commit unit (lineage.py). Per-doc cost skew (a giant page)
   is bounded by the Arrow batch cap (session.py) + AQE.
 - All Python work runs in ONE Arrow-batched pass (``_process``): for each
-  page it extracts the doc, chunks it, and scans + links each chunk, and
-  returns one row per doc with its chunks, edges (and optionally
-  mentions) nested. The UDF boundary — the per-job fixed cost at small
-  sizes — is crossed once per run, not once per stage. ``doc_id =
-  xxhash64(url)`` is computed JVM-side before the UDF. The only shuffle
-  is the single repartition to n_buckets.
-- That pass is persisted (Spark's default memory-and-disk level; blocks
-  that do not fit in memory spill to local disk) and every table is a
-  projection of it: docs a select, chunks/edges/mentions an explode. The
-  checkpoint rows aggregate the same cache, so nothing just written is
-  read back. The cache holds this run's output only and is released when
-  the run ends. A lost cache block is recomputed from the pages, which is
-  deterministic except for the ``extract_us`` timing.
+  page it extracts the doc, chunks it, and scans + links each chunk. The
+  UDF boundary — the per-job fixed cost at small sizes — is crossed once
+  per run, not once per stage. ``doc_id = xxhash64(url)`` and the warc_ts
+  epoch micros are computed JVM-side before the UDF. The only shuffle is
+  the single repartition to n_buckets, so each bucket is in one task.
+- The same task writes its buckets' docs, chunks, edges (and mentions)
+  files with pyarrow (lineage.BucketFiles: one deterministic file per
+  table and bucket, replaced in place) and returns one checkpoint row per
+  bucket. The driver collects those rows — the run's one data action —
+  and appends them as the checkpoint. Nothing is cached and no table is
+  read back; a task streams its buckets to disk row group by row group.
+  A retried task rewrites the same files.
 - Gazetteers are broadcast (J1) — no shuffle for the linking "join".
 
 This file is also the ``spark-submit --py-files`` entry point:
@@ -37,14 +36,19 @@ This file is also the ``spark-submit --py-files`` entry point:
 from __future__ import annotations
 
 import argparse
+import functools
 import json
 import os
 import shutil
 import time
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.dataset as ds
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
+from pyspark.sql.types import StructType
 
 from . import chunk as chunk_mod
 from . import extract as extract_mod
@@ -110,8 +114,8 @@ def run_pipeline(spark: SparkSession, pages_path: str, gazetteers_dir: str,
     # is committed the no-op returns BEFORE even opening the input
     # (reading the pages path would list and footer-read every shard) —
     # a 100 TB no-op resume must not touch the 100 TB. (Empty buckets
-    # carry sentinel rows — see lineage.checkpoint_rows_with_failures —
-    # so this also closes for corpora that leave buckets empty.)
+    # carry sentinel rows — see the commit point below — so this also
+    # closes for corpora that leave buckets empty.)
     if resume:
         committed = lineage.committed_bucket_ids(checkpoint_path, "docs")
     else:
@@ -125,8 +129,7 @@ def run_pipeline(spark: SparkSession, pages_path: str, gazetteers_dir: str,
     if not run_buckets:
         return dict(_NOTHING_TO_DO)
 
-    # schema inferred on purpose: a malformed pages input fails loudly
-    pages = spark.read.parquet(pages_path)
+    pages = _read_pages(spark, pages_path)
     gaz_paths = [os.path.join(gazetteers_dir, f"{n}.parquet")
                  for n in ("persons", "places", "orgs")]
 
@@ -159,52 +162,44 @@ def run_pipeline(spark: SparkSession, pages_path: str, gazetteers_dir: str,
         with open(meta_path, "w") as fh:
             json.dump(new_meta, fh)
 
-    # ONE shuffle: uniform url-hash bucket repartition (skew-proof).
+    # ONE shuffle: uniform url-hash bucket repartition (skew-proof). Each
+    # bucket lands in exactly one task, which writes its files.
     todo = (lineage.with_bucket(pages, n_buckets)
             .filter(F.col("bucket").isin(run_buckets))
             .repartition(min(n_buckets, len(run_buckets)), "bucket"))
 
     gaz_bc = ner_mod.load_gazetteers(spark, *gaz_paths)
 
-    pruned = extract_mod.gate_pages(todo, max_page_bytes).withColumn(
-        "doc_id", F.xxhash64("url"))
+    pruned = lineage.with_bucket(
+        extract_mod.gate_pages(todo, max_page_bytes), n_buckets).withColumns(
+        {"doc_id": F.xxhash64("url"), "_warc_us": F.unix_micros("warc_ts")})
 
-    # ONE Python pass, persisted; every write below and the checkpoint
-    # rows read this cache, never the tables just written (see the module
-    # docstring)
-    staged = lineage.with_bucket(
-        _process(pruned, gaz_bc, with_mentions), n_buckets).persist()
-    try:
-        docs = staged.select(*extract_mod.DOC_COLUMNS, "bucket")
-        lineage.write_partitioned(docs, os.path.join(out_dir, "docs"))
-        lineage.write_partitioned(
-            _exploded(staged, "chunks", chunk_mod.CHUNKS_COLUMNS),
-            os.path.join(out_dir, "chunks"))
-        lineage.write_partitioned(
-            _exploded(staged, "edges", ner_mod.EDGES_COLUMNS),
-            os.path.join(out_dir, "edges"))
-        if with_mentions:
-            # raw mention spans (FIXTURES.md §3 'entities' table), from
-            # the same scan the linker used; optional, off by default.
-            # Columns as extract_mentions joined with url on chunk_id.
-            m_cols = [c for c in ner_mod.MENTIONS_COLUMNS
-                      if c != "chunk_id"]
-            lineage.write_partitioned(
-                _exploded(staged, "mentions", ["chunk_id", *m_cols, "url"]),
-                os.path.join(out_dir, "mentions"))
+    # ONE Python pass that also writes every table (see the module
+    # docstring); its checkpoint rows are the run's only data action
+    fs, root = lineage.out_filesystem(out_dir)
+    new_files = functools.partial(lineage.BucketFiles, fs, root,
+                                  _table_schemas(with_mentions))
+    ckpt = _process(pruned, gaz_bc, new_files).collect()
+    written = {r.bucket for r in ckpt}
+    if len(written) != len(ckpt):
+        raise RuntimeError("a bucket was written by more than one task")
+    # a run bucket no task saw holds no pages: its files are replaced by
+    # empty ones, so no earlier run's rows survive in it
+    empty = new_files()
+    for b in set(run_buckets) - written:
+        empty.open(b)
+    sentinels = empty.commit()
 
-        # lineage/metrics rows LAST (commit point) — crash before this
-        # line ⇒ buckets get reprocessed and dynamically overwritten next
-        # run. A run bucket that produced no rows has ZERO pages and gets
-        # a sentinel, so the no-op path above closes over it; a simulated
-        # crash (fail_after_buckets) leaves them uncommitted, as a real
-        # one would, and the next full run commits them.
-        ckpt = lineage.checkpoint_rows_with_failures(
-            docs, "docs",
-            run_buckets if fail_after_buckets is None else ())
-        lineage.append_checkpoint(spark, ckpt, checkpoint_path)
-    finally:
-        staged.unpersist()
+    # lineage/metrics rows LAST (commit point) — crash before this line ⇒
+    # buckets get reprocessed and their files replaced next run. A run
+    # bucket that produced no rows has ZERO pages and gets a zero-row
+    # sentinel, so the no-op path above closes over it; a simulated crash
+    # (fail_after_buckets) leaves them uncommitted, as a real one would,
+    # and the next full run commits them.
+    if fail_after_buckets is None:
+        ckpt += sentinels
+    lineage.append_checkpoint(spark, sorted(ckpt, key=lambda r: r.bucket),
+                              checkpoint_path)
 
     if not any(r.row_count for r in ckpt):
         return dict(_NOTHING_TO_DO)
@@ -212,61 +207,109 @@ def run_pipeline(spark: SparkSession, pages_path: str, gazetteers_dir: str,
             for t in ("docs", "chunks", "edges", "checkpoint")}
 
 
-def _nested(schema: str) -> str:
-    """array<struct> of the table's columns a doc row does not carry."""
-    fields = [f for f in schema.split(", ")
-              if f.split()[0] not in extract_mod.DOC_COLUMNS]
-    return f"array<struct<{', '.join(fields)}>>"
+def _read_pages(spark: SparkSession, pages_path: str) -> DataFrame:
+    """The pages table, read with the schema of one parquet footer
+    (pyarrow, no Spark job). A path with no data file, or one whose
+    schema lacks an input column, raises ValueError before anything is
+    written."""
+    schema = from_arrow_schema(ds.dataset(pages_path, format="parquet")
+                               .schema)
+    missing = [c for c in extract_mod.PAGE_COLUMNS if c not in schema.names]
+    if missing:
+        raise ValueError(f"pages input {pages_path} has no column "
+                         f"{', '.join(missing)} (or no parquet data file)")
+    return spark.read.schema(schema).parquet(pages_path)
 
 
-def _exploded(staged: DataFrame, nested: str, columns: list[str]
-              ) -> DataFrame:
-    """One row per element of a nested column, projected to ``columns``
-    (doc-level ones from the doc row) plus the bucket."""
-    rows = staged.select(*extract_mod.DOC_COLUMNS, "bucket",
-                         F.explode(nested).alias("x"))
-    return rows.select(*[c if c in extract_mod.DOC_COLUMNS else f"x.{c}"
-                         for c in columns], "bucket")
-
-
-def _process(pruned: DataFrame, gaz_bc, with_mentions: bool) -> DataFrame:
-    """Gated pages (+ doc_id) → one row per doc: the docs columns plus its
-    nested chunks, edges and (with mentions) mentions — extract → chunk →
-    scan + link for each page in one Arrow-batched pass."""
-    tables = {"chunks": chunk_mod.CHUNKS_SCHEMA,
-              "edges": ner_mod.EDGES_SCHEMA}
+def _table_schemas(with_mentions: bool) -> dict[str, pa.Schema]:
+    """The arrow schema of each table a run writes: the DDL strings'
+    types in each table's column order (timestamps as UTC micros)."""
+    m_cols = [c for c in ner_mod.MENTIONS_COLUMNS if c != "chunk_id"]
+    tables = {
+        "docs": (extract_mod.DOCS_UDF_SCHEMA + ", doc_id long",
+                 extract_mod.DOC_COLUMNS),
+        "chunks": (chunk_mod.CHUNKS_SCHEMA, chunk_mod.CHUNKS_COLUMNS),
+        "edges": (ner_mod.EDGES_SCHEMA, ner_mod.EDGES_COLUMNS),
+    }
     if with_mentions:
-        tables["mentions"] = ner_mod.MENTIONS_SCHEMA
-    schema = (extract_mod.DOCS_UDF_SCHEMA + ", doc_id long, "
-              + ", ".join(f"{t} {_nested(s)}" for t, s in tables.items()))
+        # raw mention spans (FIXTURES.md §3 'entities' table), from the
+        # same scan the linker used; columns as extract_mentions joined
+        # with url on chunk_id
+        tables["mentions"] = (ner_mod.MENTIONS_SCHEMA + ", url string",
+                              ["chunk_id", *m_cols, "url"])
+    return {t: to_arrow_schema(StructType(
+                [StructType.fromDDL(ddl)[c] for c in cols]))
+            for t, (ddl, cols) in tables.items()}
+
+
+def _tables(pdf: pd.DataFrame, docs: list[dict],
+            nested: dict[str, list[list[dict]]],
+            schemas: dict[str, pa.Schema]) -> dict[str, pa.Table]:
+    """One batch's rows of every table plus their ``bucket``: ``docs``
+    holds each page's extracted columns and ``nested`` each page's chunk,
+    edge (and mention) rows; the doc-level columns of all of them come
+    from the page (warc_ts from its epoch micros)."""
+    bucket = pa.field("bucket", pa.int32())
+    schema = schemas["docs"].append(bucket)
+    computed = pa.Table.from_pylist(docs, schema=pa.schema(
+        [schema.field(c) for c in extract_mod.ROW_COLUMNS]))
+    page = {c: pa.array(pdf[c], schema.field(c).type, from_pandas=True)
+            for c in ("doc_id", "url", "lang", "bucket")}
+    page["warc_ts"] = pa.array(pdf["_warc_us"], from_pandas=True).cast(
+        pa.int64()).cast(schema.field("warc_ts").type)
+    out = {"docs": pa.table([page[f.name] if f.name in page
+                             else computed.column(f.name) for f in schema],
+                            schema=schema)}
+    for t, per_doc in nested.items():
+        schema = schemas[t].append(bucket)
+        parent = pa.array([i for i, rows in enumerate(per_doc)
+                           for _ in rows], pa.int64())
+        own = pa.Table.from_pylist(
+            [r for rows in per_doc for r in rows],
+            schema=pa.schema([f for f in schema if f.name not in page]))
+        out[t] = pa.table([page[f.name].take(parent) if f.name in page
+                           else own.column(f.name) for f in schema],
+                          schema=schema)
+    return out
+
+
+def _process(pruned: DataFrame, gaz_bc, new_files) -> DataFrame:
+    """Gated pages (+ bucket, doc_id, _warc_us) → one checkpoint row per
+    bucket. Each task runs extract → chunk → scan + link for each of its
+    pages in one Arrow-batched pass and streams every table's rows into
+    its buckets' files (``new_files()``: a lineage.BucketFiles)."""
 
     def process_batches(batches):
         idx, memo = ner_mod._get_index_and_memo(gaz_bc)
+        files = new_files()
         for pdf in batches:
-            rows = []
+            docs = []
+            nested = {t: [] for t in files.schemas if t != "docs"}
             for doc_id, html, text, too_big, warc_ts in zip(
                     pdf["doc_id"], pdf["html"], pdf["text"],
                     pdf["_oversized"], pdf["warc_ts"]):
                 row = extract_mod.extract_row(html, text, too_big)
-                row["chunks"] = chunk_mod.chunk_rows(doc_id, row["text"])
-                row["edges"], row["mentions"] = [], []
+                kids = {"chunks": chunk_mod.chunk_rows(doc_id, row["text"]),
+                        "edges": [], "mentions": []}
                 date = ner_mod.doc_date(warc_ts)
-                for c in row["chunks"]:
+                for c in kids["chunks"]:
                     # one scan feeds both the linker and the mentions
                     found = idx.scan(c["content"])
-                    row["edges"] += ner_mod.edge_rows(
+                    kids["edges"] += ner_mod.edge_rows(
                         found, idx, memo, c["chunk_id"], c["content"], date)
-                    row["mentions"] += ner_mod.mention_rows(
+                    kids["mentions"] += ner_mod.mention_rows(
                         found, c["chunk_id"])
-                rows.append(row)
-            # (mentions are dropped here unless with_mentions)
-            out = pd.DataFrame(
-                rows, columns=[*extract_mod.ROW_COLUMNS, *tables])
-            for c in ("url", "warc_ts", "lang", "doc_id"):
-                out[c] = pdf[c]
-            yield out
+                docs.append(row)
+                # (mentions are dropped here unless with_mentions)
+                for t, rows in nested.items():
+                    rows.append(kids[t])
+            files.add(_tables(pdf, docs, nested, files.schemas))
+        yield pd.DataFrame(files.commit(),
+                           columns=lineage.CHECKPOINT_ROW_COLUMNS,
+                           dtype=object)
 
-    return pruned.mapInPandas(process_batches, schema=schema)
+    return pruned.mapInPandas(process_batches,
+                              schema=lineage.CHECKPOINT_ROW_SCHEMA)
 
 
 def main(argv=None):

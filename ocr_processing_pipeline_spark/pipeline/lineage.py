@@ -15,22 +15,24 @@ rule: "range-partitioned shuffles on url-hash"). Each run:
    pages are filtered to the remaining ids. ``remaining_pages`` makes the
    same decision as a broadcast left-anti join for Spark-side callers.
 2. run the Python work (extract → chunk → scan + link) in ONE pass over
-   the bucket-repartitioned pages and persist its output
-3. write docs/chunks/edges (and optionally mentions) parquet partitioned
-   by bucket, each a projection of that persisted stage (dynamic
-   partition overwrite → a re-run of an uncommitted bucket replaces its
-   files: idempotent)
-4. append one checkpoint row per bucket, aggregated from the same stage:
-   row counts, warc_ts min/max, failure-code histogram, committed_at —
-   the lineage + metrics record (replaces the codecarbon CSV join of
-   Monitoring/aggregator.py:5-88). The per-(bucket, failure code)
-   aggregate is collected once, folded into one row per bucket on the
-   driver (plus zero-row sentinels for empty buckets) and appended as
-   one file; then the persisted stage is released
+   the bucket-repartitioned pages; each task holds whole buckets
+3. in that same task, write each of its buckets' docs/chunks/edges (and
+   optionally mentions) rows with pyarrow (``BucketFiles``): one file
+   per (table, bucket) at a deterministic name under the hive
+   ``bucket=N`` directory, written under a ``.``-prefixed temp name,
+   renamed into place, then every other file in that directory removed.
+   That is dynamic overwrite at bucket grain: a retried task or a rerun
+   of an uncommitted bucket replaces its files, never adds to them
+4. the task returns one checkpoint row per bucket — row count, url
+   count, warc_ts min/max, failure-code histogram, extract timing — and
+   the driver collects them (the run's only data action), adds zero-row
+   sentinels for empty buckets and appends them as one file, stamped
+   with committed_at: the lineage + metrics record (replaces the
+   codecarbon CSV join of Monitoring/aggregator.py:5-88)
 
 Crash between (3) and (4) leaves data files without a checkpoint row; the
-next run reprocesses those buckets and the overwrite removes any partial
-output — no duplicates (verified by tests/test_resume.py).
+next run reprocesses those buckets and the overwrite replaces their
+files — no duplicates (verified by tests/test_resume.py).
 
 On a cluster with Iceberg, steps 3+4 would become a single transaction
 (append + checkpoint rows in one commit). Here every table is plain
@@ -41,24 +43,38 @@ from __future__ import annotations
 
 import hashlib
 import os
-from collections.abc import Iterable
+import uuid
+from collections import Counter
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.dataset as ds
+import pyarrow.fs as pafs
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
-# a checkpoint row as checkpoint_rows_with_failures returns it: the
-# table's columns less committed_at, warc_ts_min/max as epoch micros (the
-# table stores them as timestamps)
+# a checkpoint row as BucketFiles.commit returns it: the table's columns
+# less committed_at, warc_ts_min/max as epoch micros (the table stores
+# them as timestamps)
 CHECKPOINT_ROW_SCHEMA = (
     "bucket int, table_name string, row_count long, n_urls long, "
     "warc_ts_min long, warc_ts_max long, "
     "failure_counts map<string,long>, mean_extract_us double, "
     "max_extract_us long"
 )
-_ROW_COLUMNS = [f.split()[0] for f in CHECKPOINT_ROW_SCHEMA.split(", ")]
+CHECKPOINT_ROW_COLUMNS = [f.split()[0]
+                          for f in CHECKPOINT_ROW_SCHEMA.split(", ")]
+
+# a (table, bucket) file's buffered rows are written out as one row group
+# once they reach this size, so a task streams its buckets to disk
+ROW_GROUP_BYTES = 64 << 20
+# long-text columns: their min/max statistics would copy text into every
+# footer and help no reader
+_NO_STATISTICS = {"text", "content"}
+# the docs columns a checkpoint row is folded from
+_LEDGER_COLUMNS = ["url", "warc_ts", "failure_code", "extract_us"]
 
 
 def with_bucket(df: DataFrame, n_buckets: int,
@@ -133,56 +149,112 @@ def write_partitioned(df: DataFrame, path: str) -> None:
      .partitionBy("bucket").parquet(path))
 
 
-def checkpoint_rows_with_failures(docs_with_bucket: DataFrame,
-                                  table_name: str,
-                                  sentinel_buckets: Iterable[int] = ()
-                                  ) -> list[Row]:
-    """One checkpoint row per bucket, on the driver: row count, url count,
-    warc_ts range, failure-code histogram and extract timing.
+def out_filesystem(out_dir: str) -> tuple[pafs.FileSystem, str]:
+    """The pyarrow filesystem of ``out_dir`` and its path there. A local
+    path is made absolute first (``from_uri`` rejects relative ones)."""
+    if "://" not in out_dir:
+        out_dir = os.path.abspath(out_dir)
+    return pafs.FileSystem.from_uri(out_dir)
 
-    One ``groupBy(bucket, code)`` is collected — O(n_buckets × failure
-    codes) rows — and folded here into a row per bucket. Each id in
-    ``sentinel_buckets`` that holds no rows gets a zero-row sentinel, so
-    buckets the corpus leaves EMPTY are committed too and the
-    all-committed no-op (job.run_pipeline) closes over them; row_count 0
-    tells them apart in every metrics query. warc_ts_min/max travel as
-    epoch micros: a collected timestamp would come back as a naive
-    local-time datetime, ambiguous in a DST fall-back hour."""
-    code = F.coalesce(F.nullif("failure_code", F.lit("")), F.lit("OK"))
-    per_code: dict[int, list[Row]] = {b: [] for b in sentinel_buckets}
-    for r in (docs_with_bucket.groupBy("bucket", code.alias("code"))
-              .agg(F.count(F.lit(1)).alias("n"),
-                   F.countDistinct("url").alias("n_urls"),
-                   F.unix_micros(F.min("warc_ts")).alias("ts_min"),
-                   F.unix_micros(F.max("warc_ts")).alias("ts_max"),
-                   F.sum("extract_us").alias("t_sum"),
-                   F.max("extract_us").alias("t_max"))
-              .collect()):
-        per_code.setdefault(r.bucket, []).append(r)
 
-    def fold(f, values):
-        return f((v for v in values if v is not None), default=None)
+class BucketFiles:
+    """One task's share of a run's tables: one parquet file per (table,
+    bucket) and one checkpoint row per bucket (module docstring, steps
+    3-4).
 
-    rows = []
-    for b, rs in sorted(per_code.items()):
-        n = sum(r.n for r in rs)
-        rows.append(Row(
-            bucket=b, table_name=table_name, row_count=n,
-            n_urls=sum(r.n_urls for r in rs),
-            warc_ts_min=fold(min, (r.ts_min for r in rs)),
-            warc_ts_max=fold(max, (r.ts_max for r in rs)),
-            failure_counts={r.code: r.n for r in rs},
-            mean_extract_us=sum(r.t_sum for r in rs) / n if n else None,
-            max_extract_us=fold(max, (r.t_max for r in rs))))
-    return rows
+    ``schemas`` maps each table to the arrow schema of its files. The
+    tables ``add`` takes carry one more column, the int ``bucket``, which
+    the hive ``bucket=N`` directory holds instead. A bucket's files are
+    opened, one per table, when ``add`` first sees it or ``open`` names
+    it, so a bucket with no rows in some table gets an empty file there.
+    Rows are buffered per file and written as a row group every
+    ROW_GROUP_BYTES. ``commit`` closes each file, renames it from its
+    ``.``-prefixed temp name to ``part-<bucket>.parquet`` and removes
+    every other file in its bucket directory, then returns each bucket's
+    checkpoint row, folded from its docs rows."""
+
+    def __init__(self, fs: pafs.FileSystem, root: str,
+                 schemas: dict[str, pa.Schema]):
+        self._fs, self._root, self.schemas = fs, root, schemas
+        # (table, bucket) -> [writer, temp path, buffered tables]
+        self._files: dict[tuple[str, int], list] = {}
+        # bucket -> its docs rows' _LEDGER_COLUMNS
+        self._ledgers: dict[int, list[pa.Table]] = {}
+
+    def open(self, bucket: int) -> None:
+        for table, schema in self.schemas.items():
+            d = self._dir(table, bucket)
+            self._fs.create_dir(d)
+            temp = f"{d}/.tmp-{uuid.uuid4().hex}.parquet"
+            # no ARROW:schema footer key: the parquet types already say
+            # what every reader here needs, and it costs ~1 KB per file
+            writer = pq.ParquetWriter(
+                temp, schema, filesystem=self._fs, compression="zstd",
+                write_statistics=[n for n in schema.names
+                                  if n not in _NO_STATISTICS],
+                store_schema=False)
+            self._files[table, bucket] = [writer, temp, []]
+        self._ledgers[bucket] = [
+            self.schemas["docs"].empty_table().select(_LEDGER_COLUMNS)]
+
+    def add(self, tables: dict[str, pa.Table]) -> None:
+        for table, rows in tables.items():
+            for bucket in pc.unique(rows["bucket"]).to_pylist():
+                if bucket not in self._ledgers:
+                    self.open(bucket)
+                part = rows.filter(pc.equal(rows["bucket"], bucket)
+                                   ).drop_columns("bucket")
+                if table == "docs":
+                    self._ledgers[bucket].append(part.select(_LEDGER_COLUMNS))
+                writer, _, buffered = self._files[table, bucket]
+                buffered.append(part)
+                if sum(t.nbytes for t in buffered) >= ROW_GROUP_BYTES:
+                    writer.write_table(pa.concat_tables(buffered))
+                    buffered.clear()
+
+    def commit(self) -> list[Row]:
+        for (table, bucket), (writer, temp, buffered) in self._files.items():
+            if buffered:
+                writer.write_table(pa.concat_tables(buffered))
+            writer.close()
+            final = f"{self._dir(table, bucket)}/part-{bucket:05d}.parquet"
+            self._fs.move(temp, final)
+            for f in self._fs.get_file_info(
+                    pafs.FileSelector(self._dir(table, bucket))):
+                if f.path != final and f.type == pafs.FileType.File:
+                    self._fs.delete_file(f.path)
+        return [_checkpoint_row(b, pa.concat_tables(parts))
+                for b, parts in sorted(self._ledgers.items())]
+
+    def _dir(self, table: str, bucket: int) -> str:
+        return f"{self._root}/{table}/bucket={bucket}"
+
+
+def _checkpoint_row(bucket: int, rows: pa.Table) -> Row:
+    """A bucket's docs checkpoint row from its url, warc_ts, failure_code
+    and extract_us columns; with no rows, the zero-row sentinel that commits
+    an empty bucket. warc_ts_min/max are epoch micros: a timestamp would
+    come back as a naive local-time datetime, ambiguous in a DST
+    fall-back hour."""
+    n = rows.num_rows
+    ts = rows["warc_ts"].cast(pa.int64())
+    t_sum = pc.sum(rows["extract_us"]).as_py()
+    return Row(
+        bucket=bucket, table_name="docs", row_count=n,
+        n_urls=pc.count_distinct(rows["url"]).as_py(),
+        warc_ts_min=pc.min(ts).as_py(), warc_ts_max=pc.max(ts).as_py(),
+        failure_counts=dict(Counter(
+            c or "OK" for c in rows["failure_code"].to_pylist())),
+        mean_extract_us=t_sum / n if n else None,
+        max_extract_us=pc.max(rows["extract_us"]).as_py())
 
 
 def append_checkpoint(spark: SparkSession, rows: list[Row],
                       checkpoint_path: str) -> None:
-    """Append checkpoint_rows_with_failures' rows as one parquet file,
+    """Append checkpoint rows (BucketFiles.commit's) as one parquet file,
     stamped with committed_at. The frame goes through pandas, so Spark
     builds it on the Arrow path: one job, no Python worker."""
-    pdf = pd.DataFrame(rows, columns=_ROW_COLUMNS, dtype=object)
+    pdf = pd.DataFrame(rows, columns=CHECKPOINT_ROW_COLUMNS, dtype=object)
     (spark.createDataFrame(pdf, CHECKPOINT_ROW_SCHEMA)
      .withColumns({c: F.timestamp_micros(c)
                    for c in ("warc_ts_min", "warc_ts_max")})
@@ -198,6 +270,6 @@ def _exists(path: str) -> bool:
 
 
 __all__ = ["with_bucket", "committed_buckets", "committed_bucket_ids",
-           "count_rows", "remaining_pages",
-           "write_partitioned", "checkpoint_rows_with_failures",
-           "append_checkpoint", "CHECKPOINT_ROW_SCHEMA"]
+           "count_rows", "remaining_pages", "write_partitioned",
+           "out_filesystem", "BucketFiles", "append_checkpoint",
+           "CHECKPOINT_ROW_SCHEMA", "CHECKPOINT_ROW_COLUMNS"]

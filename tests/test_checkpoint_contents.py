@@ -1,7 +1,8 @@
 """What a checkpoint row holds: per bucket, the same counts, url count,
 warc_ts range and failure histogram an independent aggregate over the
 docs table gives — across a crash run and its resume, with the Python
-process in a time zone whose DST fall-back hour one page is stamped in.
+process in a time zone whose DST fall-back hour one page is stamped in,
+and with a url whose two crawls end with different failure codes.
 """
 
 import datetime
@@ -42,16 +43,20 @@ def zurich_tz(monkeypatch):
 
 
 def _write_pages(path):
-    """Ten pages: one url crawled twice at two times, one page stamped in
-    the fall-back hour, one with no payload (EMPTY_INPUT)."""
+    """Eleven pages: one url crawled twice at two times, one url crawled
+    twice whose second crawl has no payload (so its crawls end with two
+    failure codes), one page stamped in the fall-back hour, one with no
+    payload (EMPTY_INPUT)."""
     rows = [{k: r[k] for k in PAGES_SCHEMA.names}
             for r in make_pages(8)[0]]
     rows[1]["warc_ts"] = FALL_BACK
+    emptied = dict(rows[3], html=None, text=None,
+                   warc_ts=rows[3]["warc_ts"] + datetime.timedelta(days=1))
     recrawl = dict(rows[0])
     recrawl["warc_ts"] = rows[0]["warc_ts"] + datetime.timedelta(days=3)
     empty = dict(rows[2], url="https://empty.example/none", html=None,
                  text=None)
-    rows += [recrawl, empty]
+    rows += [emptied, recrawl, empty]
     pq.write_table(pa.Table.from_pylist(rows, schema=PAGES_SCHEMA), path)
     return rows
 
@@ -129,3 +134,7 @@ def test_checkpoint_rows_match_docs(spark, corpus_dir, tmp_path, zurich_tz):
     assert _micros(FALL_BACK) in (stamped["ts_min"], stamped["ts_max"])
     assert got[bucket["https://empty.example/none"]]["failure_counts"][
         "EMPTY_INPUT"] == 1
+    # a url whose two crawls end with different codes is one url
+    split = got[bucket[rows[3]["url"]]]
+    assert {"OK", "EMPTY_INPUT"} <= set(split["failure_counts"])
+    assert split["n_urls"] == split["row_count"] - 1

@@ -1,17 +1,17 @@
 """run_pipeline's single Python pass: what it writes and how it plans it.
 
 run_pipeline extracts, chunks, scans and links every page in one
-mapInPandas pass, persists that stage once and writes every table from
-it. These tests pin that its tables equal the standalone stage functions'
-output row for row, and that every table it writes is a projection of
-one cached stage rather than a read-back of a table it just wrote.
+mapInPandas pass whose tasks write every table's files themselves and
+return the checkpoint rows. These tests pin that its tables equal the
+standalone stage functions' output row for row, and that the one frame
+it collects plans one Python pass over the pages, caches nothing and
+reads back no table it writes.
 """
 
 import contextlib
 import io
 import os
 
-from ocr_processing_pipeline_spark.pipeline import lineage
 from ocr_processing_pipeline_spark.pipeline.chunk import chunk_docs
 from ocr_processing_pipeline_spark.pipeline.extract import extract_docs
 from ocr_processing_pipeline_spark.pipeline.job import run_pipeline
@@ -58,45 +58,51 @@ def test_tables_match_standalone_chain(spark, corpus_dir, tmp_path):
 
 
 def _plan(df) -> str:
-    """The physical plan; once adaptive execution has run the cached
-    plan, only its final version (not the initial one printed after)."""
+    """The physical plan; once adaptive execution has run it, only its
+    final version (not the initial one printed after)."""
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         df.explain(mode="simple")
     return buf.getvalue().split("== Initial Plan ==")[0]
 
 
-def test_writes_project_one_cached_pass(spark, corpus_dir, tmp_path,
-                                        monkeypatch):
-    """Every DataFrame one run hands to write_partitioned reads the same
-    cached relation, whose plan holds exactly one MapInPandas and the
-    bucket repartition as its only Exchange; none scans the docs or
-    chunks table the run is writing. The run releases the cache."""
+def _data_files(path):
+    return [f for f in os.listdir(path) if f[0] not in "._"]
+
+
+def test_run_collects_one_pass(spark, corpus_dir, tmp_path, monkeypatch):
+    """A run's only data action is the collect of its checkpoint rows.
+    That frame's plan holds exactly one MapInPandas and the bucket
+    repartition as its only Exchange; its only scan is of the pages, so
+    no table the run writes is read back; nothing is cached, so a cache
+    manager that was empty before the run is empty after it. Every table
+    the tasks wrote holds one data file per bucket."""
     out = str(tmp_path / "out")
-    plans = []
-    write = lineage.write_partitioned
+    collected = []
+    frame = type(spark.range(1))    # the session's DataFrame class
+    collect = frame.collect
 
-    def capture(df, path):
-        plans.append(_plan(df))
-        write(df, path)
+    def capture(df):
+        collected.append(df)
+        return collect(df)
 
-    monkeypatch.setattr(lineage, "write_partitioned", capture)
+    spark.catalog.clearCache()
     cache = spark._jsparkSession.sharedState().cacheManager()
-    was_empty = cache.isEmpty()
+    monkeypatch.setattr(frame, "collect", capture)
     run_pipeline(spark, f"{corpus_dir}/pages.parquet", corpus_dir, out,
                  n_buckets=N_BUCKETS, with_mentions=True)
+    monkeypatch.undo()
 
-    assert len(plans) == 4
-    relations = set()
-    for p in plans:
-        assert p.count("MapInPandas") == 1, p
-        assert p.count("Exchange") == 1, p
-        assert "InMemoryTableScan" in p, p
-        relations |= {line.strip() for line in p.splitlines()
-                      if "InMemoryRelation" in line}
-        for table in ("docs", "chunks"):
-            assert os.path.join(out, table) not in p, p
-    assert len(relations) == 1, relations
-    # the cache holds one run's output only: released when the run ends
-    assert cache.isEmpty() == was_empty
-
+    assert len(collected) == 1
+    p = _plan(collected[0])
+    assert p.count("MapInPandas") == 1, p
+    assert p.count("Exchange") == 1, p
+    assert "InMemory" not in p.replace("InMemoryFileIndex", ""), p
+    assert p.count("FileScan") == 1 and "pages.parquet" in p, p
+    assert out not in p, p
+    assert cache.isEmpty()
+    for table in ("docs", "chunks", "edges", "mentions"):
+        buckets = sorted(os.listdir(os.path.join(out, table)))
+        assert buckets == [f"bucket={b}" for b in range(N_BUCKETS)], table
+        for b in buckets:
+            assert len(_data_files(os.path.join(out, table, b))) == 1, b

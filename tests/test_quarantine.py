@@ -11,8 +11,6 @@ from ocr_processing_pipeline_spark.extractor.core import (
     FailureCode, extract_page)
 from ocr_processing_pipeline_spark.pipeline.extract import extract_docs
 from ocr_processing_pipeline_spark.pipeline.job import run_pipeline
-from ocr_processing_pipeline_spark.pipeline.lineage import (
-    checkpoint_rows_with_failures, with_bucket)
 from ocr_processing_pipeline_spark.sources.corpus import make_pages
 
 THRESHOLD = 50_000      # normal synthetic pages are ~5 KB
@@ -49,18 +47,6 @@ def test_oversized_page_quarantined(spark):
         expect = extract_page(r["html"], r.get("text")).text
         assert by_url[r["url"]].text == expect
     assert sum(r.failure_code == FailureCode.OVERSIZED for r in docs) == 1
-
-
-def test_quarantine_counted_in_checkpoint(spark):
-    pages, _ = _pages_with_giant(spark)
-    docs = with_bucket(extract_docs(pages, max_page_bytes=THRESHOLD), 4)
-    rows = checkpoint_rows_with_failures(docs, "docs")
-    counts = {}
-    for r in rows:
-        for code, n in r.failure_counts.items():
-            counts[code] = counts.get(code, 0) + n
-    assert counts.get(FailureCode.OVERSIZED) == 1
-    assert sum(r.row_count for r in rows) == 21
 
 
 def test_run_pipeline_quarantines_oversized(spark, corpus_dir, tmp_path):

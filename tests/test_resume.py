@@ -5,14 +5,18 @@ Replaces the reference's processed_documents.txt semantics
 anti-join — SURVEY §5.2 test 5.
 """
 
+import datetime
 import json
 import os
 import shutil
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
+from ocr_processing_pipeline_spark.pipeline import lineage
 from ocr_processing_pipeline_spark.pipeline.job import run_pipeline
 
 N_BUCKETS = 8
@@ -207,3 +211,162 @@ def test_noop_resume_never_touches_input(spark, corpus_dir, tmp_path):
     c = run_pipeline(spark, str(tmp_path / "does_not_exist.parquet"),
                      corpus_dir, out, n_buckets=N_BUCKETS)
     assert c["docs"] == 0 and "skipped" in c
+
+
+def test_malformed_pages_fail_before_any_write(spark, corpus_dir, tmp_path):
+    """A pages path with no data file, and a pages file without the html
+    column, each raise before anything is written: no docs table."""
+    no_files = tmp_path / "no_files.parquet"
+    no_files.mkdir()
+    (no_files / "_SUCCESS").touch()
+    no_html = str(tmp_path / "no_html.parquet")
+    pq.write_table(pq.read_table(f"{corpus_dir}/pages.parquet")
+                   .drop_columns("html"), no_html)
+    for i, pages_path in enumerate((str(no_files), no_html)):
+        out = str(tmp_path / f"out{i}")
+        with pytest.raises((AnalysisException, ValueError)):
+            run_pipeline(spark, pages_path, corpus_dir, out,
+                         n_buckets=N_BUCKETS)
+        assert not os.path.exists(os.path.join(out, "docs")), pages_path
+
+
+def _data_files(table_dir):
+    """bucket dir name → the data files in it (names not starting with
+    ``.`` or ``_``, as Spark's reader sees them)."""
+    return {b: sorted(f for f in os.listdir(os.path.join(table_dir, b))
+                      if f[0] not in "._")
+            for b in os.listdir(table_dir)}
+
+
+def _assert_one_file_per_bucket(out, n_buckets=N_BUCKETS):
+    for table in ("docs", "chunks", "edges"):
+        files = _data_files(os.path.join(out, table))
+        assert sorted(files) == sorted(
+            f"bucket={b}" for b in range(n_buckets)), table
+        assert all(len(f) == 1 for f in files.values()), (table, files)
+
+
+def test_crash_before_checkpoint_append_recovers(spark, corpus_dir, tmp_path,
+                                                 monkeypatch):
+    """A crash after every task wrote its files but before the checkpoint
+    append commits nothing; the next run rewrites every bucket in place:
+    one doc per page, no duplicate doc_id, one data file per (table,
+    bucket)."""
+    out = str(tmp_path / "out")
+    pages_path = f"{corpus_dir}/pages.parquet"
+    append = lineage.append_checkpoint
+    calls = []
+
+    def crash_once(*args, **kwargs):
+        calls.append(1)
+        if len(calls) == 1:
+            raise RuntimeError("crash before the checkpoint append")
+        return append(*args, **kwargs)
+
+    monkeypatch.setattr(lineage, "append_checkpoint", crash_once)
+    with pytest.raises(RuntimeError, match="crash before"):
+        run_pipeline(spark, pages_path, corpus_dir, out, n_buckets=N_BUCKETS)
+    _assert_one_file_per_bucket(out)
+    assert not os.path.exists(os.path.join(out, "checkpoint"))
+
+    c = run_pipeline(spark, pages_path, corpus_dir, out, n_buckets=N_BUCKETS)
+    assert len(calls) == 2 and c["checkpoint"] == N_BUCKETS
+    n_pages = pq.read_metadata(pages_path).num_rows
+    docs = spark.read.parquet(os.path.join(out, "docs"))
+    assert docs.count() == n_pages
+    assert docs.select("doc_id").distinct().count() == n_pages
+    _assert_one_file_per_bucket(out)
+
+
+def test_resume_replaces_stale_bucket_files(spark, corpus_dir, tmp_path):
+    """An uncommitted bucket directory holding a stale data file (a copy
+    of a committed bucket's) and a leftover temp file holds exactly one
+    data file after the resume, and its rows equal a clean run's."""
+    pages_path = f"{corpus_dir}/pages.parquet"
+    clean = str(tmp_path / "clean")
+    run_pipeline(spark, pages_path, corpus_dir, clean, n_buckets=N_BUCKETS)
+    out = str(tmp_path / "out")
+    run_pipeline(spark, pages_path, corpus_dir, out, n_buckets=N_BUCKETS,
+                 fail_after_buckets=3)
+    done = lineage.committed_bucket_ids(os.path.join(out, "checkpoint"),
+                                        "docs")
+    stale = min(set(range(N_BUCKETS)) - done)
+    for table in ("docs", "chunks", "edges"):
+        src = os.path.join(out, table, f"bucket={min(done)}")
+        dst = os.path.join(out, table, f"bucket={stale}")
+        os.makedirs(dst, exist_ok=True)
+        shutil.copy(os.path.join(src, _data_files(
+            os.path.join(out, table))[f"bucket={min(done)}"][0]),
+            os.path.join(dst, "part-00000-stale.c000.zstd.parquet"))
+        with open(os.path.join(dst, ".tmp-leftover.parquet"), "wb") as fh:
+            fh.write(b"partial")
+
+    run_pipeline(spark, pages_path, corpus_dir, out, n_buckets=N_BUCKETS)
+    for table in ("docs", "chunks", "edges"):
+        d = os.path.join(out, table, f"bucket={stale}")
+        assert len(_data_files(os.path.join(out, table))[
+            f"bucket={stale}"]) == 1, table
+        assert not os.path.exists(os.path.join(d, ".tmp-leftover.parquet"))
+
+        def rows(root, table=table):
+            df = (spark.read.parquet(os.path.join(root, table))
+                  .filter(F.col("bucket") == stale))
+            return sorted(df.drop("extract_us").collect(), key=repr)
+        assert rows(out) == rows(clean), table
+    _assert_one_file_per_bucket(out)
+
+
+def test_session_time_zone_keeps_instants(spark, corpus_dir, tmp_path):
+    """Under a Europe/Zurich session time zone, docs.warc_ts and
+    chunks.warc_ts hold the input instants, both occurrences of the
+    repeated DST fall-back hour included (compared as epoch micros)."""
+    utc = datetime.timezone.utc
+    rows = pq.read_table(f"{corpus_dir}/pages.parquet").slice(0, 12)
+    stamps = rows.column("warc_ts").to_pylist()
+    # 02:30 local twice on 2024-10-27: summer time, then standard time
+    stamps[0] = datetime.datetime(2024, 10, 27, 0, 30, tzinfo=utc)
+    stamps[1] = datetime.datetime(2024, 10, 27, 1, 30, tzinfo=utc)
+    i = rows.schema.get_field_index("warc_ts")
+    pages_path = str(tmp_path / "pages.parquet")
+    pq.write_table(rows.set_column(i, rows.schema.field(i), pa.array(
+        stamps, pa.timestamp("us", tz="UTC"))), pages_path)
+    out = str(tmp_path / "out")
+
+    def micros(path):
+        return {tuple(r) for r in spark.read.parquet(path).select(
+            "url", F.unix_micros("warc_ts")).collect()}
+
+    zone = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "Europe/Zurich")
+    try:
+        run_pipeline(spark, pages_path, corpus_dir, out, n_buckets=4)
+        want = micros(pages_path)
+        docs = micros(os.path.join(out, "docs"))
+        chunks = micros(os.path.join(out, "chunks"))
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", zone)
+    assert len(want) == 12
+    assert docs == want
+    assert chunks and chunks <= want
+
+
+def test_rerun_empties_buckets_that_lost_their_pages(spark, corpus_dir,
+                                                     tmp_path):
+    """resume=False over pages that no longer reach some bucket leaves
+    that bucket empty in every table: an earlier run's rows never
+    survive next to the new ones."""
+    pages_path = str(tmp_path / "pages.parquet")
+    table = pq.read_table(f"{corpus_dir}/pages.parquet").slice(0, 10)
+    pq.write_table(table, pages_path)
+    out = str(tmp_path / "out")
+    run_pipeline(spark, pages_path, corpus_dir, out, n_buckets=32)
+    pq.write_table(table.slice(0, 4), pages_path)
+    c = run_pipeline(spark, pages_path, corpus_dir, out, n_buckets=32,
+                     resume=False)
+    assert c["docs"] == 4 and c["checkpoint"] == 32
+    urls = set(table.column("url").to_pylist()[:4])
+    for t in ("docs", "chunks", "edges"):
+        got = {r.url for r in spark.read.parquet(
+            os.path.join(out, t)).select("url").collect()}
+        assert got <= urls, t
+    _assert_one_file_per_bucket(out, 32)

@@ -24,14 +24,16 @@ SF_DIR = "/root/testdata/sf0.001"
 
 COMMENT = {
     "flagship_pipeline": (
-        "The plan run_pipeline hands to its edges write. All Python work "
-        "is ONE MapInPandas (extract → chunk → scan + link per page, "
-        "chunks/edges nested per doc) after the one Exchange, the bucket "
-        "repartition. That stage is persisted (InMemoryRelation): the "
-        "docs write materializes it, and chunks/edges are an explode "
-        "over the InMemoryTableScan, so no table is read back and the "
-        "UDF runs once per run. The gazetteer 'join' is a broadcast "
-        "variable inside the UDF."),
+        "The one frame run_pipeline collects: its checkpoint rows. All "
+        "Python work is ONE MapInPandas (extract → chunk → scan + link "
+        "per page) after the one Exchange, the bucket repartition, and "
+        "the same task writes its buckets' docs/chunks/edges files with "
+        "pyarrow, one per table and bucket, and returns one checkpoint row "
+        "per bucket. So a run is this job plus the checkpoint append: "
+        "nothing is cached, no table is read back and the UDF runs once "
+        "per run. The pages schema comes from a parquet footer read on "
+        "the driver, not a Spark job. The gazetteer 'join' is a "
+        "broadcast variable inside the UDF."),
     "filtered_scan": (
         "Both predicates reach the parquet reader (PushedFilters) and the "
         "scan reads only the 4 referenced columns (ReadSchema) — at "
@@ -117,27 +119,30 @@ def plan_str(df, mode="formatted") -> str:
 
 
 def pipeline_plan(spark, corpus: str) -> str:
-    """The plan run_pipeline hands to its edges write, captured during one
-    run over ``corpus`` into a throwaway output directory."""
-    from ocr_processing_pipeline_spark.pipeline import job, lineage
-    plans = {}
-    write = lineage.write_partitioned
+    """The plan of the one frame run_pipeline collects (its checkpoint
+    rows), captured during one run over ``corpus`` into a throwaway output
+    directory."""
+    from ocr_processing_pipeline_spark.pipeline import job
+    frame = type(spark.range(1))
+    collect = frame.collect
+    plans = []
 
-    def capture(df, path):
-        # after adaptive execution ran the cached stage, keep its final
-        # plan only
-        plans[os.path.basename(path)] = plan_str(df, "simple").split(
-            "+- == Initial Plan ==")[0].rstrip() + "\n"
-        write(df, path)
+    def capture(df):
+        rows = collect(df)
+        # after adaptive execution ran the stage, keep its final plan only
+        plans.append(plan_str(df, "simple").split(
+            "+- == Initial Plan ==")[0].rstrip() + "\n")
+        return rows
 
-    lineage.write_partitioned = capture
+    frame.collect = capture
     try:
         with tempfile.TemporaryDirectory() as out:
             job.run_pipeline(spark, os.path.join(corpus, "pages.parquet"),
                              corpus, out, n_buckets=8)
     finally:
-        lineage.write_partitioned = write
-    return plans["edges"]
+        frame.collect = collect
+    (plan,) = plans
+    return plan
 
 
 def main() -> None:
@@ -148,7 +153,7 @@ def main() -> None:
 
     corpus = pages_corpus_dir(SF_DIR)
     out.append("## flagship_pipeline (run_pipeline: pages → docs, chunks, "
-               "edges)\n")
+               "edges, checkpoint rows)\n")
     out.append(COMMENT["flagship_pipeline"] + "\n")
     out.append("```\n" + pipeline_plan(spark, corpus) + "```\n")
 
