@@ -20,7 +20,7 @@ from time import perf_counter_ns
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..extractor.core import FailureCode, extract_page
@@ -99,11 +99,11 @@ def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         yield out
 
 
-def gate_pages(pages: DataFrame,
-               max_page_bytes: int | None = DEFAULT_MAX_PAGE_BYTES
-               ) -> DataFrame:
-    """pages → (url, warc_ts, html, text, lang, _oversized): the five
-    input columns extraction reads, with the giant-page gate applied.
+def gated_columns(max_page_bytes: int | None = DEFAULT_MAX_PAGE_BYTES
+                  ) -> list[Column]:
+    """The pages columns (url, warc_ts, html, text, lang, _oversized): the
+    five input columns extraction reads, with the giant-page gate applied,
+    for a caller to select along with any columns of its own.
 
     Pages whose html OR pre-text payload exceeds ``max_page_bytes`` are
     quarantined JVM-side (octet_length test in the same projection —
@@ -116,9 +116,7 @@ def gate_pages(pages: DataFrame,
     <= 0 is rejected (it would quarantine every page).
     """
     if max_page_bytes is None:
-        return (pages
-                .select(*PAGE_COLUMNS)
-                .withColumn("_oversized", F.lit(False)))
+        return [*map(F.col, PAGE_COLUMNS), F.lit(False).alias("_oversized")]
     if max_page_bytes <= 0:
         raise ValueError(f"max_page_bytes must be > 0, got {max_page_bytes}"
                          " (pass None to disable the gate)")
@@ -127,14 +125,14 @@ def gate_pages(pages: DataFrame,
         (F.coalesce(F.octet_length("html"), F.lit(0)) > limit)
         | (F.coalesce(F.octet_length("text"), F.lit(0)) > limit),
         F.lit(False))
-    return pages.select(
-        "url", "warc_ts",
+    return [
+        F.col("url"), F.col("warc_ts"),
         F.when(too_big, F.lit(None).cast("binary"))
         .otherwise(F.col("html")).alias("html"),
         F.when(too_big, F.lit(None).cast("string"))
         .otherwise(F.col("text")).alias("text"),
-        "lang",
-        too_big.alias("_oversized"))
+        F.col("lang"),
+        too_big.alias("_oversized")]
 
 
 def extract_docs(pages: DataFrame,
@@ -144,14 +142,14 @@ def extract_docs(pages: DataFrame,
 
     Column pruning: only the five input columns are read; Catalyst pushes
     the projection into the parquet scan. ``max_page_bytes`` is the
-    giant-page gate (see gate_pages; None disables it).
+    giant-page gate (see gated_columns; None disables it).
     """
-    return (gate_pages(pages, max_page_bytes)
+    return (pages.select(*gated_columns(max_page_bytes))
             .mapInPandas(_extract_batches, schema=DOCS_UDF_SCHEMA)
             .withColumn("doc_id", F.xxhash64("url"))
             .select(*DOC_COLUMNS))
 
 
-__all__ = ["extract_docs", "extract_row", "gate_pages", "PAGE_COLUMNS",
+__all__ = ["extract_docs", "extract_row", "gated_columns", "PAGE_COLUMNS",
            "DOC_COLUMNS",
            "ROW_COLUMNS", "DOCS_UDF_SCHEMA"]

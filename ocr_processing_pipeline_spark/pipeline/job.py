@@ -13,16 +13,22 @@ partitioning + AQE):
 - All Python work runs in ONE Arrow-batched pass (``_process``): for each
   page it extracts the doc, chunks it, and scans + links each chunk. The
   UDF boundary — the per-job fixed cost at small sizes — is crossed once
-  per run, not once per stage. ``doc_id = xxhash64(url)`` and the warc_ts
-  epoch micros are computed JVM-side before the UDF. The only shuffle is
-  the single repartition to n_buckets, so each bucket is in one task.
+  per run, not once per stage. Its input is one projection of the pages,
+  made before the shuffle: the giant-page gate, ``bucket``,
+  ``doc_id = xxhash64(url)`` and the warc_ts epoch micros, all JVM-side.
+  The only shuffle is the single repartition to n_buckets, so each
+  bucket is in one task.
 - The same task writes its buckets' docs, chunks, edges (and mentions)
   files with pyarrow (lineage.BucketFiles: one deterministic file per
   table and bucket, replaced in place) and returns one checkpoint row per
   bucket. The driver collects those rows — the run's one data action —
-  and appends them as the checkpoint. Nothing is cached and no table is
-  read back; a task streams its buckets to disk row group by row group.
-  A retried task rewrites the same files.
+  and appends them to the checkpoint with pyarrow. So a run starts two
+  Spark jobs: the shuffle's map stage and the pass. Nothing is cached
+  and no table is read back; a task streams its buckets to disk row
+  group by row group. A retried task rewrites the same files.
+- The driver's own out-dir I/O (meta file, checkpoint, footer counts)
+  goes through the same pyarrow filesystem as the tasks', so the out
+  dir may be a path or a URI such as ``file:///…``.
 - Gazetteers are broadcast (J1) — no shuffle for the linking "join".
 
 This file is also the ``spark-submit --py-files`` entry point:
@@ -39,12 +45,12 @@ import argparse
 import functools
 import json
 import os
-import shutil
 import time
 
 import pandas as pd
 import pyarrow as pa
 import pyarrow.dataset as ds
+import pyarrow.fs as pafs
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
@@ -83,11 +89,14 @@ def run_pipeline(spark: SparkSession, pages_path: str, gazetteers_dir: str,
     ``fail_after_buckets`` processes only the first k uncommitted bucket
     ids — chosen on the driver, with no scan, so they may hold no pages
     at all — the hook the resume test uses to simulate a mid-run crash.
-    ``max_page_bytes`` is the giant-page gate (extract.gate_pages; None
+    ``max_page_bytes`` is the giant-page gate (extract.gated_columns; None
     disables it).
     """
+    # every driver read and write under out_dir goes through this one
+    # filesystem; the lineage helpers take the path or URI itself
+    fs, root = lineage.out_filesystem(out_dir)
     checkpoint_path = os.path.join(out_dir, "checkpoint")
-    meta_path = os.path.join(out_dir, "checkpoint_meta.json")
+    meta_path = f"{root}/checkpoint_meta.json"
 
     # n_buckets contract: every committed bucket id and the remaining set
     # below are defined RELATIVE to the n_buckets the checkpoint was
@@ -97,9 +106,12 @@ def run_pipeline(spark: SparkSession, pages_path: str, gazetteers_dir: str,
     # pages into different bucket partitions: duplicates). A mismatch
     # must fail loudly, never mis-decide.
     meta = {}
-    if os.path.exists(meta_path):
-        with open(meta_path) as fh:
-            meta = json.load(fh)
+    try:
+        with fs.open_input_stream(meta_path) as fh:
+            meta = json.loads(fh.read())
+    except FileNotFoundError:
+        pass
+    else:
         if meta.get("n_buckets") != n_buckets:
             raise ValueError(
                 f"checkpoint at {out_dir} was written with n_buckets="
@@ -121,8 +133,9 @@ def run_pipeline(spark: SparkSession, pages_path: str, gazetteers_dir: str,
     else:
         # before any data write: a crash mid-run then resumes over
         # every bucket, and this run's rows are the only ones
-        if os.path.exists(checkpoint_path):
-            shutil.rmtree(checkpoint_path)
+        if fs.get_file_info(f"{root}/checkpoint").type != (
+                pafs.FileType.NotFound):
+            fs.delete_dir(f"{root}/checkpoint")
         committed = set()
     run_buckets = sorted(set(range(n_buckets)) - committed)[
         :fail_after_buckets]
@@ -158,28 +171,29 @@ def run_pipeline(spark: SparkSession, pages_path: str, gazetteers_dir: str,
     new_meta = {"n_buckets": n_buckets,
                 **{f"{k}_fingerprint": v for k, v in inputs.items()}}
     if meta != new_meta:
-        os.makedirs(out_dir, exist_ok=True)
-        with open(meta_path, "w") as fh:
-            json.dump(new_meta, fh)
+        fs.create_dir(root)
+        with fs.open_output_stream(meta_path) as fh:
+            fh.write(json.dumps(new_meta).encode())
 
-    # ONE shuffle: uniform url-hash bucket repartition (skew-proof). Each
-    # bucket lands in exactly one task, which writes its files.
-    todo = (lineage.with_bucket(pages, n_buckets)
+    # the pass input in ONE projection (gated payloads, bucket, doc_id,
+    # warc_ts micros), then ONE shuffle: the uniform url-hash bucket
+    # repartition (skew-proof). Each bucket lands in exactly one task,
+    # which writes its files.
+    todo = (pages.select(
+                *extract_mod.gated_columns(max_page_bytes),
+                lineage.bucket_of("url", n_buckets).alias("bucket"),
+                F.xxhash64("url").alias("doc_id"),
+                F.unix_micros("warc_ts").alias("_warc_us"))
             .filter(F.col("bucket").isin(run_buckets))
             .repartition(min(n_buckets, len(run_buckets)), "bucket"))
 
     gaz_bc = ner_mod.load_gazetteers(spark, *gaz_paths)
 
-    pruned = lineage.with_bucket(
-        extract_mod.gate_pages(todo, max_page_bytes), n_buckets).withColumns(
-        {"doc_id": F.xxhash64("url"), "_warc_us": F.unix_micros("warc_ts")})
-
     # ONE Python pass that also writes every table (see the module
     # docstring); its checkpoint rows are the run's only data action
-    fs, root = lineage.out_filesystem(out_dir)
     new_files = functools.partial(lineage.BucketFiles, fs, root,
                                   _table_schemas(with_mentions))
-    ckpt = _process(pruned, gaz_bc, new_files).collect()
+    ckpt = _process(todo, gaz_bc, new_files).collect()
     written = {r.bucket for r in ckpt}
     if len(written) != len(ckpt):
         raise RuntimeError("a bucket was written by more than one task")
@@ -198,7 +212,7 @@ def run_pipeline(spark: SparkSession, pages_path: str, gazetteers_dir: str,
     # and the next full run commits them.
     if fail_after_buckets is None:
         ckpt += sentinels
-    lineage.append_checkpoint(spark, sorted(ckpt, key=lambda r: r.bucket),
+    lineage.append_checkpoint(sorted(ckpt, key=lambda r: r.bucket),
                               checkpoint_path)
 
     if not any(r.row_count for r in ckpt):
@@ -221,9 +235,12 @@ def _read_pages(spark: SparkSession, pages_path: str) -> DataFrame:
     return spark.read.schema(schema).parquet(pages_path)
 
 
+@functools.cache
 def _table_schemas(with_mentions: bool) -> dict[str, pa.Schema]:
     """The arrow schema of each table a run writes: the DDL strings'
-    types in each table's column order (timestamps as UTC micros)."""
+    types in each table's column order (timestamps as UTC micros). Each
+    DDL string is parsed once (a JVM call), and the result is kept for
+    the process."""
     m_cols = [c for c in ner_mod.MENTIONS_COLUMNS if c != "chunk_id"]
     tables = {
         "docs": (extract_mod.DOCS_UDF_SCHEMA + ", doc_id long",
@@ -237,9 +254,9 @@ def _table_schemas(with_mentions: bool) -> dict[str, pa.Schema]:
         # with url on chunk_id
         tables["mentions"] = (ner_mod.MENTIONS_SCHEMA + ", url string",
                               ["chunk_id", *m_cols, "url"])
-    return {t: to_arrow_schema(StructType(
-                [StructType.fromDDL(ddl)[c] for c in cols]))
-            for t, (ddl, cols) in tables.items()}
+    parsed = {t: StructType.fromDDL(ddl) for t, (ddl, _) in tables.items()}
+    return {t: to_arrow_schema(StructType([parsed[t][c] for c in cols]))
+            for t, (_, cols) in tables.items()}
 
 
 def _tables(pdf: pd.DataFrame, docs: list[dict],
@@ -273,7 +290,7 @@ def _tables(pdf: pd.DataFrame, docs: list[dict],
     return out
 
 
-def _process(pruned: DataFrame, gaz_bc, new_files) -> DataFrame:
+def _process(todo: DataFrame, gaz_bc, new_files) -> DataFrame:
     """Gated pages (+ bucket, doc_id, _warc_us) → one checkpoint row per
     bucket. Each task runs extract → chunk → scan + link for each of its
     pages in one Arrow-batched pass and streams every table's rows into
@@ -308,8 +325,8 @@ def _process(pruned: DataFrame, gaz_bc, new_files) -> DataFrame:
                            columns=lineage.CHECKPOINT_ROW_COLUMNS,
                            dtype=object)
 
-    return pruned.mapInPandas(process_batches,
-                              schema=lineage.CHECKPOINT_ROW_SCHEMA)
+    return todo.mapInPandas(process_batches,
+                            schema=lineage.CHECKPOINT_ROW_SCHEMA)
 
 
 def main(argv=None):

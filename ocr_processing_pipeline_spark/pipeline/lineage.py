@@ -26,9 +26,15 @@ rule: "range-partitioned shuffles on url-hash"). Each run:
 4. the task returns one checkpoint row per bucket — row count, url
    count, warc_ts min/max, failure-code histogram, extract timing — and
    the driver collects them (the run's only data action), adds zero-row
-   sentinels for empty buckets and appends them as one file, stamped
-   with committed_at: the lineage + metrics record (replaces the
-   codecarbon CSV join of Monitoring/aggregator.py:5-88)
+   sentinels for empty buckets and appends them with pyarrow as one
+   file (``append_checkpoint``: temp name, then renamed to a unique
+   ``part-<uuid>.parquet``; no Spark job), stamped with committed_at:
+   the lineage + metrics record (replaces the codecarbon CSV join of
+   Monitoring/aggregator.py:5-88)
+
+The driver's reads and writes under the out dir (checkpoint, meta file,
+footer counts) go through ``out_filesystem``, as the tasks' do, so a
+``file://`` URI and a plain path name the same files.
 
 Crash between (3) and (4) leaves data files without a checkpoint row; the
 next run reprocesses those buckets and the overwrite replaces their
@@ -41,18 +47,18 @@ parquet, written directly: the image has no Iceberg jars.
 
 from __future__ import annotations
 
+import datetime
 import hashlib
 import os
 import uuid
 from collections import Counter
 
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.dataset as ds
 import pyarrow.fs as pafs
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 # a checkpoint row as BucketFiles.commit returns it: the table's columns
@@ -66,6 +72,16 @@ CHECKPOINT_ROW_SCHEMA = (
 )
 CHECKPOINT_ROW_COLUMNS = [f.split()[0]
                           for f in CHECKPOINT_ROW_SCHEMA.split(", ")]
+# the checkpoint table's files: those columns with Spark's types, the
+# timestamps as UTC micros, plus committed_at
+_UTC_US = pa.timestamp("us", tz="UTC")
+CHECKPOINT_SCHEMA = pa.schema([
+    ("bucket", pa.int32()), ("table_name", pa.string()),
+    ("row_count", pa.int64()), ("n_urls", pa.int64()),
+    ("warc_ts_min", _UTC_US), ("warc_ts_max", _UTC_US),
+    ("failure_counts", pa.map_(pa.string(), pa.int64())),
+    ("mean_extract_us", pa.float64()), ("max_extract_us", pa.int64()),
+    ("committed_at", _UTC_US)])
 
 # a (table, bucket) file's buffered rows are written out as one row group
 # once they reach this size, so a task streams its buckets to disk
@@ -77,11 +93,9 @@ _NO_STATISTICS = {"text", "content"}
 _LEDGER_COLUMNS = ["url", "warc_ts", "failure_code", "extract_us"]
 
 
-def with_bucket(df: DataFrame, n_buckets: int,
-                url_col: str = "url") -> DataFrame:
-    return df.withColumn(
-        "bucket", F.pmod(F.xxhash64(F.col(url_col)), F.lit(n_buckets))
-        .cast("int"))
+def bucket_of(url: str, n_buckets: int) -> Column:
+    """The bucket id of the url column ``url``."""
+    return F.pmod(F.xxhash64(url), F.lit(n_buckets)).cast("int")
 
 
 def pages_fingerprint(path: str) -> str:
@@ -104,7 +118,7 @@ def pages_fingerprint(path: str) -> str:
 def committed_buckets(spark: SparkSession, checkpoint_path: str,
                       table_name: str) -> DataFrame:
     """Distinct committed bucket ids for a table ('' DataFrame if none)."""
-    if not _exists(checkpoint_path):
+    if not _exists(*out_filesystem(checkpoint_path)):
         return spark.createDataFrame([], "bucket int")
     return (spark.read.parquet(checkpoint_path)
             .filter(F.col("table_name") == table_name)
@@ -114,9 +128,10 @@ def committed_buckets(spark: SparkSession, checkpoint_path: str,
 def committed_bucket_ids(checkpoint_path: str, table_name: str) -> set[int]:
     """Committed bucket ids for a table, read on the driver with pyarrow
     (the checkpoint is O(n_buckets) rows: no Spark job)."""
-    if not _exists(checkpoint_path):
+    fs, path = out_filesystem(checkpoint_path)
+    if not _exists(fs, path):
         return set()
-    rows = pq.read_table(checkpoint_path, columns=["bucket"],
+    rows = pq.read_table(path, filesystem=fs, columns=["bucket"],
                          filters=[("table_name", "=", table_name)])
     return set(rows.column("bucket").to_pylist())
 
@@ -124,7 +139,9 @@ def committed_bucket_ids(checkpoint_path: str, table_name: str) -> set[int]:
 def count_rows(path: str) -> int:
     """Rows in a (bucket-partitioned) parquet table, summed from the file
     footers: no Spark job and no data pages read."""
-    return ds.dataset(path, format="parquet", partitioning="hive").count_rows()
+    fs, path = out_filesystem(path)
+    return ds.dataset(path, filesystem=fs, format="parquet",
+                      partitioning="hive").count_rows()
 
 
 def remaining_pages(spark: SparkSession, pages: DataFrame,
@@ -132,7 +149,7 @@ def remaining_pages(spark: SparkSession, pages: DataFrame,
                     n_buckets: int) -> DataFrame:
     """F9: left-anti join against committed buckets (broadcast — tiny)."""
     done = committed_buckets(spark, checkpoint_path, table_name)
-    return (with_bucket(pages, n_buckets)
+    return (pages.withColumn("bucket", bucket_of("url", n_buckets))
             .join(F.broadcast(done), "bucket", "left_anti"))
 
 
@@ -150,8 +167,9 @@ def write_partitioned(df: DataFrame, path: str) -> None:
 
 
 def out_filesystem(out_dir: str) -> tuple[pafs.FileSystem, str]:
-    """The pyarrow filesystem of ``out_dir`` and its path there. A local
-    path is made absolute first (``from_uri`` rejects relative ones)."""
+    """The pyarrow filesystem of ``out_dir`` (a path or a URI) and its
+    path there. A local path is made absolute first (``from_uri`` rejects
+    relative ones)."""
     if "://" not in out_dir:
         out_dir = os.path.abspath(out_dir)
     return pafs.FileSystem.from_uri(out_dir)
@@ -249,27 +267,40 @@ def _checkpoint_row(bucket: int, rows: pa.Table) -> Row:
         max_extract_us=pc.max(rows["extract_us"]).as_py())
 
 
-def append_checkpoint(spark: SparkSession, rows: list[Row],
-                      checkpoint_path: str) -> None:
+def append_checkpoint(rows: list[Row], checkpoint_path: str) -> None:
     """Append checkpoint rows (BucketFiles.commit's) as one parquet file,
-    stamped with committed_at. The frame goes through pandas, so Spark
-    builds it on the Arrow path: one job, no Python worker."""
-    pdf = pd.DataFrame(rows, columns=CHECKPOINT_ROW_COLUMNS, dtype=object)
-    (spark.createDataFrame(pdf, CHECKPOINT_ROW_SCHEMA)
-     .withColumns({c: F.timestamp_micros(c)
-                   for c in ("warc_ts_min", "warc_ts_max")})
-     .withColumn("committed_at", F.current_timestamp())
-     .coalesce(1).write.mode("append").parquet(checkpoint_path))
+    stamped with one committed_at, written with pyarrow on the driver (no
+    Spark job). The file is written under a ``.``-prefixed temp name, which
+    no reader sees, then renamed to a unique ``part-<uuid>.parquet``: a
+    crash mid-append leaves nothing ``_exists`` or a reader counts."""
+    fs, path = out_filesystem(checkpoint_path)
+    now = datetime.datetime.now(datetime.timezone.utc)
+    table = pa.Table.from_pylist(
+        [{**r.asDict(), "committed_at": now} for r in rows],
+        schema=CHECKPOINT_SCHEMA)
+    fs.create_dir(path)
+    name = uuid.uuid4().hex
+    temp = f"{path}/.tmp-{name}.parquet"
+    pq.write_table(table, temp, filesystem=fs, compression="zstd",
+                   store_schema=False)
+    fs.move(temp, f"{path}/part-{name}.parquet")
 
 
-def _exists(path: str) -> bool:
-    return os.path.exists(path) and any(
-        f.endswith(".parquet") or f == "_SUCCESS"
-        for root, _, files in os.walk(path) for f in files
-    )
+def _exists(fs: pafs.FileSystem, path: str) -> bool:
+    """Whether ``path`` holds a data file a reader sees: a ``.parquet``
+    file with no name under ``path`` starting with ``.`` or ``_``, the
+    prefixes Spark and pyarrow skip. A temp file or ``_temporary/``
+    directory left by a crashed write is not a table."""
+    return any(
+        f.type == pafs.FileType.File and f.path.endswith(".parquet")
+        and not any(n[0] in "._"
+                    for n in f.path[len(path):].strip("/").split("/"))
+        for f in fs.get_file_info(pafs.FileSelector(
+            path, allow_not_found=True, recursive=True)))
 
 
-__all__ = ["with_bucket", "committed_buckets", "committed_bucket_ids",
-           "count_rows", "remaining_pages", "write_partitioned",
+__all__ = ["bucket_of", "committed_buckets",
+           "committed_bucket_ids", "count_rows", "remaining_pages", "write_partitioned",
            "out_filesystem", "BucketFiles", "append_checkpoint",
-           "CHECKPOINT_ROW_SCHEMA", "CHECKPOINT_ROW_COLUMNS"]
+           "CHECKPOINT_ROW_SCHEMA", "CHECKPOINT_ROW_COLUMNS",
+           "CHECKPOINT_SCHEMA"]

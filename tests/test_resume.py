@@ -370,3 +370,53 @@ def test_rerun_empties_buckets_that_lost_their_pages(spark, corpus_dir,
             os.path.join(out, t)).select("url").collect()}
         assert got <= urls, t
     _assert_one_file_per_bucket(out, 32)
+
+
+def test_file_uri_out_dir_resumes(spark, corpus_dir, tmp_path, monkeypatch):
+    """A ``file://`` out dir resumes like a plain path: a crash run, its
+    resume and a no-op, with the process in an empty directory. The
+    no-op returns the skip marker, the checkpoint holds one row per
+    bucket, and nothing lands under the current directory."""
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+    out = (tmp_path / "out").as_uri()
+    pages_path = f"{corpus_dir}/pages.parquet"
+    c1 = run_pipeline(spark, pages_path, corpus_dir, out,
+                      n_buckets=N_BUCKETS, fail_after_buckets=4)
+    assert c1["checkpoint"] <= 4
+    c2 = run_pipeline(spark, pages_path, corpus_dir, out,
+                      n_buckets=N_BUCKETS)
+    assert c2["checkpoint"] == N_BUCKETS
+    assert c2["docs"] == pq.read_metadata(pages_path).num_rows
+    c3 = run_pipeline(spark, pages_path, corpus_dir, out,
+                      n_buckets=N_BUCKETS)
+    assert c3["docs"] == 0 and "skipped" in c3
+    ckpt = spark.read.parquet(f"{out}/checkpoint").collect()
+    assert sorted(r.bucket for r in ckpt) == list(range(N_BUCKETS))
+    assert os.path.isfile(tmp_path / "out" / "checkpoint_meta.json")
+    assert os.listdir(cwd) == []
+
+
+def test_leftover_checkpoint_temp_files_are_ignored(spark, corpus_dir,
+                                                    tmp_path):
+    """A checkpoint directory that holds only what a crashed append can
+    leave — a ``.``-prefixed temp file and a ``_temporary/`` directory —
+    commits nothing: the next run processes every bucket and the call
+    after it is a no-op."""
+    out = tmp_path / "out"
+    pages_path = f"{corpus_dir}/pages.parquet"
+    ckpt = out / "checkpoint"
+    attempt = ckpt / "_temporary" / "0" / "_temporary" / "attempt_0"
+    attempt.mkdir(parents=True)
+    (ckpt / ".tmp-leftover.parquet").write_bytes(b"partial")
+    (attempt / "part-00000.parquet").write_bytes(b"partial")
+    assert lineage.committed_bucket_ids(str(ckpt), "docs") == set()
+
+    c1 = run_pipeline(spark, pages_path, corpus_dir, str(out),
+                      n_buckets=N_BUCKETS)
+    assert c1["docs"] == pq.read_metadata(pages_path).num_rows
+    assert c1["checkpoint"] == N_BUCKETS
+    c2 = run_pipeline(spark, pages_path, corpus_dir, str(out),
+                      n_buckets=N_BUCKETS)
+    assert c2["docs"] == 0 and "skipped" in c2

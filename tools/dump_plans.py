@@ -24,15 +24,18 @@ SF_DIR = "/root/testdata/sf0.001"
 
 COMMENT = {
     "flagship_pipeline": (
-        "The one frame run_pipeline collects: its checkpoint rows. All "
-        "Python work is ONE MapInPandas (extract → chunk → scan + link "
-        "per page) after the one Exchange, the bucket repartition, and "
-        "the same task writes its buckets' docs/chunks/edges files with "
-        "pyarrow, one per table and bucket, and returns one checkpoint row "
-        "per bucket. So a run is this job plus the checkpoint append: "
-        "nothing is cached, no table is read back and the UDF runs once "
-        "per run. The pages schema comes from a parquet footer read on "
-        "the driver, not a Spark job. The gazetteer 'join' is a "
+        "The one frame run_pipeline collects: its checkpoint rows. One "
+        "Project below the Exchange (the bucket repartition) gates the "
+        "payloads and adds bucket, doc_id and the warc_ts micros, so an "
+        "oversized payload is nulled before the shuffle. All Python work "
+        "is ONE MapInPandas after it (extract → chunk → scan + link per "
+        "page); the same task writes its buckets' docs/chunks/edges files "
+        "with pyarrow, one per table and bucket, and returns one "
+        "checkpoint row per bucket, which the driver appends with "
+        "pyarrow. So a run is two Spark jobs, the shuffle's map stage and "
+        "this pass: nothing is cached, no table is read back and the UDF "
+        "runs once per run. The pages schema comes from a parquet footer "
+        "read on the driver, not a Spark job. The gazetteer 'join' is a "
         "broadcast variable inside the UDF."),
     "filtered_scan": (
         "Both predicates reach the parquet reader (PushedFilters) and the "
