@@ -20,7 +20,7 @@ from time import perf_counter_ns
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..extractor.core import FailureCode, extract_page
@@ -100,10 +100,12 @@ def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 
 
 def gated_columns(max_page_bytes: int | None = DEFAULT_MAX_PAGE_BYTES
-                  ) -> list[Column]:
-    """The pages columns (url, warc_ts, html, text, lang, _oversized): the
-    five input columns extraction reads, with the giant-page gate applied,
-    for a caller to select along with any columns of its own.
+                  ) -> list[str]:
+    """The pages columns (url, warc_ts, html, text, lang, _oversized) as
+    SQL expressions: the five input columns extraction reads, with the
+    giant-page gate applied, for a caller to ``selectExpr`` along with any
+    columns of its own. SQL text costs one JVM round trip per column where
+    a Column expression costs one per function, literal and alias.
 
     Pages whose html OR pre-text payload exceeds ``max_page_bytes`` are
     quarantined JVM-side (octet_length test in the same projection —
@@ -116,23 +118,22 @@ def gated_columns(max_page_bytes: int | None = DEFAULT_MAX_PAGE_BYTES
     <= 0 is rejected (it would quarantine every page).
     """
     if max_page_bytes is None:
-        return [*map(F.col, PAGE_COLUMNS), F.lit(False).alias("_oversized")]
+        return [*PAGE_COLUMNS, "false AS _oversized"]
     if max_page_bytes <= 0:
         raise ValueError(f"max_page_bytes must be > 0, got {max_page_bytes}"
                          " (pass None to disable the gate)")
-    limit = F.lit(int(max_page_bytes))
-    too_big = F.coalesce(
-        (F.coalesce(F.octet_length("html"), F.lit(0)) > limit)
-        | (F.coalesce(F.octet_length("text"), F.lit(0)) > limit),
-        F.lit(False))
+    # an int literal, or a bigint one above 2**31 - 1, as F.lit makes
+    limit = int(max_page_bytes)
+    too_big = (f"coalesce(coalesce(octet_length(html), 0) > {limit} OR "
+               f"coalesce(octet_length(text), 0) > {limit}, false)")
     return [
-        F.col("url"), F.col("warc_ts"),
-        F.when(too_big, F.lit(None).cast("binary"))
-        .otherwise(F.col("html")).alias("html"),
-        F.when(too_big, F.lit(None).cast("string"))
-        .otherwise(F.col("text")).alias("text"),
-        F.col("lang"),
-        too_big.alias("_oversized")]
+        "url", "warc_ts",
+        f"CASE WHEN {too_big} THEN CAST(NULL AS BINARY) ELSE html END "
+        "AS html",
+        f"CASE WHEN {too_big} THEN CAST(NULL AS STRING) ELSE text END "
+        "AS text",
+        "lang",
+        f"{too_big} AS _oversized"]
 
 
 def extract_docs(pages: DataFrame,
@@ -144,7 +145,7 @@ def extract_docs(pages: DataFrame,
     the projection into the parquet scan. ``max_page_bytes`` is the
     giant-page gate (see gated_columns; None disables it).
     """
-    return (pages.select(*gated_columns(max_page_bytes))
+    return (pages.selectExpr(*gated_columns(max_page_bytes))
             .mapInPandas(_extract_batches, schema=DOCS_UDF_SCHEMA)
             .withColumn("doc_id", F.xxhash64("url"))
             .select(*DOC_COLUMNS))

@@ -29,6 +29,14 @@ partitioning + AQE):
 - The driver's own out-dir I/O (meta file, checkpoint, footer counts)
   goes through the same pyarrow filesystem as the tasks', so the out
   dir may be a path or a URI such as ``file:///…``.
+- Fixed cost around the pass, per run. On the driver the pass input is
+  SQL text (``selectExpr``/``where``): a run makes about 95 Py4J round
+  trips, not one per Column function, literal and alias. In the workers,
+  PySpark's per-task ``importlib.invalidate_caches()`` re-read every zip
+  importer's archive directory (pyspark.zip, py4j, the Spark jar: 16
+  reads, 180-260 ms per task) before the UDF body started; the pass
+  makes each worker re-read only archives that changed
+  (``_keep_zip_directories``), so a warm task pays 16 stats.
 - Gazetteers are broadcast (J1) — no shuffle for the linking "join".
 
 This file is also the ``spark-submit --py-files`` entry point:
@@ -45,14 +53,15 @@ import argparse
 import functools
 import json
 import os
+import sys
 import time
+import zipimport
 
 import pandas as pd
 import pyarrow as pa
 import pyarrow.dataset as ds
 import pyarrow.fs as pafs
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
 from pyspark.sql.types import StructType
 
@@ -178,13 +187,14 @@ def run_pipeline(spark: SparkSession, pages_path: str, gazetteers_dir: str,
     # the pass input in ONE projection (gated payloads, bucket, doc_id,
     # warc_ts micros), then ONE shuffle: the uniform url-hash bucket
     # repartition (skew-proof). Each bucket lands in exactly one task,
-    # which writes its files.
-    todo = (pages.select(
+    # which writes its files. Written as SQL text: about one Py4J round
+    # trip per column instead of one per function, literal and alias.
+    todo = (pages.selectExpr(
                 *extract_mod.gated_columns(max_page_bytes),
-                lineage.bucket_of("url", n_buckets).alias("bucket"),
-                F.xxhash64("url").alias("doc_id"),
-                F.unix_micros("warc_ts").alias("_warc_us"))
-            .filter(F.col("bucket").isin(run_buckets))
+                f"{lineage.bucket_of('url', n_buckets)} AS bucket",
+                "xxhash64(url) AS doc_id",
+                "unix_micros(warc_ts) AS _warc_us")
+            .where(f"bucket IN ({', '.join(map(str, run_buckets))})")
             .repartition(min(n_buckets, len(run_buckets)), "bucket"))
 
     gaz_bc = ner_mod.load_gazetteers(spark, *gaz_paths)
@@ -290,6 +300,39 @@ def _tables(pdf: pd.DataFrame, docs: list[dict],
     return out
 
 
+# zipimporter's own invalidate_caches: re-reads the archive's directory
+_reread_zip_directory = zipimport.zipimporter.invalidate_caches
+
+
+def _invalidate_zip_if_changed(self) -> None:
+    """zipimporter.invalidate_caches that re-reads the archive's directory
+    only when the archive's (mtime_ns, size, inode) differs from what this
+    importer last read: a new importer reads on its first call, and a
+    changed archive (a re-shipped ``--py-files`` zip) is read again."""
+    try:
+        st = os.stat(self.archive)
+        seen = (st.st_mtime_ns, st.st_size, st.st_ino)
+    except OSError:
+        seen = None
+    if seen is None or getattr(self, "_read_stat", None) != seen:
+        _reread_zip_directory(self)
+        self._read_stat = seen
+
+
+@functools.cache
+def _keep_zip_directories() -> None:
+    """Once per Python worker process: keep zip directories across tasks.
+
+    Before every task PySpark's worker calls importlib.invalidate_caches()
+    (pyspark/worker_util.py::setup_spark_files). Before CPython 3.12 each
+    zip importer answers by re-reading its archive's whole central
+    directory; a warm worker holds 16 of them (pyspark.zip, the py4j zip,
+    the Spark core jar), 180-260 ms per task with 4 tasks at once, before
+    the UDF body starts. 3.12 invalidates lazily, so it is left alone."""
+    if sys.version_info < (3, 12):
+        zipimport.zipimporter.invalidate_caches = _invalidate_zip_if_changed
+
+
 def _process(todo: DataFrame, gaz_bc, new_files) -> DataFrame:
     """Gated pages (+ bucket, doc_id, _warc_us) → one checkpoint row per
     bucket. Each task runs extract → chunk → scan + link for each of its
@@ -297,6 +340,7 @@ def _process(todo: DataFrame, gaz_bc, new_files) -> DataFrame:
     its buckets' files (``new_files()``: a lineage.BucketFiles)."""
 
     def process_batches(batches):
+        _keep_zip_directories()
         idx, memo = ner_mod._get_index_and_memo(gaz_bc)
         files = new_files()
         for pdf in batches:

@@ -58,7 +58,7 @@ import pyarrow.compute as pc
 import pyarrow.dataset as ds
 import pyarrow.fs as pafs
 import pyarrow.parquet as pq
-from pyspark.sql import Column, DataFrame, Row, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 # a checkpoint row as BucketFiles.commit returns it: the table's columns
@@ -93,9 +93,9 @@ _NO_STATISTICS = {"text", "content"}
 _LEDGER_COLUMNS = ["url", "warc_ts", "failure_code", "extract_us"]
 
 
-def bucket_of(url: str, n_buckets: int) -> Column:
-    """The bucket id of the url column ``url``."""
-    return F.pmod(F.xxhash64(url), F.lit(n_buckets)).cast("int")
+def bucket_of(url: str, n_buckets: int) -> str:
+    """The bucket id of the url column ``url``, as a SQL expression."""
+    return f"CAST(pmod(xxhash64({url}), {int(n_buckets)}) AS INT)"
 
 
 def pages_fingerprint(path: str) -> str:
@@ -149,7 +149,7 @@ def remaining_pages(spark: SparkSession, pages: DataFrame,
                     n_buckets: int) -> DataFrame:
     """F9: left-anti join against committed buckets (broadcast — tiny)."""
     done = committed_buckets(spark, checkpoint_path, table_name)
-    return (pages.withColumn("bucket", bucket_of("url", n_buckets))
+    return (pages.withColumn("bucket", F.expr(bucket_of("url", n_buckets)))
             .join(F.broadcast(done), "bucket", "left_anti"))
 
 

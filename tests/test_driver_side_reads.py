@@ -2,8 +2,9 @@
 
 The checkpoint, the gazetteers and the returned row counts are read with
 pyarrow on the driver, and no table written in a run is read back by it.
-These tests pin the Spark job budget per call, the cumulative return
-counts, the gazetteer payload, and an empty input.
+These tests pin the Spark job budget and the Py4J round-trip budget per
+call, the cumulative return counts, the gazetteer payload, and an empty
+input.
 """
 
 import datetime
@@ -11,6 +12,7 @@ import os
 from contextlib import contextmanager
 
 import pyarrow.parquet as pq
+from py4j.clientserver import ClientServerConnection
 
 from ocr_processing_pipeline_spark.pipeline.job import run_pipeline
 from ocr_processing_pipeline_spark.pipeline.ner import load_gazetteers
@@ -56,6 +58,55 @@ def test_job_budget_per_call(spark, corpus_dir, tmp_path):
     assert noop == [0]
     assert crash[0] <= 2, crash
     assert resume[0] <= 2, resume
+
+
+@contextmanager
+def py4j_round_trips():
+    """Yields a list that holds, after the block, the number of Py4J
+    commands the block sent to the JVM. Memory commands are not counted:
+    they release proxies Python's garbage collector freed, whichever code
+    made them, whenever it happens to run."""
+    send = ClientServerConnection.send_command
+    got = []
+    sent = [0]
+
+    def counting(self, command):
+        if not command.startswith("m\n"):
+            sent[0] += 1
+        return send(self, command)
+
+    ClientServerConnection.send_command = counting
+    try:
+        yield got
+    finally:
+        ClientServerConnection.send_command = send
+        got.append(sent[0])
+
+
+# measured: 95 round trips for the crash run and 95 for its resume, on
+# every try; with the pass input built from Column expressions the same
+# calls took 455 each. About 25% headroom.
+ROUND_TRIP_BUDGET = 120
+
+
+def test_py4j_round_trip_budget_per_call(spark, corpus_dir, tmp_path):
+    """The driver builds a run's pass input as SQL text: a crash run and
+    its resume each make at most ROUND_TRIP_BUDGET Py4J round trips once
+    the session holds the gazetteer broadcast, and a no-op makes none."""
+    pages = f"{corpus_dir}/pages.parquet"
+    run_pipeline(spark, pages, corpus_dir, str(tmp_path / "warm"),
+                 n_buckets=N_BUCKETS)
+    out = str(tmp_path / "out")
+    with py4j_round_trips() as crash:
+        run_pipeline(spark, pages, corpus_dir, out, n_buckets=N_BUCKETS,
+                     fail_after_buckets=N_BUCKETS // 2)
+    with py4j_round_trips() as resume:
+        run_pipeline(spark, pages, corpus_dir, out, n_buckets=N_BUCKETS)
+    with py4j_round_trips() as noop:
+        run_pipeline(spark, pages, corpus_dir, out, n_buckets=N_BUCKETS)
+    assert noop == [0]
+    assert crash[0] <= ROUND_TRIP_BUDGET, crash
+    assert resume[0] <= ROUND_TRIP_BUDGET, resume
 
 
 def test_return_counts_match_tables(spark, corpus_dir, tmp_path):

@@ -85,6 +85,20 @@ def test_gate_disabled_extracts_everything(spark):
     assert "giant page word soup" in g.text
 
 
+def test_gate_limit_above_int_range(spark):
+    """A limit above 2**31 - 1 (a bigint literal in the gate's SQL)
+    quarantines nothing: the docs equal those with the gate off."""
+    pages, _ = _pages_with_giant(spark)
+
+    def docs(limit):
+        return sorted((r.url, r.text, r.failure_code) for r in
+                      extract_docs(pages, max_page_bytes=limit).collect())
+
+    gated = docs(3 << 30)
+    assert all(code != FailureCode.OVERSIZED for _, _, code in gated)
+    assert gated == docs(None)
+
+
 def test_oversized_pre_text_quarantined(spark):
     """The gate must cover the pre-text fallback path too: a giant text
     payload with no html is exactly as dangerous to the Arrow batch."""
