@@ -100,6 +100,15 @@ def run_pipeline(spark: SparkSession, pages_path: str, gazetteers_dir: str,
     at all — the hook the resume test uses to simulate a mid-run crash.
     ``max_page_bytes`` is the giant-page gate (extract.gated_columns; None
     disables it).
+
+    Side effect beyond this call: on CPython < 3.12 the pass replaces
+    ``zipimport.zipimporter.invalidate_caches`` in every Python worker it
+    runs in, for the rest of that worker's life (``_keep_zip_directories``),
+    so the session's other Python UDFs share it. There an
+    ``importlib.invalidate_caches()`` re-reads a zip archive's directory
+    only when the archive's (mtime, ctime, size, inode) changed. An
+    archive rewritten in place within one file-system timestamp tick of
+    the last read, at the same size, is not noticed.
     """
     # every driver read and write under out_dir goes through this one
     # filesystem; the lineage helpers take the path or URI itself
@@ -300,26 +309,25 @@ def _tables(pdf: pd.DataFrame, docs: list[dict],
     return out
 
 
-# zipimporter's own invalidate_caches: re-reads the archive's directory
-_reread_zip_directory = zipimport.zipimporter.invalidate_caches
-
-
 def _invalidate_zip_if_changed(self) -> None:
     """zipimporter.invalidate_caches that re-reads the archive's directory
-    only when the archive's (mtime_ns, size, inode) differs from what this
-    importer last read: a new importer reads on its first call, and a
-    changed archive (a re-shipped ``--py-files`` zip) is read again."""
+    only when the archive's (mtime_ns, ctime_ns, size, inode) differs from
+    what this importer last read: a new importer reads on its first call,
+    and a changed archive (a re-shipped ``--py-files`` zip, or one copied
+    over in place with its mtime kept: any write moves the ctime) is read
+    again. The stdlib method is looked up on the class, never captured, so
+    a copy of this function shipped by value in a later task still calls
+    the original."""
     try:
         st = os.stat(self.archive)
-        seen = (st.st_mtime_ns, st.st_size, st.st_ino)
+        seen = (st.st_mtime_ns, st.st_ctime_ns, st.st_size, st.st_ino)
     except OSError:
         seen = None
     if seen is None or getattr(self, "_read_stat", None) != seen:
-        _reread_zip_directory(self)
+        zipimport.zipimporter._stdlib_invalidate_caches(self)
         self._read_stat = seen
 
 
-@functools.cache
 def _keep_zip_directories() -> None:
     """Once per Python worker process: keep zip directories across tasks.
 
@@ -328,9 +336,17 @@ def _keep_zip_directories() -> None:
     zip importer answers by re-reading its archive's whole central
     directory; a warm worker holds 16 of them (pyspark.zip, the py4j zip,
     the Spark core jar), 180-260 ms per task with 4 tasks at once, before
-    the UDF body starts. 3.12 invalidates lazily, so it is left alone."""
-    if sys.version_info < (3, 12):
-        zipimport.zipimporter.invalidate_caches = _invalidate_zip_if_changed
+    the UDF body starts. 3.12 invalidates lazily, so it is left alone.
+
+    The once-per-process guard is state on the class itself (the stdlib
+    method, kept as ``_stdlib_invalidate_caches``), not a cache on this
+    function: run as ``python -m …job`` this module is ``__main__`` and the
+    pass ships its functions by value, a fresh copy per task."""
+    cls = zipimport.zipimporter
+    if sys.version_info < (3, 12) and not hasattr(
+            cls, "_stdlib_invalidate_caches"):
+        cls._stdlib_invalidate_caches = cls.invalidate_caches
+        cls.invalidate_caches = _invalidate_zip_if_changed
 
 
 def _process(todo: DataFrame, gaz_bc, new_files) -> DataFrame:
