@@ -3,7 +3,7 @@
 - ``entry(spark)``: flagship extraction pipeline on a deterministic
   synthetic pages corpus sized to sf0.001, joined with chunk/edge counts.
 - ``queries()``: every implemented operator from SURVEY.md §2 (registry in
-  ocr_processing_pipeline_spark/plans/queries.py) — 83 queries, 79
+  ocr_processing_pipeline_spark/plans/queries.py) — 85 queries, 81
   oracle-gated via DuckDB SQL twins, plus the four pipeline_* queries with
   rows-only checks (their real gate is the pytest byte-identity suite).
 - ``oracle_sql()``: the DuckDB twins, alias-matched column for column.

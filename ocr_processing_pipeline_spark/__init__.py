@@ -14,7 +14,6 @@ Layout:
     operators/   generic large-scale operators (dedup, ANN, as-of, top-k, ...)
     sources/     synthetic corpus generator
     functions/   scalar helpers (fuzzy ratios, text functions)
-    streaming/   Trigger.AvailableNow incremental variant
 """
 
 __version__ = "0.1.0"

@@ -30,10 +30,10 @@ DEFAULT_NUM_HASHES = 8
 DEFAULT_BAND_SIZE = 2
 
 # The parameters the materialized snapshot dedup index is BUILT with
-# (dedup_index_dir writes these to the index's params.json; the
-# streaming probe falls back to them for params-less indexes). One
-# constant, two consumers — band keys from mismatched parameters never
-# collide, so the two sites must never drift apart.
+# (dedup_index_dir writes these to the index's params.json; the queries
+# that probe the index raise when that file disagrees with them). One
+# constant for the build and every probe — band keys from mismatched
+# parameters never collide, so the sites must never drift apart.
 INDEX_BUILD_PARAMS = {"n": 3, "num_hashes": 4, "band_size": 2,
                       "hash_impl": "md5"}
 

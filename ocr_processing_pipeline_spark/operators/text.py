@@ -1,10 +1,10 @@
 """Text-analysis operators for training-data pipelines (built-ins only).
 
-Everything here compiles to JVM expressions (regexp_count / split /
-aggregate) — no Python in the hot path — and each has an exact ANSI-SQL
-twin in the DuckDB oracle (plans/queries.py). The language-ID heuristic
-mirrors extractor/textproc.detect_lang but is expressed relationally so it
-runs inside whole-stage codegen at 100 TB.
+Everything here compiles to JVM expressions (regexp_count /
+regexp_replace / md5) — no Python in the hot path — and each has an
+exact ANSI-SQL twin in the DuckDB oracle (plans/queries.py). The
+language-ID heuristic mirrors extractor/textproc.detect_lang but is
+expressed relationally so it runs inside whole-stage codegen at 100 TB.
 """
 
 from __future__ import annotations
@@ -22,42 +22,6 @@ LANG_PATTERNS = {
     "en": r"\b(the|and|is|not|with|of|to|in|for|that)\b",
 }
 _LANG_ORDER = ("de", "fr", "it", "en")
-
-
-def token_count_col(col):
-    """Whitespace token count; 0 for empty/blank text."""
-    trimmed = F.trim(col)
-    return F.when(F.length(trimmed) == 0, F.lit(0)).otherwise(
-        F.size(F.split(trimmed, r"\s+"))).cast("int")
-
-
-def quality_features(df: DataFrame, text_col: str) -> DataFrame:
-    """Adds length/token/punct/digit/upper-ratio quality columns."""
-    t = F.col(text_col)
-    n_chars = F.length(t)
-    safe = F.greatest(n_chars, F.lit(1)).cast("double")
-    return (df
-            .withColumn("n_chars", n_chars.cast("int"))
-            .withColumn("n_tokens", token_count_col(t))
-            .withColumn("punct_ratio", F.round(
-                F.regexp_count(t, F.lit(r"[^\w\s]")) / safe, 5))
-            .withColumn("digit_ratio", F.round(
-                F.regexp_count(t, F.lit(r"[0-9]")) / safe, 5))
-            .withColumn("stopword_ratio", F.round(
-                F.regexp_count(F.lower(t), F.lit(LANG_PATTERNS["en"]))
-                / F.greatest(token_count_col(t), F.lit(1)).cast("double"),
-                5)))
-
-
-def quality_score(df: DataFrame, text_col: str,
-                  min_tokens: int = 5, max_punct_ratio: float = 0.3
-                  ) -> DataFrame:
-    """Boolean keep/drop quality gate + the features it derives from."""
-    feats = quality_features(df, text_col)
-    return feats.withColumn(
-        "keep",
-        (F.col("n_tokens") >= min_tokens)
-        & (F.col("punct_ratio") <= max_punct_ratio))
 
 
 def langid(df: DataFrame, text_col: str) -> DataFrame:
@@ -131,6 +95,5 @@ def doc_fingerprint(df: DataFrame, text_col: str) -> DataFrame:
                                r"\s+", " ")))
 
 
-__all__ = ["token_count_col", "quality_features", "quality_score",
-           "langid", "doc_fingerprint", "canonicalize_url", "url_host",
+__all__ = ["langid", "doc_fingerprint", "canonicalize_url", "url_host",
            "LANG_PATTERNS"]

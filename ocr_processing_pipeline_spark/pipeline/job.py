@@ -98,6 +98,8 @@ def run_pipeline(spark: SparkSession, pages_path: str, gazetteers_dir: str,
     ``fail_after_buckets`` processes only the first k uncommitted bucket
     ids — chosen on the driver, with no scan, so they may hold no pages
     at all — the hook the resume test uses to simulate a mid-run crash.
+    Like every run, it commits one checkpoint row per bucket it ran,
+    with a zero-row sentinel for a bucket that holds no pages.
     ``max_page_bytes`` is the giant-page gate (extract.gated_columns; None
     disables it).
 
@@ -221,16 +223,13 @@ def run_pipeline(spark: SparkSession, pages_path: str, gazetteers_dir: str,
     empty = new_files()
     for b in set(run_buckets) - written:
         empty.open(b)
-    sentinels = empty.commit()
+    ckpt += empty.commit()
 
     # lineage/metrics rows LAST (commit point) — crash before this line ⇒
-    # buckets get reprocessed and their files replaced next run. A run
-    # bucket that produced no rows has ZERO pages and gets a zero-row
-    # sentinel, so the no-op path above closes over it; a simulated crash
-    # (fail_after_buckets) leaves them uncommitted, as a real one would,
-    # and the next full run commits them.
-    if fail_after_buckets is None:
-        ckpt += sentinels
+    # none of the run's buckets is committed, and they are reprocessed and
+    # their files replaced next run. Every run bucket gets one row: one
+    # that produced no rows has ZERO pages and gets a zero-row sentinel,
+    # so the no-op path above closes over it.
     lineage.append_checkpoint(sorted(ckpt, key=lambda r: r.bucket),
                               checkpoint_path)
 
@@ -366,18 +365,18 @@ def _process(todo: DataFrame, gaz_bc, new_files) -> DataFrame:
                     pdf["doc_id"], pdf["html"], pdf["text"],
                     pdf["_oversized"], pdf["warc_ts"]):
                 row = extract_mod.extract_row(html, text, too_big)
-                kids = {"chunks": chunk_mod.chunk_rows(doc_id, row["text"]),
-                        "edges": [], "mentions": []}
+                kids = {t: [] for t in nested}
+                kids["chunks"] = chunk_mod.chunk_rows(doc_id, row["text"])
                 date = ner_mod.doc_date(warc_ts)
                 for c in kids["chunks"]:
                     # one scan feeds both the linker and the mentions
                     found = idx.scan(c["content"])
                     kids["edges"] += ner_mod.edge_rows(
                         found, idx, memo, c["chunk_id"], c["content"], date)
-                    kids["mentions"] += ner_mod.mention_rows(
-                        found, c["chunk_id"])
+                    if "mentions" in kids:
+                        kids["mentions"] += ner_mod.mention_rows(
+                            found, c["chunk_id"])
                 docs.append(row)
-                # (mentions are dropped here unless with_mentions)
                 for t, rows in nested.items():
                     rows.append(kids[t])
             files.add(_tables(pdf, docs, nested, files.schemas))

@@ -1218,7 +1218,7 @@ def corpus_mixture_sample(spark, sf_dir):
         "running sum of session starts, windows partitioned by user so "
         "no global sort exists at scale; gaps compared at microsecond "
         "precision (unix_micros/epoch_us) so truncation can't flip a "
-        "boundary; the batch twin of streaming/session_window")
+        "boundary")
 def sessionize_clicks(spark, sf_dir):
     e = _t(spark, sf_dir, "events")
     ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
@@ -1249,13 +1249,10 @@ def sessionize_clicks(spark, sf_dir):
     FROM events
     GROUP BY 1, 2
     """,
-    doc="tumbling 1-hour event-time window aggregation — the BATCH twin "
-        "of the streaming path's windowed counts (streaming/: readStream "
-        "-> watermark -> F.window -> writeStream; tests/test_streaming "
-        "asserts stream==batch on the same input). F.window group-by is "
-        "a plain hash aggregate (map-side partials, one shuffle of "
-        "(n_windows x n_types) rows); epoch-aligned in UTC on both "
-        "engines so bucket edges match time_bucket exactly")
+    doc="tumbling 1-hour event-time window aggregation. F.window "
+        "group-by is a plain hash aggregate (map-side partials, one "
+        "shuffle of (n_windows x n_types) rows); epoch-aligned in UTC on "
+        "both engines so bucket edges match time_bucket exactly")
 def windowed_event_counts(spark, sf_dir):
     e = _t(spark, sf_dir, "events")
     w = F.window(F.col("ts").cast("timestamp"), "1 hour")
@@ -3027,9 +3024,10 @@ def dedup_index_dir(spark, sf_dir: str) -> str:
         # record the MinHash parameters BESIDE the index FIRST: probes
         # built with different (n, num_hashes, band_size) never band-
         # collide, so a mismatched consumer would silently find zero
-        # near-dups — stream_incremental_dedup reads and enforces this
-        # file, and the rebuild guard above also requires it, so a
-        # crash mid-build can never leave a params-less index behind
+        # near-dups — the probes that read the index check this file
+        # against INDEX_BUILD_PARAMS, and the rebuild guard above also
+        # requires it, so a crash mid-build can never leave a
+        # params-less index behind
         p = INDEX_BUILD_PARAMS
         os.makedirs(out, exist_ok=True)
         with open(params_p, "w") as fh:
@@ -3154,7 +3152,7 @@ def dedup_incremental(spark, sf_dir):
     # probe with the params the index was BUILT with (its params.json,
     # written first by dedup_index_dir) — mismatched MinHash params
     # band-collide nothing and every near-dup would silently come back
-    # 'unique' (ADVICE r5; same enforcement as stream_incremental_dedup)
+    # 'unique' (ADVICE r5)
     with open(os.path.join(idx_dir, "params.json")) as fh:
         p = json.load(fh)
     keys = ("n", "num_hashes", "band_size")

@@ -114,10 +114,12 @@ def test_checkpoint_rows_match_docs(spark, corpus_dir, tmp_path, zurich_tz):
                  fail_after_buckets=N_BUCKETS // 2)
     crashed = _checkpoint(spark, out)
     docs_buckets = set(_from_docs(spark, out))
-    # the crash run committed exactly its non-empty buckets: no sentinels
-    assert len(docs_buckets) < N_BUCKETS // 2
-    assert set(crashed) == docs_buckets
-    assert all(r["row_count"] > 0 for r in crashed.values())
+    # the crash run committed every bucket it ran, its empty ones as
+    # zero-row sentinels, like a full run
+    assert set(crashed) == set(range(N_BUCKETS // 2))
+    assert docs_buckets < set(crashed)
+    assert all((r["row_count"] > 0) == (b in docs_buckets)
+               for b, r in crashed.items())
 
     run_pipeline(spark, pages, corpus_dir, out, n_buckets=N_BUCKETS)
     got = _checkpoint(spark, out)

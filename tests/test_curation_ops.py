@@ -92,6 +92,12 @@ def test_incremental_dedup_planted_cross_snapshot(spark):
     assert (out[200].match_kind, out[200].canonical) == ("exact", 100)
     assert (out[201].match_kind, out[201].canonical) == ("near", 100)
     assert (out[202].match_kind, out[202].canonical) == ("unique", 202)
+    # a doc's verdict depends only on (doc, existing corpus), never on the
+    # other new docs: without the near-dup, the rest decide as before
+    rest = incremental_dedup(new.filter(new.doc_id != 201), existing,
+                             "text", "doc_id", num_hashes=4,
+                             band_size=2).collect()
+    assert sorted(rest) == [out[200], out[202]]
 
 
 def test_incremental_dedup_precomputed_index_identical(spark):

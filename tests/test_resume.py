@@ -11,6 +11,7 @@ import os
 import shutil
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 import pytest
 from pyspark.errors import AnalysisException
@@ -176,19 +177,23 @@ def test_noop_fast_path_with_empty_buckets(spark, corpus_dir, tmp_path):
 
 def test_empty_todo_resume_backfills_sentinels(spark, corpus_dir, tmp_path):
     """A checkpoint whose non-empty buckets are all committed but whose
-    empty buckets carry no sentinel rows (e.g. written by a partial run)
-    must be healed by the next full resume: it finds todo empty, commits
-    the missing sentinels, and the no-op fast path closes from then on."""
+    empty buckets carry no sentinel rows (e.g. written before every run
+    committed them) must be healed by the next full resume: it finds
+    todo empty, commits the missing sentinels, and the no-op fast path
+    closes from then on."""
     small = str(tmp_path / "small_pages2.parquet")
     (spark.read.parquet(f"{corpus_dir}/pages.parquet").limit(10)
      .write.parquet(small))
     out = str(tmp_path / "out_backfill")
     n_buckets = 32
-    # partial-mode run that happens to cover every non-empty bucket —
-    # sentinels deliberately NOT committed (fail_after_buckets set)
-    c1 = run_pipeline(spark, small, corpus_dir, out, n_buckets=n_buckets,
-                      fail_after_buckets=n_buckets)
-    assert 0 < c1["checkpoint"] < n_buckets
+    run_pipeline(spark, small, corpus_dir, out, n_buckets=n_buckets)
+    # the premise: the same checkpoint without its sentinel rows
+    ckpt_dir = os.path.join(out, "checkpoint")
+    kept = pq.read_table(ckpt_dir).filter(pc.field("row_count") > 0)
+    shutil.rmtree(ckpt_dir)
+    os.makedirs(ckpt_dir)
+    pq.write_table(kept, os.path.join(ckpt_dir, "part-0.parquet"))
+    assert 0 < len(lineage.committed_bucket_ids(ckpt_dir, "docs")) < n_buckets
     # full resume: todo is empty -> backfills the empty-bucket sentinels
     c2 = run_pipeline(spark, small, corpus_dir, out, n_buckets=n_buckets)
     assert "skipped" in c2
