@@ -16,8 +16,12 @@ partitioning + AQE):
   per run, not once per stage. Its input is one projection of the pages,
   made before the shuffle: the giant-page gate, ``bucket``,
   ``doc_id = xxhash64(url)`` and the warc_ts epoch micros, all JVM-side.
-  The only shuffle is the single repartition to n_buckets, so each
-  bucket is in one task.
+  The only shuffle places whole buckets on k = min(run buckets, cores)
+  tasks by each bucket's rank among the run's buckets, so each bucket is
+  in one task, every task holds ⌊len/k⌋ or ⌈len/k⌉ of them and all run
+  in one wave. (A hash of the ids 0..n-1 would leave some tasks empty,
+  put 3 buckets in another and start a second wave, each of whose
+  Python tasks pays its own start-up cost.)
 - The same task writes its buckets' docs, chunks, edges (and mentions)
   files with pyarrow (lineage.BucketFiles: one deterministic file per
   table and bucket, replaced in place) and returns one checkpoint row per
@@ -30,7 +34,7 @@ partitioning + AQE):
   goes through the same pyarrow filesystem as the tasks', so the out
   dir may be a path or a URI such as ``file:///…``.
 - Fixed cost around the pass, per run. On the driver the pass input is
-  SQL text (``selectExpr``/``where``): a run makes about 95 Py4J round
+  SQL text (``selectExpr``/``where``): a run makes about 92 Py4J round
   trips, not one per Column function, literal and alias. In the workers,
   PySpark's per-task ``importlib.invalidate_caches()`` re-read every zip
   importer's archive directory (pyspark.zip, py4j, the Spark jar: 16
@@ -62,6 +66,7 @@ import pyarrow as pa
 import pyarrow.dataset as ds
 import pyarrow.fs as pafs
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
 from pyspark.sql.types import StructType
 
@@ -102,6 +107,10 @@ def run_pipeline(spark: SparkSession, pages_path: str, gazetteers_dir: str,
     with a zero-row sentinel for a bucket that holds no pages.
     ``max_page_bytes`` is the giant-page gate (extract.gated_columns; None
     disables it).
+
+    The pass runs in k = min(run buckets, defaultParallelism) tasks, k
+    read when the run starts. Under dynamic allocation that is the cores
+    registered at that moment, or ``spark.default.parallelism`` if set.
 
     Side effect beyond this call: on CPython < 3.12 the pass replaces
     ``zipimport.zipimporter.invalidate_caches`` in every Python worker it
@@ -196,17 +205,27 @@ def run_pipeline(spark: SparkSession, pages_path: str, gazetteers_dir: str,
             fh.write(json.dumps(new_meta).encode())
 
     # the pass input in ONE projection (gated payloads, bucket, doc_id,
-    # warc_ts micros), then ONE shuffle: the uniform url-hash bucket
-    # repartition (skew-proof). Each bucket lands in exactly one task,
-    # which writes its files. Written as SQL text: about one Py4J round
-    # trip per column instead of one per function, literal and alias.
+    # warc_ts micros), then ONE shuffle that places whole buckets on
+    # k = min(run buckets, cores) tasks. A row's partition id is its
+    # bucket's rank in run_buckets (the exchange takes it modulo k), so
+    # each bucket lands in exactly one task, which writes its files, and
+    # every task holds ⌊len/k⌋ or ⌈len/k⌉ buckets: one wave, and a task
+    # is empty only if its buckets hold no pages. The rank, not the id:
+    # ids 1 and 5 share a task under id mod 2. array_position scans the
+    # run's bucket list per row (about 2 µs at 4096 buckets, one core),
+    # against the milliseconds a page costs in the pass. Written as SQL
+    # text: about one Py4J round trip per column instead of one per
+    # function, literal and alias.
+    in_run = ", ".join(map(str, run_buckets))
+    k = min(len(run_buckets), spark.sparkContext.defaultParallelism)
     todo = (pages.selectExpr(
                 *extract_mod.gated_columns(max_page_bytes),
                 f"{lineage.bucket_of('url', n_buckets)} AS bucket",
                 "xxhash64(url) AS doc_id",
                 "unix_micros(warc_ts) AS _warc_us")
-            .where(f"bucket IN ({', '.join(map(str, run_buckets))})")
-            .repartition(min(n_buckets, len(run_buckets)), "bucket"))
+            .where(f"bucket IN ({in_run})")
+            .repartitionById(k, F.expr(
+                f"CAST(array_position(array({in_run}), bucket) - 1 AS INT)")))
 
     gaz_bc = ner_mod.load_gazetteers(spark, *gaz_paths)
 

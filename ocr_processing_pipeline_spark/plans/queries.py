@@ -45,16 +45,22 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
-# (sf_dir, name, parallelism) -> scan partition count. Pure file-layout
-# metadata (how many splits the scan yields), NOT query results — safe to
-# memo for the process lifetime; probing costs a plan->RDD conversion we
-# don't want to re-pay 85 times per bench sweep. Assumes the layout is
-# static while the process lives: the memo is never invalidated, so
-# regenerating a table's files under a running session keeps the stale
-# spread decision (values stay correct — repartition is value-neutral —
-# but the exchange may be added or skipped wrongly). Restart the session
-# after rewriting test data.
+# (sf_dir, name, parallelism, layout) -> scan partition count. Pure
+# file-layout metadata (how many splits the scan yields), NOT query
+# results; probing costs a plan->RDD conversion we don't want to re-pay
+# 85 times per bench sweep. ``layout`` is one stat of the table's path
+# (_layout), so regenerating a table under a running session probes it
+# again instead of keeping a stale spread decision.
 _SCAN_PARTS_MEMO: dict = {}
+
+
+def _layout(path: str) -> tuple:
+    """A cheap fingerprint of a table's file layout: the (mtime, size,
+    inode) of its path. A file rewritten or replaced moves it; so does a
+    directory table whose files are added, removed or renamed into
+    place."""
+    st = os.stat(path)
+    return (st.st_mtime_ns, st.st_size, st.st_ino)
 
 
 def _ts(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -79,7 +85,8 @@ def _ts(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     df = _t(spark, sf_dir, name)
     target = spark.sparkContext.defaultParallelism
-    key = (os.path.abspath(sf_dir), name, target)
+    key = (os.path.abspath(sf_dir), name, target,
+           _layout(os.path.join(sf_dir, f"{name}.parquet")))
     n = _SCAN_PARTS_MEMO.get(key)
     if n is None:
         n = df.rdd.getNumPartitions()

@@ -3,15 +3,23 @@
 run_pipeline extracts, chunks, scans and links every page in one
 mapInPandas pass whose tasks write every table's files themselves and
 return the checkpoint rows. These tests pin that its tables equal the
-standalone stage functions' output row for row, and that the one frame
-it collects plans one Python pass over the pages, caches nothing and
-reads back no table it writes.
+standalone stage functions' output row for row, that the one frame it
+collects plans one Python pass over the pages, caches nothing and reads
+back no table it writes, and how the pass input places buckets on tasks.
 """
 
 import contextlib
 import io
 import os
+import shutil
+from collections import Counter
 
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
+import pytest
+from pyspark.sql import functions as F
+
+from ocr_processing_pipeline_spark.pipeline import job
 from ocr_processing_pipeline_spark.pipeline.chunk import chunk_docs
 from ocr_processing_pipeline_spark.pipeline.extract import extract_docs
 from ocr_processing_pipeline_spark.pipeline.job import run_pipeline
@@ -106,3 +114,61 @@ def test_run_collects_one_pass(spark, corpus_dir, tmp_path, monkeypatch):
         assert buckets == [f"bucket={b}" for b in range(N_BUCKETS)], table
         for b in buckets:
             assert len(_data_files(os.path.join(out, table, b))) == 1, b
+
+
+def _drop_from_checkpoint(out, buckets):
+    """Rewrites the checkpoint under ``out`` without the rows of
+    ``buckets``, so the next resume runs exactly those."""
+    ckpt = os.path.join(out, "checkpoint")
+    kept = pq.read_table(ckpt).filter(~pc.field("bucket").isin(buckets))
+    shutil.rmtree(ckpt)
+    os.makedirs(ckpt)
+    pq.write_table(kept, os.path.join(ckpt, "part-0.parquet"))
+
+
+@pytest.mark.parametrize("case, run_buckets", [
+    ("fresh", list(range(N_BUCKETS))),
+    # hash placement put buckets 0, 1 and 3 in one task, 2 in another
+    ("crash", [0, 1, 2, 3]),
+    # under bucket id mod 2 both land in task 1
+    ("colliding", [1, 5]),
+])
+def test_buckets_fill_one_wave(spark, corpus_dir, tmp_path, monkeypatch,
+                               case, run_buckets):
+    """The pass input places a run's buckets on k = min(run buckets,
+    defaultParallelism) tasks by each bucket's rank in the run: every run
+    bucket is in exactly one task and no task holds more than ⌈len/k⌉ of
+    them. Its one Exchange passes the partition id through instead of
+    hashing the bucket."""
+    out = str(tmp_path / "out")
+    pages = f"{corpus_dir}/pages.parquet"
+    kw = {"fail_after_buckets": 4} if case == "crash" else {}
+    if case == "colliding":
+        run_pipeline(spark, pages, corpus_dir, out, n_buckets=N_BUCKETS)
+        _drop_from_checkpoint(out, run_buckets)
+    inputs = []
+    process = job._process
+
+    def capture(todo, *args):
+        inputs.append(todo)
+        return process(todo, *args)
+
+    monkeypatch.setattr(job, "_process", capture)
+    run_pipeline(spark, pages, corpus_dir, out, n_buckets=N_BUCKETS, **kw)
+    monkeypatch.undo()
+
+    (todo,) = inputs
+    k = min(len(run_buckets), spark.sparkContext.defaultParallelism)
+    p = _plan(todo)
+    assert p.count("Exchange") == 1, p
+    assert "Exchange shufflepartitionidpassthrough(" in p, p
+    assert todo.rdd.getNumPartitions() == k
+    tasks = {}
+    for r in (todo.select("bucket", F.spark_partition_id().alias("task"))
+              .distinct().collect()):
+        tasks.setdefault(r.bucket, set()).add(r.task)
+    # every bucket of this corpus holds pages
+    assert sorted(tasks) == run_buckets, tasks
+    assert all(len(t) == 1 for t in tasks.values()), tasks
+    per_task = Counter(t for (t,) in tasks.values())
+    assert max(per_task.values()) <= -(-len(run_buckets) // k), per_task

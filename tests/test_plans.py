@@ -10,7 +10,7 @@ import io
 
 from pyspark.sql import functions as F
 
-from ocr_processing_pipeline_spark.plans.queries import QUERIES
+from ocr_processing_pipeline_spark.plans.queries import QUERIES, _ts
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -231,3 +231,17 @@ def test_worker_memo_identity_per_broadcast(spark):
     bc2 = spark.sparkContext.broadcast(("tok2", [], [], []))
     idx2, memo2 = _get_index_and_memo(bc2)
     assert memo2 is not memo1 and "probe" not in memo2
+
+
+def test_scan_spread_follows_rewritten_layout(spark, tmp_path):
+    """_ts spreads a table whose scan yields fewer partitions than the
+    session's parallelism and leaves one that yields enough alone. The
+    decision is memoised per table layout, so rewriting a one-file table
+    as one file per core under the same session drops the spread."""
+    path = str(tmp_path / "t.parquet")
+    rows = spark.range(64)
+    rows.coalesce(1).write.parquet(path)
+    assert "Exchange" in plan(_ts(spark, str(tmp_path), "t"), "simple")
+    n = spark.sparkContext.defaultParallelism
+    rows.repartition(n).write.mode("overwrite").parquet(path)
+    assert "Exchange" not in plan(_ts(spark, str(tmp_path), "t"), "simple")

@@ -25,9 +25,13 @@ SF_DIR = "/root/testdata/sf0.001"
 COMMENT = {
     "flagship_pipeline": (
         "The one frame run_pipeline collects: its checkpoint rows. One "
-        "Project below the Exchange (the bucket repartition) gates the "
-        "payloads and adds bucket, doc_id and the warc_ts micros, so an "
-        "oversized payload is nulled before the shuffle. All Python work "
+        "Project below the Exchange gates the payloads and adds bucket, "
+        "doc_id and the warc_ts micros, so an oversized payload is nulled "
+        "before the shuffle. The Exchange passes a partition id through "
+        "(shufflepartitionidpassthrough): each bucket's rank among the "
+        "run's buckets, modulo min(run buckets, cores), so every task "
+        "holds whole buckets, as many as any other give or take one, and "
+        "all tasks run in one wave. All Python work "
         "is ONE MapInPandas after it (extract → chunk → scan + link per "
         "page); the same task writes its buckets' docs/chunks/edges files "
         "with pyarrow, one per table and bucket, and returns one "
