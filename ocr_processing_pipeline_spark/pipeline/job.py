@@ -16,12 +16,9 @@ partitioning + AQE):
   per run, not once per stage. Its input is one projection of the pages,
   made before the shuffle: the giant-page gate, ``bucket``,
   ``doc_id = xxhash64(url)`` and the warc_ts epoch micros, all JVM-side.
-  The only shuffle places whole buckets on k = min(run buckets, cores)
-  tasks by each bucket's rank among the run's buckets, so each bucket is
-  in one task, every task holds ⌊len/k⌋ or ⌈len/k⌉ of them and all run
-  in one wave. (A hash of the ids 0..n-1 would leave some tasks empty,
-  put 3 buckets in another and start a second wave, each of whose
-  Python tasks pays its own start-up cost.)
+  The only shuffle places whole buckets on the pass's tasks, so each
+  bucket is in one task (the placement rule: ``_pass_tasks`` and the
+  comment above the pass input in ``run_pipeline``).
 - The same task writes its buckets' docs, chunks, edges (and mentions)
   files with pyarrow (lineage.BucketFiles: one deterministic file per
   table and bucket, replaced in place) and returns one checkpoint row per
@@ -108,9 +105,10 @@ def run_pipeline(spark: SparkSession, pages_path: str, gazetteers_dir: str,
     ``max_page_bytes`` is the giant-page gate (extract.gated_columns; None
     disables it).
 
-    The pass runs in k = min(run buckets, defaultParallelism) tasks, k
-    read when the run starts. Under dynamic allocation that is the cores
-    registered at that moment, or ``spark.default.parallelism`` if set.
+    The pass's task count is ``_pass_tasks(run buckets,
+    defaultParallelism)``, read when the run starts. Under dynamic
+    allocation defaultParallelism is the cores registered at that moment,
+    or ``spark.default.parallelism`` if set.
 
     Side effect beyond this call: on CPython < 3.12 the pass replaces
     ``zipimport.zipimporter.invalidate_caches`` in every Python worker it
@@ -205,19 +203,16 @@ def run_pipeline(spark: SparkSession, pages_path: str, gazetteers_dir: str,
             fh.write(json.dumps(new_meta).encode())
 
     # the pass input in ONE projection (gated payloads, bucket, doc_id,
-    # warc_ts micros), then ONE shuffle that places whole buckets on
-    # k = min(run buckets, cores) tasks. A row's partition id is its
-    # bucket's rank in run_buckets (the exchange takes it modulo k), so
-    # each bucket lands in exactly one task, which writes its files, and
-    # every task holds ⌊len/k⌋ or ⌈len/k⌉ buckets: one wave, and a task
-    # is empty only if its buckets hold no pages. The rank, not the id:
-    # ids 1 and 5 share a task under id mod 2. array_position scans the
-    # run's bucket list per row (about 2 µs at 4096 buckets, one core),
-    # against the milliseconds a page costs in the pass. Written as SQL
-    # text: about one Py4J round trip per column instead of one per
-    # function, literal and alias.
+    # warc_ts micros), then ONE shuffle that places whole buckets on the
+    # pass's k tasks (_pass_tasks). A row's partition id is its bucket's
+    # rank in run_buckets, which the exchange takes modulo k, so each
+    # bucket lands in exactly one task, which writes its files, and every
+    # task holds ⌊len/k⌋ or ⌈len/k⌉ buckets; a task is empty only if its
+    # buckets hold no pages. The rank, not the id: ids 1 and 5 share a
+    # task under id mod 2. Written as SQL text: about one Py4J round trip
+    # per column instead of one per function, literal and alias.
     in_run = ", ".join(map(str, run_buckets))
-    k = min(len(run_buckets), spark.sparkContext.defaultParallelism)
+    k = _pass_tasks(len(run_buckets), spark.sparkContext.defaultParallelism)
     todo = (pages.selectExpr(
                 *extract_mod.gated_columns(max_page_bytes),
                 f"{lineage.bucket_of('url', n_buckets)} AS bucket",
@@ -365,6 +360,28 @@ def _keep_zip_directories() -> None:
             cls, "_stdlib_invalidate_caches"):
         cls._stdlib_invalidate_caches = cls.invalidate_caches
         cls.invalidate_caches = _invalidate_zip_if_changed
+
+
+# the most run buckets per core that the pass packs into one wave
+_WAVE_BUCKETS_PER_CORE = 2
+
+
+def _pass_tasks(n_run: int, cores: int) -> int:
+    """The number of pass tasks for a run over ``n_run`` buckets on
+    ``cores`` cores.
+
+    Up to _WAVE_BUCKETS_PER_CORE run buckets per core it is min(n_run,
+    cores): one wave of tasks holding one or two buckets each, because
+    at this size each Python task's start-up cost is a large part of the
+    pass (20-45 ms in a first wave, 64-156 ms in a second, with 8
+    buckets on a 4-vCPU box). Above that it is one task per bucket. A task
+    buffers up to lineage.ROW_GROUP_BYTES per table for every bucket it
+    holds, so its memory must not grow with the run's buckets per core;
+    and many tasks let the scheduler use executors added after the run
+    starts and spread a retried or slow task's work."""
+    if n_run <= _WAVE_BUCKETS_PER_CORE * cores:
+        return min(n_run, cores)
+    return n_run
 
 
 def _process(todo: DataFrame, gaz_bc, new_files) -> DataFrame:

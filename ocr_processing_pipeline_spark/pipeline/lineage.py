@@ -15,10 +15,8 @@ rule: "range-partitioned shuffles on url-hash"). Each run:
    pages are filtered to the remaining ids. ``remaining_pages`` makes the
    same decision as a broadcast left-anti join for Spark-side callers.
 2. run the Python work (extract → chunk → scan + link) in ONE pass over
-   the pages, shuffled so that each task holds whole buckets: a bucket's
-   rank among the run's buckets is its partition id, taken modulo
-   k = min(run buckets, cores), so the k tasks hold ⌊len/k⌋ or ⌈len/k⌉
-   buckets each and run in one wave
+   the pages, shuffled so that each task holds whole buckets (the
+   placement rule is in job.py, ``_pass_tasks`` and ``run_pipeline``)
 3. in that same task, write each of its buckets' docs/chunks/edges (and
    optionally mentions) rows with pyarrow (``BucketFiles``): one file
    per (table, bucket) at a deterministic name under the hive

@@ -126,25 +126,28 @@ def _drop_from_checkpoint(out, buckets):
     pq.write_table(kept, os.path.join(ckpt, "part-0.parquet"))
 
 
-@pytest.mark.parametrize("case, run_buckets", [
-    ("fresh", list(range(N_BUCKETS))),
+@pytest.mark.parametrize("case, n_buckets, run_buckets", [
+    ("fresh", N_BUCKETS, list(range(N_BUCKETS))),
     # hash placement put buckets 0, 1 and 3 in one task, 2 in another
-    ("crash", [0, 1, 2, 3]),
+    ("crash", N_BUCKETS, [0, 1, 2, 3]),
     # under bucket id mod 2 both land in task 1
-    ("colliding", [1, 5]),
+    ("colliding", N_BUCKETS, [1, 5]),
+    # more than 2 buckets per core: one task per bucket
+    ("many", 12, list(range(12))),
 ])
 def test_buckets_fill_one_wave(spark, corpus_dir, tmp_path, monkeypatch,
-                               case, run_buckets):
-    """The pass input places a run's buckets on k = min(run buckets,
-    defaultParallelism) tasks by each bucket's rank in the run: every run
-    bucket is in exactly one task and no task holds more than ⌈len/k⌉ of
-    them. Its one Exchange passes the partition id through instead of
-    hashing the bucket."""
+                               case, n_buckets, run_buckets):
+    """The pass input places a run's buckets on k tasks by each bucket's
+    rank in the run: k = min(run buckets, defaultParallelism) up to 2 run
+    buckets per core, else one task per bucket. Every run bucket is in
+    exactly one task, no task holds more than ⌈len/k⌉ of them, and so
+    none more than 2. Its one Exchange passes the partition id through
+    instead of hashing the bucket."""
     out = str(tmp_path / "out")
     pages = f"{corpus_dir}/pages.parquet"
     kw = {"fail_after_buckets": 4} if case == "crash" else {}
     if case == "colliding":
-        run_pipeline(spark, pages, corpus_dir, out, n_buckets=N_BUCKETS)
+        run_pipeline(spark, pages, corpus_dir, out, n_buckets=n_buckets)
         _drop_from_checkpoint(out, run_buckets)
     inputs = []
     process = job._process
@@ -154,11 +157,13 @@ def test_buckets_fill_one_wave(spark, corpus_dir, tmp_path, monkeypatch,
         return process(todo, *args)
 
     monkeypatch.setattr(job, "_process", capture)
-    run_pipeline(spark, pages, corpus_dir, out, n_buckets=N_BUCKETS, **kw)
+    run_pipeline(spark, pages, corpus_dir, out, n_buckets=n_buckets, **kw)
     monkeypatch.undo()
 
     (todo,) = inputs
-    k = min(len(run_buckets), spark.sparkContext.defaultParallelism)
+    cores = spark.sparkContext.defaultParallelism
+    n = len(run_buckets)
+    k = min(n, cores) if n <= 2 * cores else n
     p = _plan(todo)
     assert p.count("Exchange") == 1, p
     assert "Exchange shufflepartitionidpassthrough(" in p, p
@@ -171,4 +176,4 @@ def test_buckets_fill_one_wave(spark, corpus_dir, tmp_path, monkeypatch,
     assert sorted(tasks) == run_buckets, tasks
     assert all(len(t) == 1 for t in tasks.values()), tasks
     per_task = Counter(t for (t,) in tasks.values())
-    assert max(per_task.values()) <= -(-len(run_buckets) // k), per_task
+    assert max(per_task.values()) <= min(-(-n // k), 2), per_task

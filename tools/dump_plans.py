@@ -27,13 +27,12 @@ COMMENT = {
         "The one frame run_pipeline collects: its checkpoint rows. One "
         "Project below the Exchange gates the payloads and adds bucket, "
         "doc_id and the warc_ts micros, so an oversized payload is nulled "
-        "before the shuffle. The Exchange passes a partition id through "
-        "(shufflepartitionidpassthrough): each bucket's rank among the "
-        "run's buckets, modulo min(run buckets, cores), so every task "
-        "holds whole buckets, as many as any other give or take one, and "
-        "all tasks run in one wave. All Python work "
-        "is ONE MapInPandas after it (extract → chunk → scan + link per "
-        "page); the same task writes its buckets' docs/chunks/edges files "
+        "before the shuffle. The Exchange passes each row's partition id "
+        "through (shufflepartitionidpassthrough: its bucket's rank in the "
+        "run, see job._pass_tasks), so every task holds whole buckets. "
+        "All Python work is ONE MapInPandas after it (extract → chunk → "
+        "scan + link per page); the same task writes its buckets' "
+        "docs/chunks/edges files "
         "with pyarrow, one per table and bucket, and returns one "
         "checkpoint row per bucket, which the driver appends with "
         "pyarrow. So a run is two Spark jobs, the shuffle's map stage and "
