@@ -19,8 +19,7 @@ from pyspark.sql import functions as F
 
 def asof_join_backward(left: DataFrame, right: DataFrame,
                        on: str, left_ts: str, right_ts: str,
-                       value_cols: list[str],
-                       tolerance_seconds: int | None = None) -> DataFrame:
+                       value_cols: list[str]) -> DataFrame:
     """For each left row, attach the latest right row with ts ≤ left ts,
     per ``on`` key. DuckDB equivalent: ``ASOF JOIN``.
 
@@ -55,14 +54,6 @@ def asof_join_backward(left: DataFrame, right: DataFrame,
     for c in value_cols:
         filled = filled.withColumn(
             f"_r_{c}", F.last(f"_r_{c}", ignorenulls=True).over(w))
-    if tolerance_seconds is not None:
-        last_rts = F.last(F.when(F.col("_side") == 0, F.col("_ts")),
-                          ignorenulls=True).over(w)
-        in_tol = (F.col("_ts").cast("long") - last_rts.cast("long")
-                  <= tolerance_seconds)
-        for c in value_cols:
-            filled = filled.withColumn(
-                f"_r_{c}", F.when(in_tol, F.col(f"_r_{c}")))
     out = (filled.filter(F.col("_side") == 1)
            .select(*l_cols,
                    *[F.col(f"_r_{c}").alias(c) for c in value_cols]))

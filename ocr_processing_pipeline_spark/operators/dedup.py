@@ -59,15 +59,6 @@ def exact_dedup(df: DataFrame, text_col: str, key_col: str) -> DataFrame:
             .drop("fp", "rn"))
 
 
-def exact_dup_groups(df: DataFrame, text_col: str, key_col: str) -> DataFrame:
-    """Duplicate groups: fingerprint, canonical (min key), group size ≥ 2."""
-    return (df
-            .groupBy(fingerprint(F.col(text_col)).alias("fp"))
-            .agg(F.min(key_col).alias("canonical_id"),
-                 F.count(F.lit(1)).alias("group_size"))
-            .filter(F.col("group_size") >= 2))
-
-
 def shingles(df: DataFrame, text_col: str, key_col: str,
              n: int = 3) -> DataFrame:
     """(key, shingle) pairs: distinct word n-grams of normalized text.
@@ -795,7 +786,7 @@ def connected_components(pairs: DataFrame, max_iter: int = 20) -> DataFrame:
     return labels.select("key", F.col("comp").alias("component"))
 
 
-__all__ = ["exact_dedup", "exact_dup_groups", "shingles", "gram_array",
+__all__ = ["exact_dedup", "shingles", "gram_array",
            "minhash_signatures", "band_keys", "lsh_candidate_pairs",
            "jaccard_pairs", "minhash_lsh_dedup", "incremental_dedup",
            "resolve_canonicals", "snapshot_admission",

@@ -2,19 +2,15 @@
 
 Treats media as opaque ``binary`` columns with typed metadata, exactly as
 the pipeline treats PDF payloads. The Spark-side plumbing — schema,
-Arrow batch shape, partitioning, UDF signatures — is real and tested; the
-codec interiors are STUBBED (this container ships no image/audio libs):
+Arrow batch shape, partitioning, UDF signatures — is real and tested; no
+codec is implemented (decoding, resizing and frame sampling need image
+or video libraries the package does not depend on):
 
 - ``sniff_media``     real: magic-byte detection + size metadata (built-in
                       expressions where possible, Arrow UDF for the rest)
 - ``extract_features`` deterministic fake: 16-bin byte histogram as the
                       "feature vector" (shape-correct stand-in for a CNN
                       embedding; swap the interior for a real model later)
-- ``decode_image`` / ``resize_image`` / ``sample_frames``
-                      STUB: raise NotImplementedError with the library
-                      that would be needed — callers gate on
-                      ``media_kind`` first, so the stubs only fire when a
-                      real codec is genuinely required.
 
 At 100 TB: media rows are binary-heavy → the Arrow batch cap in session.py
 matters here most; feature extraction is mapInPandas (narrow, no shuffle),
@@ -103,21 +99,4 @@ def extract_features(df: DataFrame, bin_col: str, key_col: str,
     return df.select(*cols).mapInPandas(batches, schema=schema)
 
 
-def decode_image(payload: bytes):  # pragma: no cover - stub
-    raise NotImplementedError(
-        "image decode requires Pillow/opencv (not in this container); "
-        "gate on media_kind == 'image/*' and plug a codec in here")
-
-
-def resize_image(payload: bytes, w: int, h: int):  # pragma: no cover - stub
-    raise NotImplementedError(
-        "image resize requires Pillow/opencv (not in this container)")
-
-
-def sample_frames(payload: bytes, every_n: int):  # pragma: no cover - stub
-    raise NotImplementedError(
-        "video frame sampling requires pyav/ffmpeg (not in this container)")
-
-
-__all__ = ["sniff_media", "extract_features", "decode_image",
-           "resize_image", "sample_frames", "FEATURE_BINS"]
+__all__ = ["sniff_media", "extract_features", "FEATURE_BINS"]

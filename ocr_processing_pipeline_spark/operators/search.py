@@ -121,24 +121,23 @@ def _minmax_norm(leg: DataFrame, score_col: str, out_col: str) -> DataFrame:
 
 def hybrid_topk(df: DataFrame, text_col: str, key_col: str,
                 vec_col: str, query_terms: list[str], query_vec: list,
-                alpha: float = 0.25, k: int = 10,
-                leg_window: int | None = None) -> DataFrame:
+                alpha: float = 0.25, k: int = 10) -> DataFrame:
     """Weaviate-style hybrid via **relative-score fusion** (the fusion
     ``collection.query.hybrid(alpha=0.25)`` resolves to — Query/search.py:61):
     each leg retrieves its top window, scores are min-max normalized within
     the leg, fused = alpha·vector + (1-alpha)·keyword; a doc absent from a
     leg contributes 0 for that leg. Both legs are top-k limited first, so
     the fusion join is a few dozen rows regardless of corpus size."""
-    from .similarity import cosine_to
-    window = leg_window or max(k * 5, 50)
+    from .similarity import VECTOR_DECIMALS, cosine_to
+    window = max(k * 5, 50)
     # each leg is ≤window rows but expensive to DERIVE (a corpus pass);
     # checkpoint before _minmax_norm so its stats agg + projection read
     # the materialized rows instead of re-running the pass twice
     bm = (bm25_topk(df, text_col, key_col, query_terms, k=window)
           .localCheckpoint(eager=False))
     vec = (df.select(F.col(key_col).alias("key"),
-                     F.round(cosine_to(query_vec, F.col(vec_col)), 5)
-                     .alias("cosine"))
+                     F.round(cosine_to(query_vec, F.col(vec_col)),
+                             VECTOR_DECIMALS).alias("cosine"))
            .orderBy(F.desc("cosine"), F.asc("key")).limit(window)
            .localCheckpoint(eager=False))
     bm_n = _minmax_norm(bm, "bm25", "bm_norm")

@@ -19,6 +19,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# cosines and centroid components are rounded to this many places, so ties
+# and top-k order are stable across runs and against the DuckDB oracle
+VECTOR_DECIMALS = 5
+
 
 def _dot(a, b):
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
@@ -38,13 +42,12 @@ def cosine_to(query_vec: list, col):
 
 
 def brute_force_topk(df: DataFrame, vec_col: str, key_col: str,
-                     query_vec: list, k: int = 10,
-                     round_to: int = 5) -> DataFrame:
+                     query_vec: list, k: int = 10) -> DataFrame:
     """Exact cosine top-k; deterministic tie-break on key."""
     return (df
             .select(F.col(key_col).alias("key"),
-                    F.round(cosine_to(query_vec, F.col(vec_col)), round_to)
-                    .alias("cosine"))
+                    F.round(cosine_to(query_vec, F.col(vec_col)),
+                            VECTOR_DECIMALS).alias("cosine"))
             .orderBy(F.desc("cosine"), F.asc("key"))
             .limit(k))
 
@@ -81,8 +84,8 @@ def lsh_signature(df: DataFrame, vec_col: str, key_col: str,
 
 
 def ann_topk(df: DataFrame, vec_col: str, key_col: str, query_vec: list,
-             k: int = 10, n_bits: int = 8, hamming_radius: int = 1,
-             round_to: int = 5) -> DataFrame:
+             k: int = 10, n_bits: int = 8,
+             hamming_radius: int = 1) -> DataFrame:
     """ANN: probe LSH buckets within hamming radius of the query bucket,
     exact cosine re-rank inside candidates. Recall grows with radius."""
     import hashlib  # noqa: F401  (used indirectly via _hyperplane)
@@ -100,8 +103,8 @@ def ann_topk(df: DataFrame, vec_col: str, key_col: str, query_vec: list,
     cands = sigs.filter(F.col("sig").isin(probe))
     return (cands
             .select("key",
-                    F.round(cosine_to(query_vec, F.col("vec")), round_to)
-                    .alias("cosine"))
+                    F.round(cosine_to(query_vec, F.col("vec")),
+                            VECTOR_DECIMALS).alias("cosine"))
             .orderBy(F.desc("cosine"), F.asc("key"))
             .limit(k))
 
@@ -166,7 +169,7 @@ def ivf_index(df: DataFrame, vec_col: str, key_col: str,
 
 def ivf_topk(df: DataFrame, vec_col: str, key_col: str, query_vec: list,
              k: int = 10, n_cells: int = 16, n_probe: int = 4,
-             iters: int = 2, round_to: int = 5) -> DataFrame:
+             iters: int = 2) -> DataFrame:
     """IVF ANN: probe the n_probe nearest cells, exact cosine re-rank
     inside them. Candidate fraction ≈ n_probe/n_cells of the corpus."""
     assigned, cents = ivf_index(df, vec_col, key_col,
@@ -182,14 +185,14 @@ def ivf_topk(df: DataFrame, vec_col: str, key_col: str, query_vec: list,
     cands = assigned.filter(F.col("cell").isin(probe))
     return (cands
             .select("key",
-                    F.round(cosine_to(q, F.col("vec")), round_to)
+                    F.round(cosine_to(q, F.col("vec")), VECTOR_DECIMALS)
                     .alias("cosine"))
             .orderBy(F.desc("cosine"), F.asc("key"))
             .limit(k))
 
 
 def label_centroids(df: DataFrame, vec_col: str, label_col: str,
-                    round_to: int = 5, *, dim: int) -> DataFrame:
+                    *, dim: int) -> DataFrame:
     """Element-wise mean vector per label.
 
     Scale path: one avg aggregate per dimension — map-side partial
@@ -200,8 +203,8 @@ def label_centroids(df: DataFrame, vec_col: str, label_col: str,
     ``dim`` is required: a ``.first()`` probe would be a driver action
     inside plan construction.
     """
-    aggs = [F.round(F.avg(F.col(vec_col)[i].cast("double")), round_to)
-            .alias(f"m{i}") for i in range(dim)]
+    aggs = [F.round(F.avg(F.col(vec_col)[i].cast("double")),
+                    VECTOR_DECIMALS).alias(f"m{i}") for i in range(dim)]
     return (df.groupBy(F.col(label_col).alias("label"))
             .agg(*aggs)
             .select("label",
@@ -256,4 +259,4 @@ def near_dup_pairs_by_label(df: DataFrame, vec_col: str, label_col: str,
 
 __all__ = ["brute_force_topk", "ann_topk", "lsh_signature",
            "ivf_index", "ivf_topk", "label_centroids", "cosine_to",
-           "near_dup_pairs_by_label"]
+           "near_dup_pairs_by_label", "VECTOR_DECIMALS"]

@@ -32,19 +32,17 @@ from pyspark.sql import functions as F
 DEFAULT_SALTS = 16
 
 
-def with_salt(df: DataFrame, salt_source_col: str,
-              n_salts: int = DEFAULT_SALTS,
-              salt_col: str = "_salt") -> DataFrame:
-    """Deterministic salt from a high-cardinality column (e.g. url)."""
+def with_salt(df: DataFrame, salt_source_col: str) -> DataFrame:
+    """Adds ``_salt``, a deterministic salt in [0, DEFAULT_SALTS) from a
+    high-cardinality column (e.g. url)."""
     return df.withColumn(
-        salt_col,
-        F.pmod(F.xxhash64(F.col(salt_source_col)), F.lit(n_salts))
+        "_salt",
+        F.pmod(F.xxhash64(F.col(salt_source_col)), F.lit(DEFAULT_SALTS))
         .cast("int"))
 
 
 def salted_groupby(df: DataFrame, key_cols: list[str], aggs: dict,
-                   salt_source_col: str,
-                   n_salts: int = DEFAULT_SALTS) -> DataFrame:
+                   salt_source_col: str) -> DataFrame:
     """Two-phase skew-proof aggregation.
 
     ``aggs``: {out_name: (fn_name, col)} with fn_name in
@@ -68,30 +66,24 @@ def salted_groupby(df: DataFrame, key_cols: list[str], aggs: dict,
             final_exprs.append(F.max(f"_p_{out}").alias(out))
         else:
             raise ValueError(f"non-decomposable aggregate: {fn}")
-    salted = with_salt(df, salt_source_col, n_salts)
+    salted = with_salt(df, salt_source_col)
     partial = salted.groupBy(*key_cols, "_salt").agg(*partial_exprs)
     return partial.groupBy(*key_cols).agg(*final_exprs)
 
 
 def salted_broadcast_left(big: DataFrame, small: DataFrame, key: str,
-                          salt_source_col: str,
-                          n_salts: int = DEFAULT_SALTS) -> DataFrame:
+                          salt_source_col: str) -> DataFrame:
     """Skew-proof equi-join: salt the big side, replicate the small side
-    ×n_salts, join on (key, salt). Falls back to a plain broadcast hash
+    ×DEFAULT_SALTS, join on (key, salt). Falls back to a plain broadcast hash
     join physically when the replicated small side still fits."""
-    big_s = with_salt(big, salt_source_col, n_salts)
+    big_s = with_salt(big, salt_source_col)
     small_r = (small
                .withColumn("_salt", F.explode(F.sequence(
-                   F.lit(0), F.lit(n_salts - 1))))
+                   F.lit(0), F.lit(DEFAULT_SALTS - 1))))
                .withColumn("_salt", F.col("_salt").cast("int")))
     return (big_s.join(F.broadcast(small_r), [key, "_salt"])
             .drop("_salt"))
 
 
-def host_of(url_col) -> F.Column:
-    """Extract host from a url column (C-series regexp)."""
-    return F.regexp_extract(url_col, r"^[a-z]+://([^/]+)/", 1)
-
-
 __all__ = ["with_salt", "salted_groupby", "salted_broadcast_left",
-           "host_of", "DEFAULT_SALTS"]
+           "DEFAULT_SALTS"]

@@ -86,14 +86,4 @@ def url_host(col):
     return F.regexp_extract(col, r"^[a-zA-Z]+://([^/:?#]*)", 1)
 
 
-def doc_fingerprint(df: DataFrame, text_col: str) -> DataFrame:
-    """Rolling-hash-style document fingerprint: md5 of the normalized text
-    (portable to the DuckDB oracle, unlike xxhash64)."""
-    return df.withColumn(
-        "fingerprint",
-        F.md5(F.regexp_replace(F.lower(F.trim(F.col(text_col))),
-                               r"\s+", " ")))
-
-
-__all__ = ["langid", "doc_fingerprint", "canonicalize_url", "url_host",
-           "LANG_PATTERNS"]
+__all__ = ["langid", "canonicalize_url", "url_host", "LANG_PATTERNS"]

@@ -1,4 +1,4 @@
-"""End-to-end extraction job: pages → docs + chunks + mentions + edges.
+"""End-to-end extraction job: pages → docs + chunks + edges.
 
 Partitioning strategy (north rule: explicit skew handling + url-hash range
 partitioning + AQE):
@@ -19,8 +19,8 @@ partitioning + AQE):
   The only shuffle places whole buckets on the pass's tasks, so each
   bucket is in one task (the placement rule: ``_pass_tasks`` and the
   comment above the pass input in ``run_pipeline``).
-- The same task writes its buckets' docs, chunks, edges (and mentions)
-  files with pyarrow (lineage.BucketFiles: one deterministic file per
+- The same task writes its buckets' docs, chunks and edges files with
+  pyarrow (lineage.BucketFiles: one deterministic file per
   table and bucket, replaced in place) and returns one checkpoint row per
   bucket. The driver collects those rows — the run's one data action —
   and appends them to the checkpoint with pyarrow. So a run starts two
@@ -81,7 +81,6 @@ _NOTHING_TO_DO = {"docs": 0, "chunks": 0, "edges": 0, "checkpoint": 0,
 def run_pipeline(spark: SparkSession, pages_path: str, gazetteers_dir: str,
                  out_dir: str, n_buckets: int = DEFAULT_N_BUCKETS,
                  resume: bool = True,
-                 with_mentions: bool = False,
                  fail_after_buckets: int | None = None,
                  max_page_bytes: int | None = (
                      extract_mod.DEFAULT_MAX_PAGE_BYTES)) -> dict:
@@ -93,9 +92,10 @@ def run_pipeline(spark: SparkSession, pages_path: str, gazetteers_dir: str,
 
     ``resume=False`` deletes the checkpoint and reprocesses every bucket;
     the data tables are overwritten bucket by bucket, never duplicated.
-    A resume whose pages or gazetteers changed since the output was
-    started raises ValueError (checkpoint_meta.json records both);
-    ``resume=False`` records the new ones.
+    A resume whose pages, gazetteers or ``max_page_bytes`` differ from
+    those the output was started with raises ValueError
+    (checkpoint_meta.json records all three); ``resume=False`` records
+    the new ones.
 
     ``fail_after_buckets`` processes only the first k uncommitted bucket
     ids — chosen on the driver, with no scan, so they may hold no pages
@@ -174,11 +174,12 @@ def run_pipeline(spark: SparkSession, pages_path: str, gazetteers_dir: str,
                  for n in ("persons", "places", "orgs")]
 
     # input contract: the committed buckets were computed from the pages
-    # and gazetteers recorded in the meta file. A resume over changed
-    # input would mix two generations in one output, so it must fail
-    # loudly; resume=False starts over and records the new values. A meta
-    # file written before these keys existed adopts them. Checked only
-    # here, after the no-op return, which must never touch the input.
+    # and gazetteers recorded in the meta file, under its giant-page
+    # gate. A resume over changed input or with another gate would mix
+    # two generations in one output, so it must fail loudly; resume=False
+    # starts over and records the new values. A meta file written before
+    # these keys existed adopts them. Checked only here, after the no-op
+    # return, which must never touch the input.
     inputs = {"pages": lineage.pages_fingerprint(pages_path),
               "gazetteers": ner_mod.gazetteer_digest(*gaz_paths)}
     for name, value in inputs.items():
@@ -189,13 +190,20 @@ def run_pipeline(spark: SparkSession, pages_path: str, gazetteers_dir: str,
                 f"{out_dir} was written (fingerprint {recorded[:12]} → "
                 f"{value[:12]}); resuming would mix outputs of both. "
                 "Rerun with resume=False (or start a fresh out dir).")
+    recorded = meta.get("max_page_bytes", max_page_bytes)
+    if resume and recorded != max_page_bytes:
+        raise ValueError(
+            f"checkpoint at {out_dir} was written with max_page_bytes="
+            f"{recorded}; resume invoked with max_page_bytes="
+            f"{max_page_bytes}. Its committed buckets were gated at the "
+            "recorded value — rerun with it, or with resume=False.")
 
     # record the contract BEFORE the first data write: docs parquet
     # lands before the checkpoint rows, so a crash mid-run must already
     # leave the meta guard in place — otherwise a later resume with a
-    # different n_buckets or input would pass the checks above and mix
-    # it into a half-written output.
-    new_meta = {"n_buckets": n_buckets,
+    # different n_buckets, gate or input would pass the checks above and
+    # mix it into a half-written output.
+    new_meta = {"n_buckets": n_buckets, "max_page_bytes": max_page_bytes,
                 **{f"{k}_fingerprint": v for k, v in inputs.items()}}
     if meta != new_meta:
         fs.create_dir(root)
@@ -227,7 +235,7 @@ def run_pipeline(spark: SparkSession, pages_path: str, gazetteers_dir: str,
     # ONE Python pass that also writes every table (see the module
     # docstring); its checkpoint rows are the run's only data action
     new_files = functools.partial(lineage.BucketFiles, fs, root,
-                                  _table_schemas(with_mentions))
+                                  _table_schemas())
     ckpt = _process(todo, gaz_bc, new_files).collect()
     written = {r.bucket for r in ckpt}
     if len(written) != len(ckpt):
@@ -268,24 +276,17 @@ def _read_pages(spark: SparkSession, pages_path: str) -> DataFrame:
 
 
 @functools.cache
-def _table_schemas(with_mentions: bool) -> dict[str, pa.Schema]:
+def _table_schemas() -> dict[str, pa.Schema]:
     """The arrow schema of each table a run writes: the DDL strings'
     types in each table's column order (timestamps as UTC micros). Each
     DDL string is parsed once (a JVM call), and the result is kept for
     the process."""
-    m_cols = [c for c in ner_mod.MENTIONS_COLUMNS if c != "chunk_id"]
     tables = {
         "docs": (extract_mod.DOCS_UDF_SCHEMA + ", doc_id long",
                  extract_mod.DOC_COLUMNS),
         "chunks": (chunk_mod.CHUNKS_SCHEMA, chunk_mod.CHUNKS_COLUMNS),
         "edges": (ner_mod.EDGES_SCHEMA, ner_mod.EDGES_COLUMNS),
     }
-    if with_mentions:
-        # raw mention spans (FIXTURES.md §3 'entities' table), from the
-        # same scan the linker used; columns as extract_mentions joined
-        # with url on chunk_id
-        tables["mentions"] = (ner_mod.MENTIONS_SCHEMA + ", url string",
-                              ["chunk_id", *m_cols, "url"])
     parsed = {t: StructType.fromDDL(ddl) for t, (ddl, _) in tables.items()}
     return {t: to_arrow_schema(StructType([parsed[t][c] for c in cols]))
             for t, (_, cols) in tables.items()}
@@ -295,8 +296,8 @@ def _tables(pdf: pd.DataFrame, docs: list[dict],
             nested: dict[str, list[list[dict]]],
             schemas: dict[str, pa.Schema]) -> dict[str, pa.Table]:
     """One batch's rows of every table plus their ``bucket``: ``docs``
-    holds each page's extracted columns and ``nested`` each page's chunk,
-    edge (and mention) rows; the doc-level columns of all of them come
+    holds each page's extracted columns and ``nested`` each page's chunk
+    and edge rows; the doc-level columns of all of them come
     from the page (warc_ts from its epoch micros)."""
     bucket = pa.field("bucket", pa.int32())
     schema = schemas["docs"].append(bucket)
@@ -395,26 +396,21 @@ def _process(todo: DataFrame, gaz_bc, new_files) -> DataFrame:
         idx, memo = ner_mod._get_index_and_memo(gaz_bc)
         files = new_files()
         for pdf in batches:
-            docs = []
-            nested = {t: [] for t in files.schemas if t != "docs"}
+            docs, nested = [], {"chunks": [], "edges": []}
             for doc_id, html, text, too_big, warc_ts in zip(
                     pdf["doc_id"], pdf["html"], pdf["text"],
                     pdf["_oversized"], pdf["warc_ts"]):
                 row = extract_mod.extract_row(html, text, too_big)
-                kids = {t: [] for t in nested}
-                kids["chunks"] = chunk_mod.chunk_rows(doc_id, row["text"])
+                chunks = chunk_mod.chunk_rows(doc_id, row["text"])
                 date = ner_mod.doc_date(warc_ts)
-                for c in kids["chunks"]:
-                    # one scan feeds both the linker and the mentions
-                    found = idx.scan(c["content"])
-                    kids["edges"] += ner_mod.edge_rows(
-                        found, idx, memo, c["chunk_id"], c["content"], date)
-                    if "mentions" in kids:
-                        kids["mentions"] += ner_mod.mention_rows(
-                            found, c["chunk_id"])
+                edges = []
+                for c in chunks:
+                    edges += ner_mod.edge_rows(
+                        idx.scan(c["content"]), idx, memo, c["chunk_id"],
+                        c["content"], date)
                 docs.append(row)
-                for t, rows in nested.items():
-                    rows.append(kids[t])
+                nested["chunks"].append(chunks)
+                nested["edges"].append(edges)
             files.add(_tables(pdf, docs, nested, files.schemas))
         yield pd.DataFrame(files.commit(),
                            columns=lineage.CHECKPOINT_ROW_COLUMNS,

@@ -17,11 +17,11 @@ rule: "range-partitioned shuffles on url-hash"). Each run:
 2. run the Python work (extract → chunk → scan + link) in ONE pass over
    the pages, shuffled so that each task holds whole buckets (the
    placement rule is in job.py, ``_pass_tasks`` and ``run_pipeline``)
-3. in that same task, write each of its buckets' docs/chunks/edges (and
-   optionally mentions) rows with pyarrow (``BucketFiles``): one file
-   per (table, bucket) at a deterministic name under the hive
-   ``bucket=N`` directory, written under a ``.``-prefixed temp name,
-   renamed into place, then every other file in that directory removed.
+3. in that same task, write each of its buckets' docs/chunks/edges rows
+   with pyarrow (``BucketFiles``): one file per (table, bucket) at a
+   deterministic name under the hive ``bucket=N`` directory, written
+   under a ``.``-prefixed temp name, renamed into place, then every
+   other file in that directory removed.
    That is dynamic overwrite at bucket grain: a retried task or a rerun
    of an uncommitted bucket replaces its files, never adds to them
 4. the task returns one checkpoint row per bucket — row count, url
@@ -34,8 +34,9 @@ rule: "range-partitioned shuffles on url-hash"). Each run:
    Monitoring/aggregator.py:5-88)
 
 The driver's reads and writes under the out dir (checkpoint, meta file,
-footer counts) go through ``out_filesystem``, as the tasks' do, so a
-``file://`` URI and a plain path name the same files.
+footer counts) go through ``out_filesystem``, as the tasks' do, and so do
+the input fingerprints, so a ``file://`` URI and a plain path name the
+same files.
 
 Crash between (3) and (4) leaves data files without a checkpoint row; the
 next run reprocesses those buckets and the overwrite replaces their
@@ -100,20 +101,34 @@ def bucket_of(url: str, n_buckets: int) -> str:
 
 
 def pages_fingerprint(path: str) -> str:
-    """sha256 of the sorted (relative path, size) pairs of the data files
-    under ``path`` (a file is its own single entry). Names starting with
-    ``_`` or ``.`` (Spark's markers and checksums) are skipped, as Spark's
-    reader skips them. Lists files only: no data or footer is read."""
-    if os.path.isfile(path):
-        entries = [("", os.path.getsize(path))]
-    else:
-        entries = []
-        for d, dirs, names in os.walk(path):
-            dirs[:] = [n for n in dirs if n[0] not in "_."]
-            entries += [(os.path.relpath(os.path.join(d, n), path),
-                         os.path.getsize(os.path.join(d, n)))
-                        for n in names if n[0] not in "_."]
+    """sha256 of the sorted (relative path, size) pairs of the visible
+    files under ``path``, a path or a URI (a file is its own single entry,
+    with relative path ``""``; see ``visible_files``). Lists files only:
+    no data or footer is read."""
+    fs, root = out_filesystem(path)
+    entries = [(rel, f.size) for rel, f in visible_files(fs, root)]
     return hashlib.sha256(repr(sorted(entries)).encode()).hexdigest()
+
+
+def visible_files(fs: pafs.FileSystem,
+                  path: str) -> list[tuple[str, pafs.FileInfo]]:
+    """The files a reader sees at ``path`` on ``fs``, as (path relative to
+    ``path``, FileInfo) pairs: ``path`` itself as ``("", info)`` if it is
+    a file, else every file under it with no component of its relative
+    path starting with ``.`` or ``_``, the prefixes Spark and pyarrow skip
+    (Spark's markers and checksums, a crashed write's temp file or
+    ``_temporary/`` directory). A missing path has none."""
+    info = fs.get_file_info(path)
+    if info.type == pafs.FileType.File:
+        return [("", info)]
+    found = []
+    for f in fs.get_file_info(pafs.FileSelector(
+            path, allow_not_found=True, recursive=True)):
+        rel = f.path[len(path):].strip("/")
+        if f.type == pafs.FileType.File and not any(
+                n[0] in "._" for n in rel.split("/")):
+            found.append((rel, f))
+    return found
 
 
 def committed_buckets(spark: SparkSession, checkpoint_path: str,
@@ -288,20 +303,15 @@ def append_checkpoint(rows: list[Row], checkpoint_path: str) -> None:
 
 
 def _exists(fs: pafs.FileSystem, path: str) -> bool:
-    """Whether ``path`` holds a data file a reader sees: a ``.parquet``
-    file with no name under ``path`` starting with ``.`` or ``_``, the
-    prefixes Spark and pyarrow skip. A temp file or ``_temporary/``
-    directory left by a crashed write is not a table."""
-    return any(
-        f.type == pafs.FileType.File and f.path.endswith(".parquet")
-        and not any(n[0] in "._"
-                    for n in f.path[len(path):].strip("/").split("/"))
-        for f in fs.get_file_info(pafs.FileSelector(
-            path, allow_not_found=True, recursive=True)))
+    """Whether ``path`` holds a ``.parquet`` file a reader sees
+    (``visible_files``). A temp file or ``_temporary/`` directory
+    left by a crashed write is not a table."""
+    return any(f.path.endswith(".parquet")
+               for _, f in visible_files(fs, path))
 
 
-__all__ = ["bucket_of", "committed_buckets",
-           "committed_bucket_ids", "count_rows", "remaining_pages", "write_partitioned",
-           "out_filesystem", "BucketFiles", "append_checkpoint",
-           "CHECKPOINT_ROW_SCHEMA", "CHECKPOINT_ROW_COLUMNS",
-           "CHECKPOINT_SCHEMA"]
+__all__ = ["bucket_of", "pages_fingerprint", "visible_files",
+           "committed_buckets", "committed_bucket_ids", "count_rows",
+           "remaining_pages", "write_partitioned", "out_filesystem",
+           "BucketFiles", "append_checkpoint", "CHECKPOINT_ROW_SCHEMA",
+           "CHECKPOINT_ROW_COLUMNS", "CHECKPOINT_SCHEMA"]

@@ -25,13 +25,13 @@ no driver-side split, exactly one pass over the data.
 from __future__ import annotations
 
 import hashlib
-import os
 from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..extractor.ner import link_mentions
+from . import lineage
 
 MENTIONS_SCHEMA = (
     "doc_id long, chunk_id string, mention string, entity_type string, "
@@ -85,22 +85,24 @@ def _get_index_and_memo(bc):
 def gazetteer_digest(persons_path: str, places_path: str,
                      orgs_path: str) -> str:
     """sha256 over the three inputs' bytes, never their paths or mtimes.
+    Each input is a path or a URI (lineage.out_filesystem).
 
     A single file is hashed directly; a directory (Spark-written parquet)
-    hashes every file under it in sorted relative-path order, each
-    framed by its relative path and size."""
+    hashes every file a reader sees under it (lineage.visible_files) in
+    sorted relative-path order, each framed by its relative path and
+    size. An input with no visible file raises FileNotFoundError."""
     h = hashlib.sha256()
     for path in (persons_path, places_path, orgs_path):
-        if os.path.isdir(path):
-            files = sorted(os.path.join(d, f)
-                           for d, _, names in os.walk(path) for f in names)
-        else:
-            files = [path]
+        fs, root = lineage.out_filesystem(path)
+        files = sorted(lineage.visible_files(fs, root), key=lambda e: e[0])
+        if not files:
+            raise FileNotFoundError(f"no gazetteer file at {path}")
         h.update(f"input {len(files)}\0".encode())
-        for f in files:
-            h.update(f"{os.path.relpath(f, path)}\0"
-                     f"{os.path.getsize(f)}\0".encode())
-            with open(f, "rb") as fh:
+        for rel, f in files:
+            # a single file is framed as ".", which keeps the digests that
+            # existing out dirs recorded
+            h.update(f"{rel or '.'}\0{f.size}\0".encode())
+            with fs.open_input_stream(f.path) as fh:
                 for block in iter(lambda: fh.read(1 << 20), b""):
                     h.update(block)
     return h.hexdigest()

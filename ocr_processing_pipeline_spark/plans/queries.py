@@ -23,6 +23,8 @@ from typing import Callable, Optional
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.text import LANG_PATTERNS, langid
+
 
 @dataclass
 class Query:
@@ -180,13 +182,6 @@ def doc_quality(spark, sf_dir):
         ((n_tokens >= 5) & (punct <= 0.3)).alias("keep"))
 
 
-_LANG_PATS = {
-    "de": r"\b(der|die|das|und|ist|nicht|mit|von|ein|eine)\b",
-    "fr": r"\b(le|la|les|et|est|une|pas|avec|dans|pour)\b",
-    "it": r"\b(il|la|le|che|è|una|non|con|di|per)\b",
-    "en": r"\b(the|and|is|not|with|of|to|in|for|that)\b",
-}
-
 _LANGID_SQL = """
     WITH h AS (
       SELECT doc_id,
@@ -207,7 +202,7 @@ _LANGID_SQL = """
                THEN 'it'
            ELSE 'en' END AS lang_pred
     FROM h
-""".format(**_LANG_PATS)
+""".format(**LANG_PATTERNS)
 
 
 @register(
@@ -296,18 +291,9 @@ def doc_quality_gopher(spark, sf_dir):
 @register("doc_langid", _LANGID_SQL,
           doc="language-ID heuristic: argmax stopword hits (U2 analogue)")
 def doc_langid(spark, sf_dir):
-    d = _ts(spark, sf_dir, "documents")
-    t = F.lower(F.col("text"))
-    hits = {k: F.regexp_count(t, F.lit(p)) for k, p in _LANG_PATS.items()}
-    best = F.greatest(*hits.values())
-    pred = F.when(best == 0, F.lit("und"))
-    for lang in ("de", "fr", "it", "en"):
-        pred = pred.when(hits[lang] == best, F.lit(lang))
-    return d.select(
-        "doc_id",
-        *[hits[lang].cast("int").alias(f"hits_{lang}")
-          for lang in ("de", "fr", "it", "en")],
-        pred.alias("lang_pred"))
+    return langid(_ts(spark, sf_dir, "documents"), "text").select(
+        "doc_id", *[f"hits_{lang}" for lang in ("de", "fr", "it", "en")],
+        "lang_pred")
 
 
 @register(
@@ -320,9 +306,9 @@ def doc_langid(spark, sf_dir):
     """,
     doc="document fingerprinting (portable md5 of normalized text)")
 def doc_fingerprint(spark, sf_dir):
-    from ..operators.text import doc_fingerprint as fp
-    return fp(_t(spark, sf_dir, "documents"), "text") \
-        .select("doc_id", "fingerprint")
+    from ..operators.dedup import fingerprint
+    return _t(spark, sf_dir, "documents").select(
+        "doc_id", fingerprint(F.col("text")).alias("fingerprint"))
 
 
 @register(
@@ -1617,7 +1603,7 @@ def embedding_label_centroids(spark, sf_dir):
     e = _t(spark, sf_dir, "embeddings")
     # dim passed explicitly (testdata embeddings are 64-wide, TESTDATA.md)
     # so no .first() dim probe remains in the query path
-    cents = label_centroids(e, "embedding", "label", round_to=5, dim=64)
+    cents = label_centroids(e, "embedding", "label", dim=64)
     return (cents.select("label",
                          F.posexplode("centroid").alias("pos0", "m"))
             .select("label", F.col("pos0").cast("int").alias("pos"), "m"))

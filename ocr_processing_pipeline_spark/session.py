@@ -22,17 +22,14 @@ ARROW_MAX_RECORDS_PER_BATCH = 512
 
 def get_spark(app_name: str = "ocr_processing_pipeline_spark",
               cpus: int | None = None,
-              shuffle_partitions: int | None = None,
               extra_conf: dict | None = None) -> SparkSession:
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    if shuffle_partitions is None:
-        shuffle_partitions = max(cpus, 8)
     builder = (
         SparkSession.builder
         .master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -18,7 +18,7 @@ SMOKE_ROWS = 200
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("pytest", cpus=4, shuffle_partitions=8)
+    s = get_spark("pytest", cpus=4)
     yield s
     s.stop()
 

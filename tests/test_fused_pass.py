@@ -24,7 +24,7 @@ from ocr_processing_pipeline_spark.pipeline.chunk import chunk_docs
 from ocr_processing_pipeline_spark.pipeline.extract import extract_docs
 from ocr_processing_pipeline_spark.pipeline.job import run_pipeline
 from ocr_processing_pipeline_spark.pipeline.ner import (
-    extract_mentions, link_entities, load_gazetteers)
+    link_entities, load_gazetteers)
 
 N_BUCKETS = 8
 
@@ -35,14 +35,14 @@ def _rows(df):
 
 def test_tables_match_standalone_chain(spark, corpus_dir, tmp_path):
     """After a crash run and its resume, docs (less the extract_us
-    timing), chunks, edges and mentions equal the standalone chain
-    extract_docs → chunk_docs → link_entities / extract_mentions (joined
-    with url) over the same pages: same columns, same rows."""
+    timing), chunks and edges equal the standalone chain extract_docs →
+    chunk_docs → link_entities over the same pages: same columns, same
+    rows."""
     out = str(tmp_path / "out")
     pages_path = f"{corpus_dir}/pages.parquet"
     for kw in ({"fail_after_buckets": 3}, {}):
         got = run_pipeline(spark, pages_path, corpus_dir, out,
-                           n_buckets=N_BUCKETS, with_mentions=True, **kw)
+                           n_buckets=N_BUCKETS, **kw)
         assert "skipped" not in got, kw
 
     gaz = load_gazetteers(spark, *[f"{corpus_dir}/{n}.parquet"
@@ -53,8 +53,6 @@ def test_tables_match_standalone_chain(spark, corpus_dir, tmp_path):
         "docs": docs.drop("extract_us"),
         "chunks": chunks,
         "edges": link_entities(chunks, gaz),
-        "mentions": extract_mentions(chunks, gaz).join(
-            chunks.select("chunk_id", "url"), "chunk_id"),
     }
     for table, expected in want.items():
         written = spark.read.parquet(os.path.join(out, table)).drop(
@@ -83,8 +81,10 @@ def test_run_collects_one_pass(spark, corpus_dir, tmp_path, monkeypatch):
     That frame's plan holds exactly one MapInPandas and the bucket
     repartition as its only Exchange; its only scan is of the pages, so
     no table the run writes is read back; nothing is cached, so a cache
-    manager that was empty before the run is empty after it. Every table
-    the tasks wrote holds one data file per bucket."""
+    manager that was empty before the run is empty after it. The out dir
+    holds exactly the docs, chunks, edges and checkpoint tables and the
+    meta file, and every table the tasks wrote holds one data file per
+    bucket."""
     out = str(tmp_path / "out")
     collected = []
     frame = type(spark.range(1))    # the session's DataFrame class
@@ -98,7 +98,7 @@ def test_run_collects_one_pass(spark, corpus_dir, tmp_path, monkeypatch):
     cache = spark._jsparkSession.sharedState().cacheManager()
     monkeypatch.setattr(frame, "collect", capture)
     run_pipeline(spark, f"{corpus_dir}/pages.parquet", corpus_dir, out,
-                 n_buckets=N_BUCKETS, with_mentions=True)
+                 n_buckets=N_BUCKETS)
     monkeypatch.undo()
 
     assert len(collected) == 1
@@ -109,7 +109,9 @@ def test_run_collects_one_pass(spark, corpus_dir, tmp_path, monkeypatch):
     assert p.count("FileScan") == 1 and "pages.parquet" in p, p
     assert out not in p, p
     assert cache.isEmpty()
-    for table in ("docs", "chunks", "edges", "mentions"):
+    assert sorted(os.listdir(out)) == [
+        "checkpoint", "checkpoint_meta.json", "chunks", "docs", "edges"]
+    for table in ("docs", "chunks", "edges"):
         buckets = sorted(os.listdir(os.path.join(out, table)))
         assert buckets == [f"bucket={b}" for b in range(N_BUCKETS)], table
         for b in buckets:

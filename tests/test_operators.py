@@ -4,7 +4,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from ocr_processing_pipeline_spark.operators.dedup import (
-    exact_dedup, exact_dup_groups, jaccard_pairs, lsh_candidate_pairs,
+    exact_dedup, jaccard_pairs, lsh_candidate_pairs,
     minhash_lsh_dedup, minhash_signatures, shingles, simhash,
     simhash_candidates)
 from ocr_processing_pipeline_spark.operators.similarity import (
@@ -31,9 +31,6 @@ def test_exact_dedup(docs_with_dups):
     ids = {r.doc_id for r in kept.collect()}
     assert 1 in ids and 2 not in ids          # first-seen wins
     assert {3, 4, 5} <= ids
-    groups = exact_dup_groups(docs_with_dups, "text", "doc_id").collect()
-    assert len(groups) == 1
-    assert groups[0].canonical_id == 1 and groups[0].group_size == 2
 
 
 def test_minhash_lsh_finds_planted_near_dup(docs_with_dups):
@@ -170,34 +167,6 @@ def test_multimodal_sniff_and_features(spark):
     assert len(feats["png"]) == FEATURE_BINS
     assert abs(sum(feats["jpg"]) - 1.0) < 1e-9      # L1-normalized
     assert feats["empty"] == [0.0] * FEATURE_BINS
-
-
-def test_multimodal_stubs_raise():
-    from ocr_processing_pipeline_spark.operators.multimodal import (
-        decode_image, resize_image, sample_frames)
-    for fn, args in ((decode_image, (b"x",)), (resize_image, (b"x", 1, 1)),
-                     (sample_frames, (b"x", 2))):
-        with pytest.raises(NotImplementedError):
-            fn(*args)
-
-
-def test_asof_tolerance(spark):
-    from ocr_processing_pipeline_spark.operators.asof import (
-        asof_join_backward)
-    left = spark.createDataFrame(
-        [(1, "2024-01-01 00:10:00"), (1, "2024-01-01 05:00:00")],
-        "k int, ts_s string").select(
-            "k", F.col("ts_s").cast("timestamp").alias("ts"))
-    right = spark.createDataFrame(
-        [(1, "2024-01-01 00:05:00", 7.0)],
-        "k int, ts_s string, v double").select(
-            "k", F.col("ts_s").cast("timestamp").alias("ts"), "v")
-    out = asof_join_backward(left, right, on="k", left_ts="ts",
-                             right_ts="ts", value_cols=["v"],
-                             tolerance_seconds=3600)
-    vals = {r.ts.isoformat(): r.v for r in out.collect()}
-    assert vals["2024-01-01T00:10:00"] == 7.0
-    assert vals["2024-01-01T05:00:00"] is None     # outside tolerance
 
 
 def test_near_dup_hot_label_cap(spark):

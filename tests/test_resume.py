@@ -17,7 +17,7 @@ import pytest
 from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
-from ocr_processing_pipeline_spark.pipeline import lineage
+from ocr_processing_pipeline_spark.pipeline import lineage, ner
 from ocr_processing_pipeline_spark.pipeline.job import run_pipeline
 
 N_BUCKETS = 8
@@ -51,16 +51,6 @@ def test_partial_then_resume(spark, corpus_dir, tmp_path):
     assert c3["docs"] == 0 and "skipped" in c3
     # and the stored tables are untouched
     assert spark.read.parquet(os.path.join(out, "docs")).count() == n_pages
-
-
-def test_with_mentions_table(spark, corpus_dir, tmp_path):
-    out = str(tmp_path / "out_m")
-    run_pipeline(spark, f"{corpus_dir}/pages.parquet", corpus_dir, out,
-                 n_buckets=4, with_mentions=True)
-    m = spark.read.parquet(os.path.join(out, "mentions"))
-    assert m.count() > 0
-    assert {"chunk_id", "mention", "entity_type", "span_start",
-            "span_end", "url", "bucket"} <= set(m.columns)
 
 
 def test_idempotent_rerun_no_resume(spark, corpus_dir, tmp_path):
@@ -154,8 +144,70 @@ def test_resume_adopts_meta_without_fingerprints(spark, corpus_dir,
     c = run_pipeline(spark, pages_path, corpus_dir, out, n_buckets=N_BUCKETS)
     assert c["checkpoint"] == N_BUCKETS
     with open(meta_path) as fh:
-        assert set(json.load(fh)) == {"n_buckets", "pages_fingerprint",
+        assert set(json.load(fh)) == {"n_buckets", "max_page_bytes",
+                                      "pages_fingerprint",
                                       "gazetteers_fingerprint"}
+
+
+def test_resume_rejects_changed_gate(spark, corpus_dir, tmp_path):
+    """The giant-page gate is part of the out dir's contract: after a
+    crash run at one max_page_bytes, a resume at another must fail
+    loudly instead of gating the output's buckets two ways. resume=False
+    starts over and records the new value (null when the gate is off)."""
+    pages_path = f"{corpus_dir}/pages.parquet"
+    out = str(tmp_path / "out")
+    run_pipeline(spark, pages_path, corpus_dir, out, n_buckets=N_BUCKETS,
+                 fail_after_buckets=3, max_page_bytes=1024)
+    with pytest.raises(ValueError, match="max_page_bytes=1024"):
+        run_pipeline(spark, pages_path, corpus_dir, out,
+                     n_buckets=N_BUCKETS)
+
+    c = run_pipeline(spark, pages_path, corpus_dir, out,
+                     n_buckets=N_BUCKETS, resume=False, max_page_bytes=None)
+    assert c["checkpoint"] == N_BUCKETS
+    with open(os.path.join(out, "checkpoint_meta.json")) as fh:
+        assert json.load(fh)["max_page_bytes"] is None
+
+
+def _uri(path):
+    return "file://" + os.path.abspath(path)
+
+
+def _gazetteers(gdir):
+    return [os.path.join(gdir, f"{n}.parquet")
+            for n in ("persons", "places", "orgs")]
+
+
+def test_fingerprints_read_uris(corpus_dir, tmp_path):
+    """A file:// URI names the same input as its plain path: the pages
+    fingerprint (of a file and of a directory with a marker file) and
+    the gazetteer digest read it through the out dir's filesystem and
+    give the plain path's value. A gazetteer URI with no file raises."""
+    pages = f"{corpus_dir}/pages.parquet"
+    pages_dir = tmp_path / "pages_dir"
+    pages_dir.mkdir()
+    shutil.copy(pages, pages_dir / "part-0.parquet")
+    (pages_dir / "_SUCCESS").touch()
+    for path in (pages, str(pages_dir)):
+        assert (lineage.pages_fingerprint(_uri(path))
+                == lineage.pages_fingerprint(path)), path
+    gaz = _gazetteers(corpus_dir)
+    assert (ner.gazetteer_digest(*map(_uri, gaz))
+            == ner.gazetteer_digest(*gaz))
+    with pytest.raises(FileNotFoundError):
+        ner.gazetteer_digest(_uri(tmp_path / "missing.parquet"), *gaz[1:])
+
+
+def test_fingerprints_tell_uri_inputs_apart(corpus_dir, tmp_path):
+    """Two different inputs named by URI get different fingerprints,
+    so the resume guard holds for a URI input too."""
+    pages, gdir = _inputs_copy(corpus_dir, str(tmp_path / "in"))
+    _drop_last_row(pages)
+    _drop_last_row(os.path.join(gdir, "persons.parquet"))
+    assert (lineage.pages_fingerprint(_uri(pages))
+            != lineage.pages_fingerprint(_uri(f"{corpus_dir}/pages.parquet")))
+    assert (ner.gazetteer_digest(*map(_uri, _gazetteers(gdir)))
+            != ner.gazetteer_digest(*map(_uri, _gazetteers(corpus_dir))))
 
 
 def test_noop_fast_path_with_empty_buckets(spark, corpus_dir, tmp_path):

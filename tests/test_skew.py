@@ -3,12 +3,13 @@
 from pyspark.sql import functions as F
 
 from ocr_processing_pipeline_spark.operators.skew import (
-    host_of, salted_broadcast_left, salted_groupby, with_salt)
+    salted_broadcast_left, salted_groupby, with_salt)
+from ocr_processing_pipeline_spark.operators.text import url_host
 
 
 def test_salted_groupby_matches_plain(spark, corpus_dir):
     pages = spark.read.parquet(f"{corpus_dir}/pages.parquet") \
-        .withColumn("host", host_of(F.col("url"))) \
+        .withColumn("host", url_host(F.col("url"))) \
         .withColumn("n_bytes", F.length("html").cast("long"))
 
     plain = {(r["host"]): (r["n"], r["total"]) for r in
@@ -25,14 +26,15 @@ def test_salted_groupby_matches_plain(spark, corpus_dir):
 
 def test_skew_is_real_and_salt_spreads_it(spark, corpus_dir):
     pages = spark.read.parquet(f"{corpus_dir}/pages.parquet") \
-        .withColumn("host", host_of(F.col("url")))
+        .withColumn("host", url_host(F.col("url")))
     counts = {r["host"]: r["count"] for r in
               pages.groupBy("host").count().collect()}
     top = max(counts.values())
     assert top / sum(counts.values()) > 0.4      # the planted skew
 
-    # salted key cardinality spreads the hot host over n_salts groups
-    salted = with_salt(pages, "url", n_salts=16)
+    # salted key cardinality spreads the hot host over DEFAULT_SALTS (16)
+    # groups
+    salted = with_salt(pages, "url")
     spread = (salted.groupBy("host", "_salt").count()
               .groupBy("host").count()
               .filter(F.col("count") >= 12).count())
@@ -41,7 +43,7 @@ def test_skew_is_real_and_salt_spreads_it(spark, corpus_dir):
 
 def test_salted_broadcast_left_matches_plain(spark, corpus_dir):
     pages = spark.read.parquet(f"{corpus_dir}/pages.parquet") \
-        .withColumn("host", host_of(F.col("url")))
+        .withColumn("host", url_host(F.col("url")))
     dim = spark.createDataFrame(
         [("archive.example.ch", "ch"), ("news.example.de", "de"),
          ("journal.example.fr", "fr"), ("gazzetta.example.it", "it"),

@@ -188,11 +188,11 @@ efficiency **{f_eff:.2f}**
 - outputs identical at both levels (row counts above; content equality is
   the pytest partition-layout-invariance suite)
 - the full pipeline's efficiency trails the narrow stages because it adds
-  a fixed serial fraction — six sequential Spark jobs (write barriers for
-  single-extraction semantics + the checkpoint commit point) and
-  driver-side partition-overwrite file moves — which amortizes away with
-  input size (Amdahl): at 10^9+ docs per run the compute stages above
-  dominate wall-clock.
+  a fixed serial fraction — two Spark jobs per run (the bucket shuffle's
+  map stage, then the one pass whose tasks write their buckets' files),
+  and the driver's checkpoint append after the pass — which amortizes
+  away with input size (Amdahl): at 10^9+ docs per run the compute
+  stages above dominate wall-clock.
 
 ## Hardware-ceiling calibration (why N={args.low}, 4N={args.high})
 
