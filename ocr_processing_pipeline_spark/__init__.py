@@ -10,7 +10,7 @@ text analysis, multimodal plumbing) a 100 TB corpus job needs.
 
 Layout:
     extractor/   pure-Python deterministic semantics (the oracle) — no Spark
-    pipeline/    Spark stages wiring the oracle into mapInPandas/applyInPandas
+    pipeline/    Spark stages wiring the oracle into mapInArrow
     operators/   generic large-scale operators (dedup, ANN, as-of, top-k, ...)
     sources/     synthetic corpus generator
     functions/   scalar helpers (fuzzy ratios, text functions)

@@ -19,7 +19,7 @@ rules over broadcast gazetteers, preserving the reference's *semantics*:
 - J5 replacement: role keyword present in chunk text must overlap the
   gazetteer row's roles array (deterministic rule join)
 
-Pure Python; Spark wires this into mapInPandas with the gazetteer as a
+Pure Python; Spark wires this into mapInArrow with the gazetteer as a
 broadcast variable (pipeline/ner.py).
 """
 

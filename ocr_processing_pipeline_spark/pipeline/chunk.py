@@ -2,7 +2,7 @@
 
 Wraps the deterministic chunker ``extractor.chunking.chunk_document``
 (W1-W6 semantics — budget 512, window 8192/overlap 256, single-sentence
-merge, span offsets) in mapInPandas. One input row (a whole document)
+merge, span offsets) in mapInArrow. One input row (a whole document)
 expands to N chunk rows inside the same task — order-dependent folds stay
 within a doc, docs are never split across tasks (SURVEY §7 hard part 2).
 
@@ -12,19 +12,16 @@ Replaces: lora_chunking_container/app/lora_chunking_api.py:270-403
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..extractor.chunking import chunk_document
+from .batches import map_rows
 
 CHUNKS_SCHEMA = (
     "doc_id long, url string, warc_ts timestamp, chunk_id string, "
     "chunk_order int, content string, lang string, span_start long, "
     "span_end long, n_tokens int, n_sentences int"
 )
-CHUNKS_COLUMNS = [f.split()[0] for f in CHUNKS_SCHEMA.split(", ")]
 
 
 def chunk_rows(doc_id: int, text: str | None) -> list[dict]:
@@ -39,25 +36,15 @@ def chunk_rows(doc_id: int, text: str | None) -> list[dict]:
     return rows
 
 
-def _chunk_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for doc_id, url, warc_ts, text, lang in zip(
-                pdf["doc_id"], pdf["url"], pdf["warc_ts"], pdf["text"],
-                pdf["lang"]):
-            for c in chunk_rows(doc_id, text):
-                rows.append({"doc_id": doc_id, "url": url,
-                             "warc_ts": warc_ts, "lang": lang, **c})
-        yield pd.DataFrame(rows, columns=CHUNKS_COLUMNS)
+def _doc_chunks(doc_id, url, warc_ts, text, lang) -> list[dict]:
+    return [{"doc_id": doc_id, "url": url, "warc_ts": warc_ts, "lang": lang,
+             **c} for c in chunk_rows(doc_id, text)]
 
 
 def chunk_docs(docs: DataFrame) -> DataFrame:
     """docs → chunks; empty-text docs produce no chunks (F12 guard)."""
-    return (
-        docs
-        .select("doc_id", "url", "warc_ts", "text", "lang")
-        .mapInPandas(_chunk_batches, schema=CHUNKS_SCHEMA)
-    )
+    return map_rows(docs.select("doc_id", "url", "warc_ts", "text", "lang"),
+                    CHUNKS_SCHEMA, lambda: _doc_chunks)
 
 
-__all__ = ["chunk_docs", "chunk_rows", "CHUNKS_SCHEMA", "CHUNKS_COLUMNS"]
+__all__ = ["chunk_docs", "chunk_rows", "CHUNKS_SCHEMA"]

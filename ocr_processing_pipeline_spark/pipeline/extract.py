@@ -1,12 +1,13 @@
-"""Extraction stage: pages → docs (mapInPandas over Arrow batches).
+"""Extraction stage: pages → docs (mapInArrow over Arrow batches).
 
 The single vectorized UDF stage of the north rule: batched HTML boilerplate
-stripping + PDF/layout parsing. The UDF body is a thin loop over the Arrow
-batch that calls the deterministic oracle ``extractor.core.extract_page`` —
-identical semantics to the single-threaded pytest oracle by construction.
+stripping + PDF/layout parsing. The UDF body is the shared Arrow row
+mapper (batches.map_rows) calling the deterministic oracle
+``extractor.core.extract_page`` — identical semantics to the
+single-threaded pytest oracle by construction.
 
 Plan shape (checked by tests/test_plans.py): one shuffle-free stage —
-parquet scan (column-pruned) → ArrowEvalPython/MapInPandas → project.
+parquet scan (column-pruned) → MapInArrow → project.
 ``doc_id = xxhash64(url)`` is computed JVM-side (codegen), not in Python.
 
 Replaces: the reference's per-document HTTP fetch + sequential /process
@@ -17,14 +18,13 @@ lora_chunking_container/app/lora_chunking_api.py:243-269).
 from __future__ import annotations
 
 from time import perf_counter_ns
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..extractor.core import FailureCode, extract_page
 from ..extractor.textproc import detect_lang_tokens, tokenize
+from .batches import map_rows
 
 # Giant-page quarantine (SCALE.md item 2): one outlier page bigger than
 # this never enters an Arrow batch — the bytes are nulled out JVM-side
@@ -48,14 +48,13 @@ DOCS_UDF_SCHEMA = (
 PAGE_COLUMNS = ("url", "warc_ts", "html", "text", "lang")
 
 # the docs table's columns, in order (extract_docs and the fused pass in
-# job.run_pipeline both project to this)
+# job.run_pipeline both project to this); extract_row computes all but
+# the first four
 DOC_COLUMNS = (
     "doc_id", "url", "warc_ts", "lang", "detected_lang", "text",
     "token_length", "failure_code", "content_kind",
     "n_blocks_total", "n_blocks_kept", "extract_us", "spans",
 )
-# the ones extract_row computes (the first four pass through)
-ROW_COLUMNS = DOC_COLUMNS[4:]
 
 
 def extract_row(html, pre_text, oversized: bool) -> dict:
@@ -88,15 +87,10 @@ def extract_row(html, pre_text, oversized: bool) -> dict:
     }
 
 
-def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = [extract_row(html, pre_text, too_big)
-                for html, pre_text, too_big in zip(
-                    pdf["html"], pdf["text"], pdf["_oversized"])]
-        out = pd.DataFrame(rows, columns=list(ROW_COLUMNS))
-        for c in ("url", "warc_ts", "lang"):
-            out[c] = pdf[c]
-        yield out
+def _doc_rows(url, warc_ts, html, pre_text, lang, oversized) -> list[dict]:
+    """One gated page (gated_columns' order) → its DOCS_UDF_SCHEMA row."""
+    return [{"url": url, "warc_ts": warc_ts, "lang": lang,
+             **extract_row(html, pre_text, oversized)}]
 
 
 def gated_columns(max_page_bytes: int | None = DEFAULT_MAX_PAGE_BYTES
@@ -145,12 +139,11 @@ def extract_docs(pages: DataFrame,
     the projection into the parquet scan. ``max_page_bytes`` is the
     giant-page gate (see gated_columns; None disables it).
     """
-    return (pages.selectExpr(*gated_columns(max_page_bytes))
-            .mapInPandas(_extract_batches, schema=DOCS_UDF_SCHEMA)
+    return (map_rows(pages.selectExpr(*gated_columns(max_page_bytes)),
+                     DOCS_UDF_SCHEMA, lambda: _doc_rows)
             .withColumn("doc_id", F.xxhash64("url"))
             .select(*DOC_COLUMNS))
 
 
 __all__ = ["extract_docs", "extract_row", "gated_columns", "PAGE_COLUMNS",
-           "DOC_COLUMNS",
-           "ROW_COLUMNS", "DOCS_UDF_SCHEMA"]
+           "DOC_COLUMNS", "DOCS_UDF_SCHEMA"]

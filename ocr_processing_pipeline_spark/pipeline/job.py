@@ -14,8 +14,9 @@ partitioning + AQE):
   page it extracts the doc, chunks it, and scans + links each chunk. The
   UDF boundary — the per-job fixed cost at small sizes — is crossed once
   per run, not once per stage. Its input is one projection of the pages,
-  made before the shuffle: the giant-page gate, ``bucket``,
-  ``doc_id = xxhash64(url)`` and the warc_ts epoch micros, all JVM-side.
+  made before the shuffle: the giant-page gate, ``bucket`` and
+  ``doc_id = xxhash64(url)``, all JVM-side; the pass is a ``mapInArrow``
+  over it, with no pandas conversion on either side.
   The only shuffle places whole buckets on the pass's tasks, so each
   bucket is in one task (the placement rule: ``_pass_tasks`` and the
   comment above the pass input in ``run_pipeline``).
@@ -58,19 +59,17 @@ import sys
 import time
 import zipimport
 
-import pandas as pd
 import pyarrow as pa
-import pyarrow.dataset as ds
 import pyarrow.fs as pafs
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
-from pyspark.sql.types import StructType
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from . import chunk as chunk_mod
 from . import extract as extract_mod
 from . import lineage
 from . import ner as ner_mod
+from .batches import arrow_schema
 
 DEFAULT_N_BUCKETS = 64
 
@@ -210,11 +209,11 @@ def run_pipeline(spark: SparkSession, pages_path: str, gazetteers_dir: str,
         with fs.open_output_stream(meta_path) as fh:
             fh.write(json.dumps(new_meta).encode())
 
-    # the pass input in ONE projection (gated payloads, bucket, doc_id,
-    # warc_ts micros), then ONE shuffle that places whole buckets on the
-    # pass's k tasks (_pass_tasks). A row's partition id is its bucket's
-    # rank in run_buckets, which the exchange takes modulo k, so each
-    # bucket lands in exactly one task, which writes its files, and every
+    # the pass input in ONE projection (gated payloads, bucket, doc_id),
+    # then ONE shuffle that places whole buckets on the pass's k tasks
+    # (_pass_tasks). A row's partition id is its bucket's rank in
+    # run_buckets, which the exchange takes modulo k, so each bucket
+    # lands in exactly one task, which writes its files, and every
     # task holds ⌊len/k⌋ or ⌈len/k⌉ buckets; a task is empty only if its
     # buckets hold no pages. The rank, not the id: ids 1 and 5 share a
     # task under id mod 2. Written as SQL text: about one Py4J round trip
@@ -224,8 +223,7 @@ def run_pipeline(spark: SparkSession, pages_path: str, gazetteers_dir: str,
     todo = (pages.selectExpr(
                 *extract_mod.gated_columns(max_page_bytes),
                 f"{lineage.bucket_of('url', n_buckets)} AS bucket",
-                "xxhash64(url) AS doc_id",
-                "unix_micros(warc_ts) AS _warc_us")
+                "xxhash64(url) AS doc_id")
             .where(f"bucket IN ({in_run})")
             .repartitionById(k, F.expr(
                 f"CAST(array_position(array({in_run}), bucket) - 1 AS INT)")))
@@ -236,8 +234,8 @@ def run_pipeline(spark: SparkSession, pages_path: str, gazetteers_dir: str,
     # docstring); its checkpoint rows are the run's only data action
     new_files = functools.partial(lineage.BucketFiles, fs, root,
                                   _table_schemas())
-    ckpt = _process(todo, gaz_bc, new_files).collect()
-    written = {r.bucket for r in ckpt}
+    ckpt = [r.asDict() for r in _process(todo, gaz_bc, new_files).collect()]
+    written = {r["bucket"] for r in ckpt}
     if len(written) != len(ckpt):
         raise RuntimeError("a bucket was written by more than one task")
     # a run bucket no task saw holds no pages: its files are replaced by
@@ -252,10 +250,10 @@ def run_pipeline(spark: SparkSession, pages_path: str, gazetteers_dir: str,
     # their files replaced next run. Every run bucket gets one row: one
     # that produced no rows has ZERO pages and gets a zero-row sentinel,
     # so the no-op path above closes over it.
-    lineage.append_checkpoint(sorted(ckpt, key=lambda r: r.bucket),
+    lineage.append_checkpoint(sorted(ckpt, key=lambda r: r["bucket"]),
                               checkpoint_path)
 
-    if not any(r.row_count for r in ckpt):
+    if not any(r["row_count"] for r in ckpt):
         return dict(_NOTHING_TO_DO)
     return {t: lineage.count_rows(os.path.join(out_dir, t))
             for t in ("docs", "chunks", "edges", "checkpoint")}
@@ -266,6 +264,7 @@ def _read_pages(spark: SparkSession, pages_path: str) -> DataFrame:
     (pyarrow, no Spark job). A path with no data file, or one whose
     schema lacks an input column, raises ValueError before anything is
     written."""
+    import pyarrow.dataset as ds    # imports pandas: not at module scope
     schema = from_arrow_schema(ds.dataset(pages_path, format="parquet")
                                .schema)
     missing = [c for c in extract_mod.PAGE_COLUMNS if c not in schema.names]
@@ -275,41 +274,27 @@ def _read_pages(spark: SparkSession, pages_path: str) -> DataFrame:
     return spark.read.schema(schema).parquet(pages_path)
 
 
-@functools.cache
 def _table_schemas() -> dict[str, pa.Schema]:
-    """The arrow schema of each table a run writes: the DDL strings'
-    types in each table's column order (timestamps as UTC micros). Each
-    DDL string is parsed once (a JVM call), and the result is kept for
-    the process."""
-    tables = {
-        "docs": (extract_mod.DOCS_UDF_SCHEMA + ", doc_id long",
-                 extract_mod.DOC_COLUMNS),
-        "chunks": (chunk_mod.CHUNKS_SCHEMA, chunk_mod.CHUNKS_COLUMNS),
-        "edges": (ner_mod.EDGES_SCHEMA, ner_mod.EDGES_COLUMNS),
-    }
-    parsed = {t: StructType.fromDDL(ddl) for t, (ddl, _) in tables.items()}
-    return {t: to_arrow_schema(StructType([parsed[t][c] for c in cols]))
-            for t, (_, cols) in tables.items()}
+    """The arrow schema of each table a run writes (batches.arrow_schema
+    of its DDL string; the docs columns in DOC_COLUMNS order)."""
+    docs = arrow_schema(extract_mod.DOCS_UDF_SCHEMA + ", doc_id long")
+    return {"docs": pa.schema([docs.field(c)
+                               for c in extract_mod.DOC_COLUMNS]),
+            "chunks": arrow_schema(chunk_mod.CHUNKS_SCHEMA),
+            "edges": arrow_schema(ner_mod.EDGES_SCHEMA)}
 
 
-def _tables(pdf: pd.DataFrame, docs: list[dict],
-            nested: dict[str, list[list[dict]]],
+def _tables(batch: pa.RecordBatch, nested: dict[str, list[list[dict]]],
             schemas: dict[str, pa.Schema]) -> dict[str, pa.Table]:
-    """One batch's rows of every table plus their ``bucket``: ``docs``
-    holds each page's extracted columns and ``nested`` each page's chunk
-    and edge rows; the doc-level columns of all of them come
-    from the page (warc_ts from its epoch micros)."""
+    """One batch's rows of every table plus their ``bucket``: ``nested``
+    holds each page's rows of each table (its one docs row of extracted
+    columns, its chunk and edge rows); the doc-level columns of all of
+    them are the page's own Arrow columns, cast to the files' types."""
     bucket = pa.field("bucket", pa.int32())
-    schema = schemas["docs"].append(bucket)
-    computed = pa.Table.from_pylist(docs, schema=pa.schema(
-        [schema.field(c) for c in extract_mod.ROW_COLUMNS]))
-    page = {c: pa.array(pdf[c], schema.field(c).type, from_pandas=True)
-            for c in ("doc_id", "url", "lang", "bucket")}
-    page["warc_ts"] = pa.array(pdf["_warc_us"], from_pandas=True).cast(
-        pa.int64()).cast(schema.field("warc_ts").type)
-    out = {"docs": pa.table([page[f.name] if f.name in page
-                             else computed.column(f.name) for f in schema],
-                            schema=schema)}
+    docs = schemas["docs"].append(bucket)
+    page = {c: batch.column(c).cast(docs.field(c).type)
+            for c in ("doc_id", "url", "warc_ts", "lang", "bucket")}
+    out = {}
     for t, per_doc in nested.items():
         schema = schemas[t].append(bucket)
         parent = pa.array([i for i, rows in enumerate(per_doc)
@@ -386,20 +371,21 @@ def _pass_tasks(n_run: int, cores: int) -> int:
 
 
 def _process(todo: DataFrame, gaz_bc, new_files) -> DataFrame:
-    """Gated pages (+ bucket, doc_id, _warc_us) → one checkpoint row per
-    bucket. Each task runs extract → chunk → scan + link for each of its
-    pages in one Arrow-batched pass and streams every table's rows into
-    its buckets' files (``new_files()``: a lineage.BucketFiles)."""
+    """Gated pages (+ bucket, doc_id) → one checkpoint row per bucket.
+    Each task runs extract → chunk → scan + link for each of its pages in
+    one mapInArrow pass and streams every table's rows into its buckets'
+    files (``new_files()``: a lineage.BucketFiles)."""
+    row_schema = arrow_schema(lineage.CHECKPOINT_ROW_SCHEMA)
 
     def process_batches(batches):
         _keep_zip_directories()
         idx, memo = ner_mod._get_index_and_memo(gaz_bc)
         files = new_files()
-        for pdf in batches:
-            docs, nested = [], {"chunks": [], "edges": []}
-            for doc_id, html, text, too_big, warc_ts in zip(
-                    pdf["doc_id"], pdf["html"], pdf["text"],
-                    pdf["_oversized"], pdf["warc_ts"]):
+        for batch in batches:
+            nested = {"docs": [], "chunks": [], "edges": []}
+            for doc_id, html, text, too_big, warc_ts in zip(*(
+                    batch.column(c).to_pylist() for c in (
+                        "doc_id", "html", "text", "_oversized", "warc_ts"))):
                 row = extract_mod.extract_row(html, text, too_big)
                 chunks = chunk_mod.chunk_rows(doc_id, row["text"])
                 date = ner_mod.doc_date(warc_ts)
@@ -408,16 +394,14 @@ def _process(todo: DataFrame, gaz_bc, new_files) -> DataFrame:
                     edges += ner_mod.edge_rows(
                         idx.scan(c["content"]), idx, memo, c["chunk_id"],
                         c["content"], date)
-                docs.append(row)
+                nested["docs"].append([row])
                 nested["chunks"].append(chunks)
                 nested["edges"].append(edges)
-            files.add(_tables(pdf, docs, nested, files.schemas))
-        yield pd.DataFrame(files.commit(),
-                           columns=lineage.CHECKPOINT_ROW_COLUMNS,
-                           dtype=object)
+            files.add(_tables(batch, nested, files.schemas))
+        yield pa.RecordBatch.from_pylist(files.commit(), schema=row_schema)
 
-    return todo.mapInPandas(process_batches,
-                            schema=lineage.CHECKPOINT_ROW_SCHEMA)
+    return todo.mapInArrow(process_batches,
+                           schema=lineage.CHECKPOINT_ROW_SCHEMA)
 
 
 def main(argv=None):

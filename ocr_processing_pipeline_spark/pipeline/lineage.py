@@ -57,11 +57,12 @@ from collections import Counter
 
 import pyarrow as pa
 import pyarrow.compute as pc
-import pyarrow.dataset as ds
 import pyarrow.fs as pafs
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .batches import arrow_schema
 
 # a checkpoint row as BucketFiles.commit returns it: the table's columns
 # less committed_at, warc_ts_min/max as epoch micros (the table stores
@@ -74,16 +75,7 @@ CHECKPOINT_ROW_SCHEMA = (
 )
 CHECKPOINT_ROW_COLUMNS = [f.split()[0]
                           for f in CHECKPOINT_ROW_SCHEMA.split(", ")]
-# the checkpoint table's files: those columns with Spark's types, the
-# timestamps as UTC micros, plus committed_at
 _UTC_US = pa.timestamp("us", tz="UTC")
-CHECKPOINT_SCHEMA = pa.schema([
-    ("bucket", pa.int32()), ("table_name", pa.string()),
-    ("row_count", pa.int64()), ("n_urls", pa.int64()),
-    ("warc_ts_min", _UTC_US), ("warc_ts_max", _UTC_US),
-    ("failure_counts", pa.map_(pa.string(), pa.int64())),
-    ("mean_extract_us", pa.float64()), ("max_extract_us", pa.int64()),
-    ("committed_at", _UTC_US)])
 
 # a (table, bucket) file's buffered rows are written out as one row group
 # once they reach this size, so a task streams its buckets to disk
@@ -155,6 +147,7 @@ def committed_bucket_ids(checkpoint_path: str, table_name: str) -> set[int]:
 def count_rows(path: str) -> int:
     """Rows in a (bucket-partitioned) parquet table, summed from the file
     footers: no Spark job and no data pages read."""
+    import pyarrow.dataset as ds    # imports pandas: not at module scope
     fs, path = out_filesystem(path)
     return ds.dataset(path, filesystem=fs, format="parquet",
                       partitioning="hive").count_rows()
@@ -246,7 +239,7 @@ class BucketFiles:
                     writer.write_table(pa.concat_tables(buffered))
                     buffered.clear()
 
-    def commit(self) -> list[Row]:
+    def commit(self) -> list[dict]:
         for (table, bucket), (writer, temp, buffered) in self._files.items():
             if buffered:
                 writer.write_table(pa.concat_tables(buffered))
@@ -264,7 +257,7 @@ class BucketFiles:
         return f"{self._root}/{table}/bucket={bucket}"
 
 
-def _checkpoint_row(bucket: int, rows: pa.Table) -> Row:
+def _checkpoint_row(bucket: int, rows: pa.Table) -> dict:
     """A bucket's docs checkpoint row from its url, warc_ts, failure_code
     and extract_us columns; with no rows, the zero-row sentinel that commits
     an empty bucket. warc_ts_min/max are epoch micros: a timestamp would
@@ -273,7 +266,7 @@ def _checkpoint_row(bucket: int, rows: pa.Table) -> Row:
     n = rows.num_rows
     ts = rows["warc_ts"].cast(pa.int64())
     t_sum = pc.sum(rows["extract_us"]).as_py()
-    return Row(
+    return dict(
         bucket=bucket, table_name="docs", row_count=n,
         n_urls=pc.count_distinct(rows["url"]).as_py(),
         warc_ts_min=pc.min(ts).as_py(), warc_ts_max=pc.max(ts).as_py(),
@@ -283,17 +276,22 @@ def _checkpoint_row(bucket: int, rows: pa.Table) -> Row:
         max_extract_us=pc.max(rows["extract_us"]).as_py())
 
 
-def append_checkpoint(rows: list[Row], checkpoint_path: str) -> None:
+def append_checkpoint(rows: list[dict], checkpoint_path: str) -> None:
     """Append checkpoint rows (BucketFiles.commit's) as one parquet file,
     stamped with one committed_at, written with pyarrow on the driver (no
-    Spark job). The file is written under a ``.``-prefixed temp name, which
-    no reader sees, then renamed to a unique ``part-<uuid>.parquet``: a
-    crash mid-append leaves nothing ``_exists`` or a reader counts."""
+    Spark job). The file holds CHECKPOINT_ROW_SCHEMA's columns with
+    warc_ts_min/max as UTC micros timestamps, plus committed_at. It is
+    written under a ``.``-prefixed temp name, which no reader sees, then
+    renamed to a unique ``part-<uuid>.parquet``: a crash mid-append
+    leaves nothing ``_exists`` or a reader counts."""
     fs, path = out_filesystem(checkpoint_path)
     now = datetime.datetime.now(datetime.timezone.utc)
+    ts = ("warc_ts_min", "warc_ts_max")
+    schema = pa.schema([f.with_type(_UTC_US) if f.name in ts else f
+                        for f in arrow_schema(CHECKPOINT_ROW_SCHEMA)]
+                       ).append(pa.field("committed_at", _UTC_US))
     table = pa.Table.from_pylist(
-        [{**r.asDict(), "committed_at": now} for r in rows],
-        schema=CHECKPOINT_SCHEMA)
+        [{**r, "committed_at": now} for r in rows], schema=schema)
     fs.create_dir(path)
     name = uuid.uuid4().hex
     temp = f"{path}/.tmp-{name}.parquet"
@@ -314,4 +312,4 @@ __all__ = ["bucket_of", "pages_fingerprint", "visible_files",
            "committed_buckets", "committed_bucket_ids", "count_rows",
            "remaining_pages", "write_partitioned", "out_filesystem",
            "BucketFiles", "append_checkpoint", "CHECKPOINT_ROW_SCHEMA",
-           "CHECKPOINT_ROW_COLUMNS", "CHECKPOINT_SCHEMA"]
+           "CHECKPOINT_ROW_COLUMNS"]

@@ -25,13 +25,12 @@ no driver-side split, exactly one pass over the data.
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..extractor.ner import link_mentions
 from . import lineage
+from .batches import map_rows
 
 MENTIONS_SCHEMA = (
     "doc_id long, chunk_id string, mention string, entity_type string, "
@@ -43,8 +42,6 @@ EDGES_SCHEMA = (
     "predicate string, object string, mention string, entity_type string, "
     "fuzzy_score int, span_start long, span_end long"
 )
-MENTIONS_COLUMNS = [f.split()[0] for f in MENTIONS_SCHEMA.split(", ")]
-EDGES_COLUMNS = [f.split()[0] for f in EDGES_SCHEMA.split(", ")]
 
 _INDEX_CACHE: dict = {}
 
@@ -134,19 +131,10 @@ def load_gazetteers(spark: SparkSession, persons_path: str,
 
 
 def doc_date(warc_ts):
-    """The crawl date the person-date filter checks (None if unknown)."""
-    if warc_ts is None or pd.isna(warc_ts):
-        return None
-    return warc_ts.date()
-
-
-def mention_rows(found: list[dict], chunk_id: str) -> list[dict]:
-    """One chunk's scanned mentions as chunk-level MENTIONS_SCHEMA rows
-    (the doc-level doc_id and lang come from the doc row)."""
-    return [{"chunk_id": chunk_id, "mention": m["mention"],
-             "entity_type": m["entity_type"],
-             "span_start": m["span_start"], "span_end": m["span_end"]}
-            for m in found]
+    """The crawl date the person-date filter checks: the date of
+    ``warc_ts``, an aware datetime in the session time zone (None if
+    unknown)."""
+    return None if warc_ts is None else warc_ts.date()
 
 
 def edge_rows(found: list[dict], idx, memo: dict, chunk_id: str,
@@ -166,40 +154,32 @@ def edge_rows(found: list[dict], idx, memo: dict, chunk_id: str,
 
 
 def extract_mentions(chunks: DataFrame, gaz_bc) -> DataFrame:
-    def scan_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """chunks → mentions: every gazetteer hit (its other keys, such as
+    n_tokens, are not MENTIONS_SCHEMA columns and are dropped)."""
+    def task_rows():
         idx, _ = _get_index_and_memo(gaz_bc)
-        for pdf in batches:
-            rows = []
-            for doc_id, chunk_id, content, lang in zip(
-                    pdf["doc_id"], pdf["chunk_id"], pdf["content"],
-                    pdf["lang"]):
-                for m in mention_rows(idx.scan(content), chunk_id):
-                    rows.append({"doc_id": doc_id, "lang": lang, **m})
-            yield pd.DataFrame(rows, columns=MENTIONS_COLUMNS)
+        return lambda doc_id, chunk_id, content, lang: [
+            {"doc_id": doc_id, "chunk_id": chunk_id, "lang": lang, **m}
+            for m in idx.scan(content)]
 
-    return (chunks.select("doc_id", "chunk_id", "content", "lang")
-            .mapInPandas(scan_batches, schema=MENTIONS_SCHEMA))
+    return map_rows(chunks.select("doc_id", "chunk_id", "content", "lang"),
+                    MENTIONS_SCHEMA, task_rows)
 
 
 def link_entities(chunks: DataFrame, gaz_bc) -> DataFrame:
     """chunks → edges, one Arrow pass (scan + link fused, no shuffle)."""
-    def link_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def task_rows():
         idx, memo = _get_index_and_memo(gaz_bc)
-        for pdf in batches:
-            rows = []
-            for doc_id, url, chunk_id, content, warc_ts in zip(
-                    pdf["doc_id"], pdf["url"], pdf["chunk_id"],
-                    pdf["content"], pdf["warc_ts"]):
-                for e in edge_rows(idx.scan(content), idx, memo, chunk_id,
-                                   content, doc_date(warc_ts)):
-                    rows.append({"doc_id": doc_id, "url": url, **e})
-            yield pd.DataFrame(rows, columns=EDGES_COLUMNS)
+        return lambda doc_id, url, chunk_id, content, warc_ts: [
+            {"doc_id": doc_id, "url": url, **e}
+            for e in edge_rows(idx.scan(content), idx, memo, chunk_id,
+                               content, doc_date(warc_ts))]
 
-    return (chunks.select("doc_id", "url", "chunk_id", "content", "warc_ts")
-            .mapInPandas(link_batches, schema=EDGES_SCHEMA))
+    return map_rows(
+        chunks.select("doc_id", "url", "chunk_id", "content", "warc_ts"),
+        EDGES_SCHEMA, task_rows)
 
 
 __all__ = ["load_gazetteers", "gazetteer_digest", "extract_mentions",
-           "link_entities", "doc_date", "mention_rows", "edge_rows",
-           "MENTIONS_SCHEMA", "EDGES_SCHEMA", "MENTIONS_COLUMNS",
-           "EDGES_COLUMNS"]
+           "link_entities", "doc_date", "edge_rows", "MENTIONS_SCHEMA",
+           "EDGES_SCHEMA"]

@@ -1,6 +1,6 @@
 """North-rule invariant: Spark extraction is byte-identical to the oracle.
 
-Runs the Spark mapInPandas stage over the synthetic corpus and the pure
+Runs the Spark mapInArrow stage over the synthetic corpus and the pure
 single-threaded oracle over the same rows; asserts byte-identical extracted
 ``text`` per url (100% match rate, BASELINE.md target), identical failure
 codes, spans, and token counts — and that the result does not depend on

@@ -1,7 +1,7 @@
 """run_pipeline's single Python pass: what it writes and how it plans it.
 
 run_pipeline extracts, chunks, scans and links every page in one
-mapInPandas pass whose tasks write every table's files themselves and
+mapInArrow pass whose tasks write every table's files themselves and
 return the checkpoint rows. These tests pin that its tables equal the
 standalone stage functions' output row for row, that the one frame it
 collects plans one Python pass over the pages, caches nothing and reads
@@ -9,16 +9,21 @@ back no table it writes, and how the pass input places buckets on tasks.
 """
 
 import contextlib
+import datetime
 import io
 import os
 import shutil
+import subprocess
+import sys
 from collections import Counter
 
+import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from ocr_processing_pipeline_spark.extractor.ner import DATE_WINDOW_DAYS
 from ocr_processing_pipeline_spark.pipeline import job
 from ocr_processing_pipeline_spark.pipeline.chunk import chunk_docs
 from ocr_processing_pipeline_spark.pipeline.extract import extract_docs
@@ -33,13 +38,43 @@ def _rows(df):
     return sorted(df.collect(), key=repr)
 
 
+# noon UTC on the last day a person who died in 2005 passes the
+# person-date filter: that is the crawl date in UTC, while in UTC+14 it
+# is already the next day
+BOUNDARY = datetime.datetime(2024, 12, 27, 12, tzinfo=datetime.timezone.utc)
+
+
 def test_tables_match_standalone_chain(spark, corpus_dir, tmp_path):
-    """After a crash run and its resume, docs (less the extract_us
-    timing), chunks and edges equal the standalone chain extract_docs →
+    """Under each session time zone, UTC and Pacific/Kiritimati (UTC+14):
+    after a crash run and its resume, docs (less the extract_us timing),
+    chunks and edges equal the standalone chain extract_docs →
     chunk_docs → link_entities over the same pages: same columns, same
-    rows."""
-    out = str(tmp_path / "out")
-    pages_path = f"{corpus_dir}/pages.parquet"
+    rows. Every other page is crawled at BOUNDARY, so the edges differ
+    between the zones, and both sides give the person-date filter the
+    same session-local crawl date."""
+    assert datetime.date(2005, 1, 1) + datetime.timedelta(
+        DATE_WINDOW_DAYS) == BOUNDARY.date()
+    table = pq.read_table(f"{corpus_dir}/pages.parquet")
+    stamps = table.column("warc_ts").to_pylist()
+    stamps[::2] = [BOUNDARY] * len(stamps[::2])
+    i = table.schema.get_field_index("warc_ts")
+    pages_path = str(tmp_path / "pages.parquet")
+    pq.write_table(table.set_column(i, table.schema.field(i), pa.array(
+        stamps, table.schema.field(i).type)), pages_path)
+    edges = {}
+    zone = spark.conf.get("spark.sql.session.timeZone")
+    try:
+        for session_zone in ("UTC", "Pacific/Kiritimati"):
+            spark.conf.set("spark.sql.session.timeZone", session_zone)
+            edges[session_zone] = _assert_tables_match_chain(
+                spark, corpus_dir, pages_path, str(tmp_path / session_zone))
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", zone)
+    assert edges["UTC"] != edges["Pacific/Kiritimati"]
+
+
+def _assert_tables_match_chain(spark, corpus_dir, pages_path, out):
+    """The table parity of one session time zone; returns the edges."""
     for kw in ({"fail_after_buckets": 3}, {}):
         got = run_pipeline(spark, pages_path, corpus_dir, out,
                            n_buckets=N_BUCKETS, **kw)
@@ -61,6 +96,19 @@ def test_tables_match_standalone_chain(spark, corpus_dir, tmp_path):
         w, e = _rows(written), _rows(expected)
         assert e, table
         assert w == e, table
+    return w
+
+
+def test_pipeline_imports_no_pandas():
+    """Importing the job module, and with it every pipeline module, in a
+    fresh interpreter leaves pandas unloaded: a Python worker that runs
+    the pass never imports it."""
+    code = ("import sys, ocr_processing_pipeline_spark.pipeline.job; "
+            "print(sorted(m for m in sys.modules if m.startswith('pandas')))")
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    done = subprocess.run([sys.executable, "-c", code], cwd=root,
+                          capture_output=True, text=True, check=True)
+    assert done.stdout.strip() == "[]", done.stdout
 
 
 def _plan(df) -> str:
@@ -78,7 +126,7 @@ def _data_files(path):
 
 def test_run_collects_one_pass(spark, corpus_dir, tmp_path, monkeypatch):
     """A run's only data action is the collect of its checkpoint rows.
-    That frame's plan holds exactly one MapInPandas and the bucket
+    That frame's plan holds exactly one MapInArrow and the bucket
     repartition as its only Exchange; its only scan is of the pages, so
     no table the run writes is read back; nothing is cached, so a cache
     manager that was empty before the run is empty after it. The out dir
@@ -103,7 +151,8 @@ def test_run_collects_one_pass(spark, corpus_dir, tmp_path, monkeypatch):
 
     assert len(collected) == 1
     p = _plan(collected[0])
-    assert p.count("MapInPandas") == 1, p
+    assert p.count("MapInArrow") == 1, p
+    assert "_warc_us" not in p, p
     assert p.count("Exchange") == 1, p
     assert "InMemory" not in p.replace("InMemoryFileIndex", ""), p
     assert p.count("FileScan") == 1 and "pages.parquet" in p, p

@@ -2,7 +2,7 @@
 
 These lock in the scale properties SURVEY §4 promises: filters reach the
 parquet scan, projections prune columns, small dims broadcast, and the
-extraction pipeline is shuffle-free (mapInPandas chain over scan splits).
+extraction pipeline is shuffle-free (mapInArrow chain over scan splits).
 """
 
 import contextlib
@@ -56,7 +56,7 @@ def test_extraction_stage_is_shuffle_free(spark, corpus_dir):
     chunks = chunk_docs(docs)
     p = plan(chunks, mode="simple")
     assert "Exchange" not in p, "extract→chunk chain must not shuffle"
-    assert p.count("MapInPandas") == 2
+    assert p.count("MapInArrow") == 2
     assert "*(" in p                   # relational glue is codegen'd
 
 

@@ -25,13 +25,14 @@ SF_DIR = "/root/testdata/sf0.001"
 COMMENT = {
     "flagship_pipeline": (
         "The one frame run_pipeline collects: its checkpoint rows. One "
-        "Project below the Exchange gates the payloads and adds bucket, "
-        "doc_id and the warc_ts micros, so an oversized payload is nulled "
-        "before the shuffle. The Exchange passes each row's partition id "
+        "Project below the Exchange gates the payloads and adds bucket "
+        "and doc_id, so an oversized payload is nulled before the "
+        "shuffle. The Exchange passes each row's partition id "
         "through (shufflepartitionidpassthrough: its bucket's rank in the "
         "run, see job._pass_tasks), so every task holds whole buckets. "
-        "All Python work is ONE MapInPandas after it (extract → chunk → "
-        "scan + link per page); the same task writes its buckets' "
+        "All Python work is ONE MapInArrow after it (extract → chunk → "
+        "scan + link per page), which reads the page columns straight "
+        "from Arrow batches; the same task writes its buckets' "
         "docs/chunks/edges files "
         "with pyarrow, one per table and bucket, and returns one "
         "checkpoint row per bucket, which the driver appends with "
